@@ -190,7 +190,7 @@ PIPELINES = [
     "ingest_two_batch",
     # r10: the PRODUCTION admission shape — probes PERSISTED indexes.
     # run_full clears only _MANIFEST_CACHE; the index build memo
-    # (_INGEST_INDEX_CACHE) survives across runs, so this row times
+    # (session.session_memo) survives across runs, so this row times
     # the per-batch PROBE while the corpus-scale index derivation
     # (the scheduled nightly build) is excluded — the cost split the
     # r9 verdict asked BENCH to show (vs ingest_accept_batch, which

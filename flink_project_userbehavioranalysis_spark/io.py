@@ -19,6 +19,12 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_project_userbehavioranalysis_spark.session import (
+    session_forget,
+    session_key,
+    session_memo,
+)
+
 TABLES = [
     "region",
     "nation",
@@ -35,30 +41,25 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (application-id, abspath) → persisted normalized events DataFrame.
-# Keyed on sparkContext.applicationId, not id(spark): CPython can
-# recycle an id() after a stopped session is garbage-collected, which
-# would silently hand back frames bound to a dead session.
-# Populated only via cache_events(); load_events() consults it so a
-# bench/driver harness can share ONE in-memory scan across queries
-# without changing any operator signature. At 100 TB the analog is a
-# materialized normalized table (or a cached scan across a query batch),
-# not per-query re-parsing of props JSON.
-_EVENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cache_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persist the normalized events scan and reuse it in load_events."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _EVENTS_CACHE:
+    """Persist the normalized events scan and reuse it in load_events.
+
+    The persisted frame lives in the session memo, where load_events()
+    looks it up, so a bench/driver harness can share ONE in-memory scan
+    across queries without changing any operator signature. At 100 TB
+    the analog is a materialized normalized table (or a cached scan
+    across a query batch), not per-query re-parsing of props JSON."""
+
+    def build() -> DataFrame:
         df = load_events(spark, sf_dir).persist()
         df.count()  # materialize eagerly so first benched query isn't charged
-        _EVENTS_CACHE[key] = df
-    return _EVENTS_CACHE[key]
+        return df
+
+    return session_memo(session_key(spark, sf_dir, "events"), build)
 
 
 def uncache_events(spark: SparkSession, sf_dir: str) -> None:
-    df = _EVENTS_CACHE.pop((spark.sparkContext.applicationId, os.path.abspath(sf_dir)), None)
+    df = session_forget(session_key(spark, sf_dir, "events"))
     if df is not None:
         df.unpersist()
 
@@ -168,14 +169,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     string), item_id (INT, parsed from props.k — the reference's itemId
     analog, FIXTURES.md §B).
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key in _EVENTS_CACHE:
-        return _EVENTS_CACHE[key]
+    cached = session_memo(session_key(spark, sf_dir, "events"))
+    if cached is not None:
+        return cached
     return normalize_events(load_table(spark, sf_dir, "events"))
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register each table as a temp view (events normalized) for spark.sql use."""
-    for name in tables or TABLES:
-        df = load_events(spark, sf_dir) if name == "events" else load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)

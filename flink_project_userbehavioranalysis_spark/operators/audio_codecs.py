@@ -295,19 +295,6 @@ _IMA_DELTA_FLAT64 = _IMA_DELTA_LUT.reshape(-1).astype(np.int64)
 _IMA_NEXT_FLAT = _IMA_NEXT_LUT.reshape(-1)
 
 
-def _ima_decode_delta(step: np.ndarray, code: np.ndarray) -> np.ndarray:
-    """The spec's quantized-difference reconstruction:
-    delta = step/8 + (b2)·step + (b1)·step/2 + (b0)·step/4 (integer
-    shifts), negated when the sign bit (b3) is set."""
-    mag = (
-        (step >> 3)
-        + np.where(code & 4 != 0, step, 0)
-        + np.where(code & 2 != 0, step >> 1, 0)
-        + np.where(code & 1 != 0, step >> 2, 0)
-    )
-    return np.where(code & 8 != 0, -mag, mag)
-
-
 def adpcm_encode_blocks(signal: np.ndarray) -> bytes:
     """Encode one int16 stream into IMA ADPCM WAV blocks. The state
     recurrence runs per sample, but block boundaries fall at global
@@ -562,13 +549,6 @@ def encode_wav_adpcm(text_bytes: bytes | None) -> bytes:
     ns = _wav_n_samples(n)
     data = adpcm_encode_blocks(_adpcm_sample(n, np.arange(ns, dtype=np.int64)))
     return _wrap_adpcm_wav(ns, data)
-
-
-def decode_wav_adpcm(b: bytes) -> np.ndarray:
-    audio_format, channels, _rate, bits, ns, data = wav_meta_any(b)
-    if (audio_format, channels, bits) != (0x11, 1, 4):
-        raise NotImplementedError("only mono 4-bit IMA ADPCM here")
-    return adpcm_decode(data, ns)
 
 
 _ADPCM_BOUND = 8

@@ -55,6 +55,9 @@ is inherently a batch-grain decision (and is why the STREAMING twin
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +75,7 @@ from flink_project_userbehavioranalysis_spark.operators.similarity import (
     _release_local_ckpt,
     _shingles,
 )
+from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 # Deployment config for the composed admission pipeline. The Gopher
 # bounds are deliberately looser than gopher_quality_filter's
@@ -103,12 +107,9 @@ INGEST_DEFAULTS = {
     "span_max_pct": 25,
 }
 
-# Session-keyed manifest memo. BOUNDED (r9 advisory): a long session
-# sweeping thresholds would otherwise pin one batch-cardinality
-# localCheckpoint per parameter set forever. Kept as a small LRU —
-# insertion order IS access order (hits re-insert) — and the evicted
-# frame's checkpoint blocks are released, the same discipline as the
-# similarity caches.
+# Session-keyed manifest memo (see ``_manifest_memo``). BOUNDED (r9
+# advisory): a long session sweeping thresholds would otherwise pin one
+# batch-cardinality localCheckpoint per parameter set forever.
 _MANIFEST_CACHE: dict[tuple, DataFrame] = {}
 _MANIFEST_CACHE_MAX = 4
 
@@ -124,20 +125,36 @@ _STAGES = (
 )
 
 
-def _release_staged(frames) -> None:
-    """Release a cascade's staged relations once the manifest is
-    materialized: persisted caches unpersist; the batch-cardinality
-    lazy localCheckpoints (``stage_ckpt`` — their analyzed plan is a
-    bare ``LogicalRDD``) release their block-manager blocks via
-    ``_release_local_ckpt`` (the r8 checkpoint-release discipline)."""
-    for df in frames:
-        if (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        ):
-            _release_local_ckpt(df)
-        else:
-            df.unpersist()
+def _release_staged(staged: dict[DataFrame, Callable]) -> None:
+    """Release staged relations once the manifest is materialized.
+    ``staged`` maps each frame to the release recorded when it was
+    staged: ``DataFrame.unpersist`` for persisted caches,
+    ``_release_local_ckpt`` for localCheckpoints (their blocks belong
+    to the checkpointed RDD — the r8 checkpoint-release discipline)."""
+    for df, release in staged.items():
+        release(df)
+
+
+def _admit(frame: DataFrame, staged: dict[DataFrame, Callable]) -> DataFrame:
+    """The admit step: materialize the batch-cardinality manifest
+    eagerly, then release the (corpus-scale) staged relations it was
+    built from."""
+    out = frame.localCheckpoint(eager=True)
+    _release_staged(staged)
+    return out
+
+
+def _manifest_memo(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """Get-or-build over ``_MANIFEST_CACHE``, a small LRU: insertion
+    order IS access order (hits re-insert), and an evicted manifest's
+    checkpoint blocks are released."""
+    out = _MANIFEST_CACHE.pop(key, None)
+    if out is None:
+        out = build()
+    _MANIFEST_CACHE[key] = out
+    while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
+        _release_local_ckpt(_MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE))))
+    return out
 
 
 def _doc_fingerprint() -> F.Column:
@@ -164,36 +181,22 @@ def ingest_accept_batch(
     never computed — the manifest records what the pipeline actually
     evaluated, not a backfill).
     """
-    key = _param_key(
-        spark, sf_dir, {**INGEST_DEFAULTS, **overrides}, "manifest"
+    # the audit rollup and repeated drives reuse ONE cascade execution;
+    # the pinned blocks are batch-cardinality rows, not corpus-scale
+    key = _param_key(spark, sf_dir, {**INGEST_DEFAULTS, **overrides}, "manifest")
+    return _manifest_memo(
+        key, lambda: _admit(*_manifest_frame(spark, sf_dir, **overrides))
     )
-    cached = _MANIFEST_CACHE.pop(key, None)
-    if cached is not None:
-        _MANIFEST_CACHE[key] = cached  # re-insert: LRU access order
-        return cached
-    frame, staged = _manifest_frame(spark, sf_dir, **overrides)
-    # the manifest is batch-cardinality: materialize it eagerly so the
-    # corpus-scale staged relations can be released immediately
-    out = frame.localCheckpoint(eager=True)
-    _release_staged(staged)
-    # session-keyed memo (the io.cache_events discipline): the audit
-    # rollup and repeated drives reuse ONE cascade execution; the
-    # pinned blocks are batch-cardinality rows, not corpus-scale —
-    # and the memo is LRU-bounded, releasing evicted checkpoints
-    _MANIFEST_CACHE[key] = out
-    while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
-        evicted = _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _release_local_ckpt(evicted)
-    return out
 
 
 def _manifest_frame(
     spark: SparkSession, sf_dir: str, *, stage_ckpt: bool = True, **overrides
-) -> tuple[DataFrame, list]:
-    """Builds the (lazy) manifest frame; returns it plus the persisted
-    staged relations so the caller controls release (the registered
-    entry checkpoints-then-unpersists; tests inspect the live plan —
-    with ``stage_ckpt=False`` for the fully-composed, uncut tree)."""
+) -> tuple[DataFrame, dict[DataFrame, Callable]]:
+    """Builds the (lazy) manifest frame with its probe indexes derived
+    in-query from the corpus half; returns it plus the staged
+    relations so the caller controls release (the registered entry
+    admits it; tests inspect the live plan — with ``stage_ckpt=False``
+    for the fully-composed, uncut tree)."""
     p = {**INGEST_DEFAULTS, **overrides}
     split_id = p["split_id"]
     # fan the split-starved scan out before the cascade's explode-heavy
@@ -209,8 +212,9 @@ def _manifest_frame(
     corpus = docs.filter(
         (F.col("doc_id") < split_id) & F.col("text").isNotNull()
     )
-    frame, staged = _cascade_frame(batch, corpus, p, stage_ckpt=stage_ckpt)
-    return frame, staged + [docs]
+    idx, held = _corpus_index_frames(corpus, p)
+    frame, staged = _cascade_over_indexes(batch, idx, p, stage_ckpt=stage_ckpt)
+    return frame, {**staged, **held, docs: DataFrame.unpersist}
 
 
 # Names of the corpus-side probe indexes the cascade needs. In
@@ -230,13 +234,18 @@ _INGEST_INDEX_NAMES = (
 )
 
 
-def _corpus_index_frames(corpus: DataFrame, p: dict) -> dict[str, DataFrame]:
+def _corpus_index_frames(
+    corpus: DataFrame, p: dict
+) -> tuple[dict[str, DataFrame], dict[DataFrame, Callable]]:
     """Derive the seven probe indexes from an explicit corpus relation
     ((doc_id, lang, text), text non-null) — ONE definition shared by
     the in-query cascade and the persisted nightly build, so the two
-    admission forms are content-equal by construction."""
-    sh_c = _shingles(corpus, p["shingle_len"])
-    return {
+    admission forms are content-equal by construction. The shingle
+    pass is persisted, so the band build, the size table and the
+    Jaccard verify share it; returns the indexes plus the frames the
+    caller must release (``_release_staged``)."""
+    sh_c = _shingles(corpus, p["shingle_len"]).persist()
+    idx = {
         "vocab": corpus.select(
             "lang", F.explode(F.split("text", " ")).alias("token")
         ).distinct(),
@@ -249,34 +258,29 @@ def _corpus_index_frames(corpus: DataFrame, p: dict) -> dict[str, DataFrame]:
         .withColumnRenamed("doc_id", "corpus_doc"),
         "grams": _dup_gram_positions(corpus, p["span_w"]).select("g_md5").distinct(),
     }
+    return idx, {sh_c: DataFrame.unpersist}
 
 
-def _cascade_frame(
-    batch: DataFrame, corpus: DataFrame, p: dict, stage_ckpt: bool = True
-) -> tuple[DataFrame, list]:
-    """The cascade over EXPLICIT batch/corpus relations (both
-    (doc_id, lang, text); corpus pre-filtered to non-null text) — the
-    reusable core, so the two-batch lifecycle can feed run 2 a corpus
-    extended with run 1's accepted docs. Derives the probe indexes
-    in-query (sharing the corpus shingle pass between the band build
-    and the Jaccard verify via one persist) and delegates to
-    :func:`_cascade_over_indexes`."""
-    idx = _corpus_index_frames(corpus, p)
-    sh_c = idx["shingles"].persist()
-    idx["shingles"] = sh_c
-    idx["bands"] = _banded(sh_c, p["n_hashes"], p["n_bands"])
-    idx["sizes"] = (
-        sh_c.groupBy("doc_id")
-        .agg(F.count("*").alias("sb"))
-        .withColumnRenamed("doc_id", "corpus_doc")
+def _union_index_sets(parts: list[dict[str, DataFrame]]) -> dict[str, DataFrame]:
+    """Merge several index sets (the base plus committed overlays) into ONE
+    logical index set: plain unions for the join/semi/anti probe
+    relations (value duplicates across parts are harmless there — every
+    consumer is a semi/anti probe or keyed by fresh doc ids), and a
+    SUM-merge for the per-lang count table (the changelog-MERGE read
+    discipline)."""
+    idx = {
+        name: reduce(DataFrame.unionByName, [part[name] for part in parts])
+        for name in _INGEST_INDEX_NAMES
+    }
+    idx["lang_counts"] = (
+        idx["lang_counts"].groupBy("lang").agg(F.sum("n_old").alias("n_old"))
     )
-    frame, staged = _cascade_over_indexes(batch, idx, p, stage_ckpt=stage_ckpt)
-    return frame, staged + [sh_c]
+    return idx
 
 
 def _cascade_over_indexes(
     batch: DataFrame, idx: dict[str, DataFrame], p: dict, stage_ckpt: bool = True
-) -> tuple[DataFrame, list]:
+) -> tuple[DataFrame, dict[DataFrame, Callable]]:
     """The admission cascade probing EXPLICIT index relations (see
     ``_INGEST_INDEX_NAMES``) — the production shape: every corpus
     touch is an equi-join against an index, so the job's cost is
@@ -294,10 +298,17 @@ def _cascade_over_indexes(
     persists materialized — same rows, same single-action execution,
     quadratic analysis cost cut into segments. Tests that inspect the
     fully-composed lazy plan pass ``stage_ckpt=False`` to get the
-    uncut tree (same logical dataflow)."""
+    uncut tree (same logical dataflow). The returned staged map records
+    how each staged frame must be released."""
+    staged: dict[DataFrame, Callable] = {}
 
     def _stage(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if stage_ckpt else df.persist()
+        if stage_ckpt:
+            df = df.localCheckpoint(eager=False)
+            staged[df] = _release_local_ckpt
+        else:
+            staged[df.persist()] = DataFrame.unpersist
+        return df
 
     # ---- staged token relation: ONE explode + per-(doc, token) tf,
     # persisted so the per-doc stats rollup AND the drift gate's batch
@@ -309,6 +320,7 @@ def _cascade_over_indexes(
         .agg(F.count("*").alias("tf"))
         .persist()
     )
+    staged[tf] = DataFrame.unpersist
     stats = tf.groupBy("doc_id").agg(
         F.sum("tf").alias("n_tokens"),
         F.sum(F.col("tf") * F.length("token")).alias("sum_word_chars"),
@@ -498,24 +510,11 @@ def _cascade_over_indexes(
         verdict.alias("verdict"),
         (verdict == "accept").cast("int").alias("accept"),
     )
-    return out, [tf, pre, exact_ids, sh_b, near_ids]
-
-
-# (appId, sf_dir, params) -> scratch root holding the parquet indexes.
-# NOT cleared by bench's per-run _MANIFEST_CACHE.clear(): the nightly
-# build persists across admission runs — that separation is the point.
-_INGEST_INDEX_CACHE: dict[tuple, str] = {}
+    return out, staged
 
 
 def _param_key(spark: SparkSession, sf_dir: str, p: dict, tag: str = "") -> tuple:
-    import os as _os
-
-    return (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        tuple(sorted(p.items())),
-        tag,
-    )
+    return session_key(spark, sf_dir, tuple(sorted(p.items())), tag)
 
 
 def build_ingest_indexes(spark: SparkSession, sf_dir: str, **overrides) -> str:
@@ -526,26 +525,27 @@ def build_ingest_indexes(spark: SparkSession, sf_dir: str, **overrides) -> str:
     lifecycle models — append accepted docs' fingerprints / band rows /
     grams / vocab); the admission job then probes the PERSISTED tables
     so its cost is ∝ batch, not ∝ corpus. Memoized per
-    (app, sf_dir, params) — repeated admission runs reuse one build."""
+    (app, sf_dir, params) in the session memo — repeated admission runs
+    reuse one build (bench's per-run ``_MANIFEST_CACHE.clear()`` does
+    not touch it: the nightly build persists across admission runs)."""
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
     p = {**INGEST_DEFAULTS, **overrides}
-    key = _param_key(spark, sf_dir, p, "idx")
-    cached = _INGEST_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spread_light(
-        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    )
-    corpus = docs.filter(
-        (F.col("doc_id") < p["split_id"]) & F.col("text").isNotNull()
-    )
-    root = _scratch_dir(spark, "ingest-idx", sf_dir)
-    _materialize_indexes(corpus, p, root)
-    _INGEST_INDEX_CACHE[key] = root
-    return root
+
+    def build() -> str:
+        docs = spread_light(
+            load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+        )
+        corpus = docs.filter(
+            (F.col("doc_id") < p["split_id"]) & F.col("text").isNotNull()
+        )
+        root = _scratch_dir(spark, "ingest-idx", sf_dir)
+        _materialize_indexes(corpus, p, root)
+        return root
+
+    return session_memo(_param_key(spark, sf_dir, p, "idx"), build)
 
 
 def _materialize_indexes(docs: DataFrame, p: dict, root: str) -> None:
@@ -553,22 +553,14 @@ def _materialize_indexes(docs: DataFrame, p: dict, root: str) -> None:
     lang, text) relation to ``root`` (overwrite — idempotent). Shared
     by the nightly corpus build and the lifecycle's COMMIT step, where
     ``docs`` is just the accepted batch (cost ∝ batch)."""
-    idx = _corpus_index_frames(docs, p)
-    sh_c = idx["shingles"].persist()
-    idx["shingles"] = sh_c
-    idx["bands"] = _banded(sh_c, p["n_hashes"], p["n_bands"])
-    idx["sizes"] = (
-        sh_c.groupBy("doc_id")
-        .agg(F.count("*").alias("sb"))
-        .withColumnRenamed("doc_id", "corpus_doc")
-    )
+    idx, held = _corpus_index_frames(docs, p)
     # materialize the shared shingle pass once, THEN overlap the seven
     # independent write jobs from a small thread pool (guide §2.6): in
     # the lifecycle's COMMIT step these are seven tiny batch-sized
     # writes whose per-job scheduling floors otherwise serialize; the
     # eager count keeps the pooled writers from racing three concurrent
     # first-computations of the persisted shingle relation
-    sh_c.count()
+    idx["shingles"].count()
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(name: str) -> None:
@@ -576,27 +568,16 @@ def _materialize_indexes(docs: DataFrame, p: dict, root: str) -> None:
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(_write, _INGEST_INDEX_NAMES))
-    sh_c.unpersist()
+    _release_staged(held)
 
 
 def _read_ingest_indexes(spark: SparkSession, roots: list[str]) -> dict[str, DataFrame]:
     """Open the probe indexes across one or more roots (the nightly
-    base plus any committed overlays) as ONE logical index set: plain
-    unions for the join/semi/anti probe relations (value duplicates
-    across roots are harmless there — every consumer is a semi/anti
-    probe or keyed by fresh doc ids), and a SUM-merge for the per-lang
-    count table (the changelog-MERGE read discipline)."""
-    idx = {}
-    for name in _INGEST_INDEX_NAMES:
-        parts = [spark.read.parquet(f"{r}/{name}") for r in roots]
-        df = parts[0]
-        for extra in parts[1:]:
-            df = df.unionByName(extra)
-        idx[name] = df
-    idx["lang_counts"] = (
-        idx["lang_counts"].groupBy("lang").agg(F.sum("n_old").alias("n_old"))
+    base plus any committed overlays) as ONE logical index set
+    (``_union_index_sets``)."""
+    return _union_index_sets(
+        [{n: spark.read.parquet(f"{r}/{n}") for n in _INGEST_INDEX_NAMES} for r in roots]
     )
-    return idx
 
 
 def ingest_accept_batch_indexed(
@@ -613,31 +594,22 @@ def ingest_accept_batch_indexed(
     (bench times this entry with the build memoized — the split the r9
     verdict asked for, so BENCH reads probe cost, not simulation)."""
     p = {**INGEST_DEFAULTS, **overrides}
-    key = _param_key(spark, sf_dir, p, "manifest-idx")
-    cached = _MANIFEST_CACHE.pop(key, None)
-    if cached is not None:
-        _MANIFEST_CACHE[key] = cached
-        return cached
-    root = build_ingest_indexes(spark, sf_dir, **overrides)
-    idx = _read_ingest_indexes(spark, [root])
-    # the probe form never touches corpus docs — filter BEFORE the
-    # fan-out/persist so the batch predicate pushes into the parquet
-    # scan and the persisted rows are batch-only (guide §6; r13)
-    docs = spread_light(
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .filter(F.col("doc_id") >= p["split_id"])
-    ).persist()
-    batch = docs
-    frame, staged = _cascade_over_indexes(batch, idx, p)
-    staged = staged + [docs]
-    out = frame.localCheckpoint(eager=True)
-    _release_staged(staged)
-    _MANIFEST_CACHE[key] = out
-    while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
-        evicted = _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _release_local_ckpt(evicted)
-    return out
+
+    def build() -> DataFrame:
+        root = build_ingest_indexes(spark, sf_dir, **overrides)
+        idx = _read_ingest_indexes(spark, [root])
+        # the probe form never touches corpus docs — filter BEFORE the
+        # fan-out/persist so the batch predicate pushes into the parquet
+        # scan and the persisted rows are batch-only (guide §6; r13)
+        batch = spread_light(
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "text")
+            .filter(F.col("doc_id") >= p["split_id"])
+        ).persist()
+        frame, staged = _cascade_over_indexes(batch, idx, p)
+        return _admit(frame, {**staged, batch: DataFrame.unpersist})
+
+    return _manifest_memo(_param_key(spark, sf_dir, p, "manifest-idx"), build)
 
 
 def ingest_audit(spark: SparkSession, sf_dir: str, **overrides) -> DataFrame:
@@ -898,56 +870,29 @@ def ingest_two_batch(
     batch2 = docs.filter(F.col("doc_id") >= split2)
     # r13 (guide §2.1 fewer passes; r12 verdict #3): derive corpus0's
     # probe indexes ONCE, persisted across BOTH runs; run 2's index set
-    # is idx0 ∪ indexes(accepted batch-1 docs) — the same union-read
-    # discipline ``_read_ingest_indexes`` applies to base ∪ overlay
-    # parquet (disjoint doc-id parts; every consumer is a semi/anti
+    # is idx0 ∪ indexes(accepted batch-1 docs) — the same union read
+    # (``_union_index_sets``) ``_read_ingest_indexes`` applies to base ∪
+    # overlay parquet (disjoint doc-id parts; every consumer is a semi/anti
     # probe or keyed by corpus doc id; lang_counts SUM-merges), which
     # the shared two-cascade oracle already proves equal to a full
     # rebuild. The r12 form re-ran every corpus-scale staging pass
     # (shingle explode, 32-hash banding, gram md5s, vocab distinct) a
     # second time over corpus0 ∪ accepted1 for run 2's cascade.
-    idx0 = _corpus_index_frames(corpus0, p)
-    sh0 = idx0["shingles"].persist()
+    idx0, held0 = _corpus_index_frames(corpus0, p)
     for name in ("vocab", "fingerprints", "grams"):
-        idx0[name] = idx0[name].persist()
-    idx0["shingles"] = sh0
-    idx0["bands"] = _banded(sh0, p["n_hashes"], p["n_bands"])
-    idx0["sizes"] = (
-        sh0.groupBy("doc_id")
-        .agg(F.count("*").alias("sb"))
-        .withColumnRenamed("doc_id", "corpus_doc")
-    )
-    m1_frame, staged1 = _cascade_over_indexes(batch1, idx0, p)
-    m1 = m1_frame.localCheckpoint(eager=True)
-    _release_staged(staged1)
+        held0[idx0[name].persist()] = DataFrame.unpersist
+    m1 = _admit(*_cascade_over_indexes(batch1, idx0, p))
     # the commit: accepted batch-1 docs join the corpus (accept ⇒ not
     # malformed, so text is non-null by construction); their index
     # rows extend idx0 — cost ∝ accepted batch
     accepted1 = batch1.join(
         m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
     )
-    idx1 = _corpus_index_frames(accepted1, p)
-    sh1 = idx1["shingles"].persist()
-    idx1["shingles"] = sh1
-    idx1["bands"] = _banded(sh1, p["n_hashes"], p["n_bands"])
-    idx1["sizes"] = (
-        sh1.groupBy("doc_id")
-        .agg(F.count("*").alias("sb"))
-        .withColumnRenamed("doc_id", "corpus_doc")
+    idx1, held1 = _corpus_index_frames(accepted1, p)
+    out = _admit(*_cascade_over_indexes(batch2, _union_index_sets([idx0, idx1]), p))
+    _release_staged(
+        {**held0, **held1, docs: DataFrame.unpersist, m1: _release_local_ckpt}
     )
-    idx01 = {
-        name: idx0[name].unionByName(idx1[name]) for name in _INGEST_INDEX_NAMES
-    }
-    idx01["lang_counts"] = (
-        idx01["lang_counts"].groupBy("lang").agg(F.sum("n_old").alias("n_old"))
-    )
-    m2_frame, staged2 = _cascade_over_indexes(batch2, idx01, p)
-    out = m2_frame.localCheckpoint(eager=True)
-    _release_staged(staged2)
-    for df in (sh0, idx0["vocab"], idx0["fingerprints"], idx0["grams"], sh1):
-        df.unpersist()
-    docs.unpersist()
-    _release_local_ckpt(m1)
     return out
 
 
@@ -973,57 +918,42 @@ def ingest_two_batch_indexed(
     derived in-query on the corpus side at admission time."""
     p = {**INGEST_DEFAULTS, **overrides}
     split1 = p["split_id"] if split1 is None else split1
-    key = _param_key(
-        spark,
-        sf_dir,
-        {**p, "_split1": split1, "_split2": split2},
-        "manifest-idx2",
-    )
-    cached = _MANIFEST_CACHE.pop(key, None)
-    if cached is not None:
-        _MANIFEST_CACHE[key] = cached
-        return cached
-    base_root = build_ingest_indexes(
-        spark, sf_dir, **{**overrides, "split_id": split1}
-    )
-    # both batches sit at doc_id ≥ split1 and the corpus side comes
-    # from the persisted indexes — filter BEFORE the fan-out/persist so
-    # the scan and the persisted rows are batch-only (guide §6; r13)
-    docs = spread_light(
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .filter(F.col("doc_id") >= split1)
-    ).persist()
-    batch1 = docs.filter(F.col("doc_id") < split2)
-    batch2 = docs.filter(F.col("doc_id") >= split2)
-    m1_frame, staged1 = _cascade_over_indexes(
-        batch1, _read_ingest_indexes(spark, [base_root]), p
-    )
-    m1 = m1_frame.localCheckpoint(eager=True)
-    _release_staged(staged1)
-    # the commit: accepted batch-1 docs' index rows, written ∝ batch
-    # (overwrite mode — repeated invocations are idempotent)
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    accepted1 = batch1.join(
-        m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
+    def build() -> DataFrame:
+        base_root = build_ingest_indexes(
+            spark, sf_dir, **{**overrides, "split_id": split1}
+        )
+        # both batches sit at doc_id ≥ split1 and the corpus side comes
+        # from the persisted indexes — filter BEFORE the fan-out/persist
+        # so the scan and the persisted rows are batch-only (guide §6)
+        docs = spread_light(
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "text")
+            .filter(F.col("doc_id") >= split1)
+        ).persist()
+        batch1 = docs.filter(F.col("doc_id") < split2)
+        batch2 = docs.filter(F.col("doc_id") >= split2)
+        idx0 = _read_ingest_indexes(spark, [base_root])
+        m1 = _admit(*_cascade_over_indexes(batch1, idx0, p))
+        # the commit: accepted batch-1 docs' index rows, written ∝ batch
+        # (overwrite mode — repeated invocations are idempotent)
+        accepted1 = batch1.join(
+            m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
+        )
+        overlay = _scratch_dir(spark, "ingest-idx-ovl", sf_dir)
+        _materialize_indexes(accepted1, p, overlay)
+        idx01 = _read_ingest_indexes(spark, [base_root, overlay])
+        out = _admit(*_cascade_over_indexes(batch2, idx01, p))
+        _release_staged({docs: DataFrame.unpersist, m1: _release_local_ckpt})
+        return out
+
+    key = _param_key(
+        spark, sf_dir, {**p, "_split1": split1, "_split2": split2}, "manifest-idx2"
     )
-    overlay = _scratch_dir(spark, "ingest-idx-ovl", sf_dir)
-    _materialize_indexes(accepted1, p, overlay)
-    m2_frame, staged2 = _cascade_over_indexes(
-        batch2, _read_ingest_indexes(spark, [base_root, overlay]), p
-    )
-    out = m2_frame.localCheckpoint(eager=True)
-    _release_staged(staged2)
-    docs.unpersist()
-    _release_local_ckpt(m1)
-    _MANIFEST_CACHE[key] = out
-    while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
-        evicted = _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _release_local_ckpt(evicted)
-    return out
+    return _manifest_memo(key, build)
 
 
 def ingest_two_batch_oracle_sql(

@@ -51,7 +51,7 @@ from flink_project_userbehavioranalysis_spark.operators.network_flow import pv_r
 
 
 def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Session-keyed scratch path (same keying as io._EVENTS_CACHE):
+    """Session-keyed scratch path (same keying as session.session_key):
     repeat invocations in one session — the oracle gate, bench loops,
     repeated tests — REUSE and overwrite one directory per (query,
     sf_dir) instead of mkdtemp-leaking a parquet copy per call."""

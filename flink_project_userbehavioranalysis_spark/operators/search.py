@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 #: Ranked-retrieval query set (conjunctive AND; terms distinct per
 #: query). Query 3 includes the corpus's one rare term ('dup', df≈25
@@ -213,12 +214,6 @@ def _rank_query_frame(
     )
 
 
-#: Session-keyed scratch roots for the persisted postings index (the
-#: nightly-build memo; the ingest _INGEST_INDEX_CACHE discipline).
-#: Values: a root path (full build) or a (base, overlay) pair (split).
-_FTS_INDEX_CACHE: dict[tuple, object] = {}
-
-
 def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
     """The NIGHTLY index build: materialize the postings relation
     PARTITIONED BY TERM, the term dictionary (term, df), and the
@@ -227,21 +222,26 @@ def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
     bucketing: a query probe over literal terms becomes a
     PLANNING-TIME partition-pruned scan (asserted in
     tests/test_search.py) — at 100 TB vocabulary you'd bucketBy(term)
-    instead and get the same pruned probe. Memoized per (app, sf_dir);
-    production runs this as a scheduled job."""
-    import os as _os
-
+    instead and get the same pruned probe. Memoized per (app, sf_dir)
+    in the session memo (not cleared between probe runs); production
+    runs this as a scheduled job."""
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _docs(spark, sf_dir)
+    def build() -> str:
+        root = _scratch_dir(spark, "fts-idx", sf_dir)
+        _write_fts_index(_docs(spark, sf_dir), root)
+        return root
+
+    return session_memo(session_key(spark, sf_dir, "fts-idx"), build)
+
+
+def _write_fts_index(docs: DataFrame, root: str) -> None:
+    """Write the postings index of ``docs`` under ``root``: postings
+    partitioned by term, the term dictionary (term, df) and the 1-row
+    doc count (n_docs)."""
     post = _postings(docs)
-    root = _scratch_dir(spark, "fts-idx", sf_dir)
     post.write.mode("overwrite").partitionBy("term").parquet(f"{root}/postings")
     post.groupBy("term").agg(F.count("*").alias("df")).write.mode(
         "overwrite"
@@ -249,8 +249,6 @@ def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
     docs.agg(F.count("*").alias("n_docs")).write.mode("overwrite").parquet(
         f"{root}/n"
     )
-    _FTS_INDEX_CACHE[key] = root
-    return root
 
 
 #: The persisted postings layout (data cols + the `term` partition
@@ -312,36 +310,39 @@ def build_fts_index_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Probes read base ∪ overlay as one logical index. Memoized per
     (app, sf_dir); production runs the base build as a scheduled job
     and the overlay commit inside each admission run."""
-    import os as _os
-
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "split")
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _docs(spark, sf_dir)
-    roots = []
-    for tag, pred in (
-        ("base", F.col("doc_id") % _FTS_SPLIT_MOD != 0),
-        ("overlay", F.col("doc_id") % _FTS_SPLIT_MOD == 0),
-    ):
-        part = docs.filter(pred)
-        post = _postings(part)
-        root = _scratch_dir(spark, f"fts-{tag}", sf_dir)
-        post.write.mode("overwrite").partitionBy("term").parquet(f"{root}/postings")
-        post.groupBy("term").agg(F.count("*").alias("df")).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/dict")
-        part.agg(F.count("*").alias("n_docs")).write.mode("overwrite").parquet(
-            f"{root}/n"
-        )
-        roots.append(root)
-    out = (roots[0], roots[1])
-    _FTS_INDEX_CACHE[key] = out
-    return out
+    def build() -> tuple[str, str]:
+        docs = _docs(spark, sf_dir)
+        base = _scratch_dir(spark, "fts-base", sf_dir)
+        overlay = _scratch_dir(spark, "fts-overlay", sf_dir)
+        _write_fts_index(docs.filter(F.col("doc_id") % _FTS_SPLIT_MOD != 0), base)
+        _write_fts_index(docs.filter(F.col("doc_id") % _FTS_SPLIT_MOD == 0), overlay)
+        return base, overlay
+
+    return session_memo(session_key(spark, sf_dir, "fts-split"), build)
+
+
+def _merged_summaries(
+    spark: SparkSession, base: str, overlay: str
+) -> tuple[DataFrame, DataFrame]:
+    """The (term, df) dictionary and the doc count of base ∪ overlay,
+    merged by integer SUM (exact: both are mergeable summaries over
+    disjoint immutable doc sets)."""
+    dic = (
+        spark.read.schema("term STRING, df BIGINT")
+        .parquet(f"{base}/dict", f"{overlay}/dict")
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+    )
+    n = (
+        spark.read.schema("n_docs BIGINT")
+        .parquet(f"{base}/n", f"{overlay}/n")
+        .agg(F.sum("n_docs").alias("n_docs"))
+    )
+    return dic, n
 
 
 def fts_topk_maintained(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
@@ -363,17 +364,7 @@ def fts_topk_maintained(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
         .unionByName(_read_term_partitioned(spark, f"{overlay}/postings"))
         .filter(F.col("term").isin(terms))
     )
-    dic = (
-        spark.read.schema("term STRING, df BIGINT")
-        .parquet(f"{base}/dict", f"{overlay}/dict")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    n = (
-        spark.read.schema("n_docs BIGINT")
-        .parquet(f"{base}/n", f"{overlay}/n")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
+    dic, n = _merged_summaries(spark, base, overlay)
     return _rank_conjunctive(spark, post, dic, n, k)
 
 
@@ -393,41 +384,25 @@ def compact_fts_index(spark: SparkSession, sf_dir: str) -> str:
     sf_dir); the layout invariant (single tree, no overlay) and the
     postings-multiset identity vs base ∪ overlay are pinned in
     tests/test_search.py."""
-    import os as _os
-
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "compact")
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base, overlay = build_fts_index_split(spark, sf_dir)
-    root = _scratch_dir(spark, "fts-compacted", sf_dir)
-    merged = _read_term_partitioned(spark, f"{base}/postings").unionByName(
-        _read_term_partitioned(spark, f"{overlay}/postings")
-    )
-    merged.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
-        "term"
-    ).parquet(f"{root}/postings")
-    (
-        spark.read.schema("term STRING, df BIGINT")
-        .parquet(f"{base}/dict", f"{overlay}/dict")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .write.mode("overwrite")
-        .parquet(f"{root}/dict")
-    )
-    (
-        spark.read.schema("n_docs BIGINT")
-        .parquet(f"{base}/n", f"{overlay}/n")
-        .agg(F.sum("n_docs").alias("n_docs"))
-        .write.mode("overwrite")
-        .parquet(f"{root}/n")
-    )
-    _FTS_INDEX_CACHE[key] = root
-    return root
+    def build() -> str:
+        base, overlay = build_fts_index_split(spark, sf_dir)
+        root = _scratch_dir(spark, "fts-compacted", sf_dir)
+        merged = _read_term_partitioned(spark, f"{base}/postings").unionByName(
+            _read_term_partitioned(spark, f"{overlay}/postings")
+        )
+        merged.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
+            "term"
+        ).parquet(f"{root}/postings")
+        dic, n = _merged_summaries(spark, base, overlay)
+        dic.write.mode("overwrite").parquet(f"{root}/dict")
+        n.write.mode("overwrite").parquet(f"{root}/n")
+        return root
+
+    return session_memo(session_key(spark, sf_dir, "fts-compact"), build)
 
 
 def fts_topk_compacted(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, spread_light
+from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 # --------------------------------------------------------------- shared prep
 
@@ -67,9 +68,6 @@ def _shingles(df: DataFrame, n: int) -> DataFrame:
 # ----------------------------------------------------------- exact kNN (brute)
 
 
-_CORPUS_CACHE: dict[tuple, object] = {}
-
-
 def _corpus_broadcast(spark: SparkSession, sf_dir: str):
     """(ids, matrix, norms) of the whole embeddings table as a Spark
     broadcast — the vector twin of a broadcast join's build side. Used
@@ -79,26 +77,22 @@ def _corpus_broadcast(spark: SparkSession, sf_dir: str):
     (`ann_lsh_topk`, `ivf_topk`) never touch this — they score via
     distributed joins back to the embeddings table (see
     `_score_candidates`), asserted by a test that stubs this function
-    out. Cached per (application, dir): repeated queries reuse one
-    driver collect + one broadcast; keyed on the Spark application id
-    (stable identity — `id(spark)` can be recycled by CPython after a
-    session is garbage-collected)."""
+    out. Memoized per (application, dir) in the session memo: repeated
+    queries reuse one driver collect + one broadcast."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CORPUS_CACHE:
-        return _CORPUS_CACHE[key]
-    rows = (
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    if mat.ndim < 2:  # empty corpus: keep 2-D so axis-1 ops stay valid
-        mat = mat.reshape(0, 0)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
-    _CORPUS_CACHE[key] = bc
-    return bc
+    def build():
+        rows = (
+            load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
+        )
+        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+        mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        if mat.ndim < 2:  # empty corpus: keep 2-D so axis-1 ops stay valid
+            mat = mat.reshape(0, 0)
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        return spark.sparkContext.broadcast((ids, mat, norms))
+
+    return session_memo(session_key(spark, sf_dir, "corpus-broadcast"), build)
 
 
 def knn_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -653,12 +647,6 @@ def pq_topk(
 
 # --------------------------------------- ANN: persisted IVF/IVF-PQ index
 
-#: (appId, sf_dir, params) -> scratch root of the persisted ANN index.
-#: The nightly-build memo (the ingest _INGEST_INDEX_CACHE discipline):
-#: NOT cleared between probe runs — that separation is the point.
-_ANN_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def build_ann_index(
     spark: SparkSession,
     sf_dir: str,
@@ -684,32 +672,29 @@ def build_ann_index(
     test-pinned). At 100 TB this is the scheduled job: the corpus-scale
     encode happens once per build, and every query-time probe touches
     only the (narrow) inverted lists — never re-encodes the corpus.
-    Memoized per (app, sf_dir, params)."""
+    Memoized per (app, sf_dir, params) in the session memo, which is
+    NOT cleared between probe runs — that separation is the point."""
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        __import__("os").path.abspath(sf_dir),
-        n_cells,
-        m_sub,
-        n_codes,
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    sample = _sample_matrix(spark, sf_dir)
-    cents = _ivf_centroids(sample, n_cells)
-    books = _pq_codebooks(sample, m_sub, n_codes)
-    root = _scratch_dir(spark, "ann-idx", sf_dir)
-    _write_model_tables(spark, root, cents, books)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _encode_with_models(emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{root}/enc")
-    _ANN_INDEX_CACHE[key] = root
-    return root
+    def build() -> str:
+        sample = _sample_matrix(spark, sf_dir)
+        cents = _ivf_centroids(sample, n_cells)
+        books = _pq_codebooks(sample, m_sub, n_codes)
+        root = _scratch_dir(spark, "ann-idx", sf_dir)
+        _write_model_tables(spark, root, cents, books)
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        _write_enc(_encode_with_models(emb, cents, books), root)
+        return root
+
+    key = session_key(spark, sf_dir, "ann-idx", n_cells, m_sub, n_codes)
+    return session_memo(key, build)
+
+
+def _write_enc(enc: DataFrame, root: str) -> None:
+    """Write inverted lists as the cell-partitioned ``{root}/enc`` tree."""
+    enc.write.mode("overwrite").partitionBy("cell").parquet(f"{root}/enc")
 
 
 def _encode_with_models(emb: DataFrame, cents, books) -> DataFrame:
@@ -810,43 +795,29 @@ def build_ann_index_split(
     Probes read base ∪ overlay, both partition-pruned to the probed
     cells. Re-training (drift) is a separate decision gated by
     :func:`ann_overlay_drift`. Memoized per (app, sf_dir, params)."""
-    import os as _os
-
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        n_cells,
-        m_sub,
-        n_codes,
-        "split",
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD != 0)
-    batch_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
-    # frozen model: trained on the nightly corpus only — the batch must
-    # not influence the quantizer (that's what the drift gate is for)
-    sample = _sample_matrix_frame(base_emb)
-    cents = _ivf_centroids(sample, n_cells)
-    books = _pq_codebooks(sample, m_sub, n_codes)
-    base = _scratch_dir(spark, "ann-base", sf_dir)
-    overlay = _scratch_dir(spark, "ann-overlay", sf_dir)
-    _write_model_tables(spark, base, cents, books)
-    _encode_with_models(base_emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{base}/enc")
-    _encode_with_models(batch_emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{overlay}/enc")
-    out = (base, overlay)
-    _ANN_INDEX_CACHE[key] = out
-    return out
+    def build() -> tuple[str, str]:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        base_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD != 0)
+        batch_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
+        # frozen model: trained on the nightly corpus only — the batch
+        # must not influence the quantizer (that's what the drift gate
+        # is for)
+        sample = _sample_matrix_frame(base_emb)
+        cents = _ivf_centroids(sample, n_cells)
+        books = _pq_codebooks(sample, m_sub, n_codes)
+        base = _scratch_dir(spark, "ann-base", sf_dir)
+        overlay = _scratch_dir(spark, "ann-overlay", sf_dir)
+        _write_model_tables(spark, base, cents, books)
+        _write_enc(_encode_with_models(base_emb, cents, books), base)
+        _write_enc(_encode_with_models(batch_emb, cents, books), overlay)
+        return base, overlay
+
+    key = session_key(spark, sf_dir, "ann-split", n_cells, m_sub, n_codes)
+    return session_memo(key, build)
 
 
 #: Declared schema of the persisted inverted lists (`cell` is the
@@ -1013,32 +984,21 @@ def compact_ann_index(spark: SparkSession, sf_dir: str, n_cells: int = 32) -> st
     per-row encodings are deterministic given frozen models, the
     compacted tree's row set is bit-for-bit base ∪ overlay
     (test-pinned)."""
-    import os as _os
-
     from flink_project_userbehavioranalysis_spark.operators.maintenance import (
         _scratch_dir,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        n_cells,
-        "compact",
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
-    root = _scratch_dir(spark, "ann-compacted", sf_dir)
-    _read_enc(spark, f"{base}/enc", f"{overlay}/enc").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{root}/enc")
-    for tbl in ("centroids", "codebooks"):
-        spark.read.parquet(f"{base}/{tbl}").write.mode("overwrite").parquet(
-            f"{root}/{tbl}"
-        )
-    _ANN_INDEX_CACHE[key] = root
-    return root
+    def build() -> str:
+        base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
+        root = _scratch_dir(spark, "ann-compacted", sf_dir)
+        _write_enc(_read_enc(spark, f"{base}/enc", f"{overlay}/enc"), root)
+        for tbl in ("centroids", "codebooks"):
+            spark.read.parquet(f"{base}/{tbl}").write.mode("overwrite").parquet(
+                f"{root}/{tbl}"
+            )
+        return root
+
+    return session_memo(session_key(spark, sf_dir, "ann-compact", n_cells), build)
 
 
 def ivf_probe_topk_compacted(

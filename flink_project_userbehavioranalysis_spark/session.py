@@ -21,6 +21,8 @@ local[32] to a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -67,3 +69,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# The one session-keyed memo: persisted scans, broadcasts, index roots
+# and replay chunk dirs, each built at most once per (application,
+# sf_dir, …). Unbounded and unlocked: every entry is a scratch path,
+# a persisted frame or a broadcast that its session owns until it ends.
+_MEMO: dict[tuple, Any] = {}
+
+
+def session_key(spark: SparkSession, sf_dir: str, *parts) -> tuple:
+    """Memo key for a session artifact derived from ``sf_dir``. Keyed on
+    ``sparkContext.applicationId``, not ``id(spark)``: CPython can
+    recycle an id() after a stopped session is garbage-collected, which
+    would silently hand back artifacts bound to a dead session. The
+    path is absolute, so a relative and an absolute spelling of one
+    directory share an entry. ``parts`` name the artifact and its
+    parameters."""
+    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *parts)
+
+
+def session_memo(key: tuple, build: Callable[[], Any] | None = None) -> Any:
+    """Get-or-build: the memoized value for ``key``, calling ``build()``
+    and storing its result on a miss. Without ``build`` it is a plain
+    lookup (``None`` on a miss)."""
+    if key not in _MEMO and build is not None:
+        _MEMO[key] = build()
+    return _MEMO.get(key)
+
+
+def session_forget(key: tuple) -> Any:
+    """Drop ``key`` from the memo; returns the dropped value or ``None``."""
+    return _MEMO.pop(key, None)

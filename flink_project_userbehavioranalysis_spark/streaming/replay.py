@@ -34,14 +34,13 @@ from __future__ import annotations
 import contextlib
 import os
 import tempfile
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, normalize_events
-
-# (session id, sf_dir, n_chunks, sentinel) → prepared chunk dir
-_CHUNK_CACHE: dict[tuple, str] = {}
+from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 SENTINEL_TYPE = "__sentinel__"
 # Width of each micro-batch changelog write in run_update_merge: small
@@ -89,84 +88,100 @@ def _prepare_chunks(
     an in-order stream (watermarks handle residual disorder, as they
     would in production). ``scramble=True`` replays the second time
     range *last* — a whole chunk of genuinely late data, used to
-    exercise T6/T7 drop semantics deterministically."""
-    # applicationId, not id(spark): id() can be recycled after a stopped
-    # session is collected, resurrecting paths from a dead session's run
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), n_chunks, sentinel, scramble)
-    if key in _CHUNK_CACHE:
-        return _CHUNK_CACHE[key]
-    out_dir = tempfile.mkdtemp(prefix="ubx-replay-")
-    raw = load_table(spark, sf_dir, "events")
-    # Chunk boundaries are computed on a derived BIGINT-nanos key so the
-    # range arithmetic is identical whether the raw ts column is BIGINT
-    # nanos or native timestamp[us] (both testdata generations exist).
+    exercise T6/T7 drop semantics deterministically. Memoized per
+    (app, sf_dir, n_chunks, sentinel, scramble) in the session memo."""
     from pyspark.sql.types import LongType
 
-    ts_is_long = isinstance(raw.schema["ts"].dataType, LongType)
-    key_col = (
-        F.col("ts")
-        if ts_is_long
-        else F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
-    )
-    keyed = raw.withColumn("_ts_key", key_col)
-    bounds = keyed.select(
-        F.min("_ts_key").alias("lo"), F.max("_ts_key").alias("hi")
-    ).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-    step = max((hi - lo) // n_chunks + 1, 1)
-    for k in range(n_chunks):
-        chunk = keyed.filter(
-            (F.col("_ts_key") >= lo + k * step) & (F.col("_ts_key") < lo + (k + 1) * step)
-        ).drop("_ts_key")
-        chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{k:03d}")
-    if sentinel:
-        far_ns = hi + _SENTINEL_GAP_NS
-        if ts_is_long:
-            far = far_ns
-        else:
-            import datetime as _dt
-
-            far = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=far_ns // 1000)
-        srow = spark.createDataFrame(
-            [
-                {
-                    "event_id": -1,
-                    "ts": far,
-                    "user_id": -1,
-                    "event_type": SENTINEL_TYPE,
-                    "value": 0.0,
-                    "props": "{}",
-                }
-            ],
-            schema=raw.schema,
+    def build() -> str:
+        raw = load_table(spark, sf_dir, "events")
+        # Chunk boundaries are computed on a derived BIGINT-nanos key so
+        # the range arithmetic is identical whether the raw ts column is
+        # BIGINT nanos or native timestamp[us] (both testdata
+        # generations exist).
+        ts_is_long = isinstance(raw.schema["ts"].dataType, LongType)
+        key_col = (
+            F.col("ts")
+            if ts_is_long
+            else F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
         )
-        srow.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{n_chunks:03d}")
-    # flatten: move part files up so maxFilesPerTrigger=1 sees one file/chunk
-    final_dir = tempfile.mkdtemp(prefix="ubx-replay-flat-")
+        keyed = raw.withColumn("_ts_key", key_col)
+        bounds = keyed.select(
+            F.min("_ts_key").alias("lo"), F.max("_ts_key").alias("hi")
+        ).collect()[0]
+        lo, hi = bounds["lo"], bounds["hi"]
+        step = max((hi - lo) // n_chunks + 1, 1)
+        chunks = [
+            keyed.filter(
+                (F.col("_ts_key") >= lo + k * step)
+                & (F.col("_ts_key") < lo + (k + 1) * step)
+            ).drop("_ts_key")
+            for k in range(n_chunks)
+        ]
+        if sentinel:
+            far_ns = hi + _SENTINEL_GAP_NS
+            if ts_is_long:
+                far = far_ns
+            else:
+                import datetime as _dt
+
+                far = _dt.datetime(1970, 1, 1) + _dt.timedelta(
+                    microseconds=far_ns // 1000
+                )
+            row = {
+                "event_id": -1,
+                "ts": far,
+                "user_id": -1,
+                "event_type": SENTINEL_TYPE,
+                "value": 0.0,
+                "props": "{}",
+            }
+            chunks.append(spark.createDataFrame([row], schema=raw.schema))
+        return write_ordered_chunks(chunks, "ubx-replay-", _replay_order)
+
+    def _replay_order(n_files: int) -> list[int]:
+        # scramble moves chunk #1 to the end — but always before the
+        # sentinel, which must stay last
+        order = list(range(n_files))
+        if scramble and n_files > 3:
+            last = order.pop() if sentinel else None
+            order.append(order.pop(1))
+            if last is not None:
+                order.append(last)
+        return order
+
+    key = session_key(spark, sf_dir, "replay-chunks", n_chunks, sentinel, scramble)
+    return session_memo(key, build)
+
+
+def write_ordered_chunks(
+    chunks: list[DataFrame],
+    prefix: str,
+    order: Callable[[int], list[int]] | None = None,
+) -> str:
+    """Write ``chunks`` as single parquet files in one flat directory,
+    in replay order, and return that directory. The streaming parquet
+    source does NOT recurse into subdirectories and processes
+    oldest-mtime first, so each chunk's part file is moved up as
+    ``NNN.parquet`` (chunk order) and stamped with an explicit mtime
+    from its position in ``order(n_files)`` (default: chunk order) —
+    with ``maxFilesPerTrigger=1`` every micro-batch is one chunk, in a
+    deterministic order."""
+    out_dir = tempfile.mkdtemp(prefix=prefix)
+    for k, chunk in enumerate(chunks):
+        chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{k:03d}")
+    flat_dir = tempfile.mkdtemp(prefix=f"{prefix}flat-")
     flat = []
-    idx = 0
     for sub in sorted(os.listdir(out_dir)):
         subdir = os.path.join(out_dir, sub)
         for f in sorted(os.listdir(subdir)):
             if f.endswith(".parquet"):
-                dst = os.path.join(final_dir, f"{idx:03d}.parquet")
+                dst = os.path.join(flat_dir, f"{len(flat):03d}.parquet")
                 os.rename(os.path.join(subdir, f), dst)
                 flat.append(dst)
-                idx += 1
-    # deterministic replay order via explicit mtimes (the file source
-    # processes oldest-mtime first); scramble moves chunk #1 to the
-    # end — but always before the sentinel, which must stay last
-    order = list(range(len(flat)))
-    if scramble and len(flat) > 3:
-        last = order.pop() if sentinel else None
-        order.append(order.pop(1))
-        if last is not None:
-            order.append(last)
     base = 1_700_000_000
-    for pos, i in enumerate(order):
+    for pos, i in enumerate(order(len(flat)) if order else range(len(flat))):
         os.utime(flat[i], (base + pos * 10, base + pos * 10))
-    _CHUNK_CACHE[key] = final_dir
-    return final_dir
+    return flat_dir
 
 
 def events_stream(

@@ -15,9 +15,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 from flink_project_userbehavioranalysis_spark.streaming.replay import (
     events_stream,
     run_update_merge,
+    write_ordered_chunks,
 )
 
 
@@ -612,7 +615,17 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     return run_append_memory(pii_scrub_projection(ev), "pii_scrub_stream", spark)
 
 
-_DOC_CHUNK_CACHE: dict[tuple, str] = {}
+def _id_range_chunks(df: DataFrame, id_col: str, n_chunks: int) -> list[DataFrame]:
+    """Split ``df`` into ``n_chunks`` equal-width ``id_col`` ranges, in
+    id order (the replay order of an id-stamped feed)."""
+    ids = F.col(id_col)
+    bounds = df.select(F.min(ids).alias("lo"), F.max(ids).alias("hi")).collect()[0]
+    lo, hi = bounds["lo"] or 0, bounds["hi"] or 0
+    step = max((hi - lo) // n_chunks + 1, 1)
+    return [
+        df.filter((ids >= lo + k * step) & (ids < lo + (k + 1) * step))
+        for k in range(n_chunks)
+    ]
 
 
 def docs_stream(
@@ -628,48 +641,19 @@ def docs_stream(
     epoch + doc_id seconds (ingestion order = id order, the way a real
     feed stamps arrival time); chunks are doc_id ranges written in
     order so the file source replays them as an in-order stream."""
-    import os
-    import tempfile
+    docs = load_table(spark, sf_dir, "documents")
 
-    from flink_project_userbehavioranalysis_spark.io import load_table
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), min_doc_id, n_chunks)
-    if key not in _DOC_CHUNK_CACHE:
-        out_dir = tempfile.mkdtemp(prefix="ubx-docs-replay-")
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") >= min_doc_id
+    def build() -> str:
+        feed = docs.filter(F.col("doc_id") >= min_doc_id)
+        return write_ordered_chunks(
+            _id_range_chunks(feed, "doc_id", n_chunks), "ubx-docs-replay-"
         )
-        bounds = docs.select(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        step = max(((hi or 0) - (lo or 0)) // n_chunks + 1, 1)
-        for k in range(n_chunks):
-            chunk = docs.filter(
-                (F.col("doc_id") >= (lo or 0) + k * step)
-                & (F.col("doc_id") < (lo or 0) + (k + 1) * step)
-            )
-            chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{k:03d}")
-        # flatten: the streaming parquet source does NOT recurse into
-        # subdirectories — move each chunk's part file up with ordered
-        # mtimes so maxFilesPerTrigger=1 replays them in doc_id order
-        # (same layout contract as replay._prepare_chunks)
-        flat_dir = tempfile.mkdtemp(prefix="ubx-docs-replay-flat-")
-        idx = 0
-        for sub in sorted(os.listdir(out_dir)):
-            subdir = os.path.join(out_dir, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(flat_dir, f"{idx:03d}.parquet")
-                    os.rename(os.path.join(subdir, f), dst)
-                    os.utime(dst, (1_700_000_000 + idx * 10, 1_700_000_000 + idx * 10))
-                    idx += 1
-        _DOC_CHUNK_CACHE[key] = flat_dir
-    schema = load_table(spark, sf_dir, "documents").schema
+
+    key = session_key(spark, sf_dir, "docs-chunks", min_doc_id, n_chunks)
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_DOC_CHUNK_CACHE[key])
+        .parquet(session_memo(key, build))
     )
     ts = F.timestamp_seconds(F.col("doc_id"))
     return raw.withColumn("ts", ts).withWatermark("ts", watermark)
@@ -1291,9 +1275,6 @@ def value_percentiles_ddsketch_stream(
     return ddsketch_quantiles_from_grid(merged, gamma)
 
 
-_EMB_CHUNK_CACHE: dict[tuple, str] = {}
-
-
 def embeddings_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -1305,51 +1286,23 @@ def embeddings_stream(
     maxFilesPerTrigger=1). ``only_overlay`` replays just the
     maintained-ANN lifecycle's ingest batch (vec_id % 5 = 0) — the
     vectors whose at-ingest encode the streaming twin maintains."""
-    import os
-    import tempfile
-
-    from flink_project_userbehavioranalysis_spark.io import load_table
     from flink_project_userbehavioranalysis_spark.operators.similarity import (
         _ANN_SPLIT_MOD,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        only_overlay,
-        n_chunks,
-    )
-    if key not in _EMB_CHUNK_CACHE:
+    def build() -> str:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         if only_overlay:
             emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
-        bounds = emb.select(
-            F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-        ).collect()[0]
-        lo, hi = bounds["lo"] or 0, bounds["hi"] or 0
-        step = max((hi - lo) // n_chunks + 1, 1)
-        flat_dir = tempfile.mkdtemp(prefix="ubx-emb-replay-")
-        idx = 0
-        out_dir = tempfile.mkdtemp(prefix="ubx-emb-chunks-")
-        for c in range(n_chunks):
-            chunk = emb.filter(
-                (F.col("vec_id") >= lo + c * step)
-                & (F.col("vec_id") < lo + (c + 1) * step)
-            )
-            chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{c:03d}")
-        for sub in sorted(os.listdir(out_dir)):
-            subdir = os.path.join(out_dir, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(flat_dir, f"{idx:03d}.parquet")
-                    os.rename(os.path.join(subdir, f), dst)
-                    os.utime(dst, (1_700_000_000 + idx * 10, 1_700_000_000 + idx * 10))
-                    idx += 1
-        _EMB_CHUNK_CACHE[key] = flat_dir
+        return write_ordered_chunks(
+            _id_range_chunks(emb, "vec_id", n_chunks), "ubx-emb-replay-"
+        )
+
+    key = session_key(spark, sf_dir, "emb-chunks", only_overlay, n_chunks)
     return (
         spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", 1)
-        .parquet(_EMB_CHUNK_CACHE[key])
+        .parquet(session_memo(key, build))
     )
 
 

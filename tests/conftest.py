@@ -19,8 +19,16 @@ def pytest_addoption(parser):
     )
 
 
+def runslow_from_env(value: str | None) -> bool:
+    """SPARK_GRAFT_RUNSLOW opts in only on an explicit on-value, so
+    "0", "false" or an empty string keep the slow tests skipped."""
+    return (value or "").strip().lower() in ("1", "true", "yes", "on")
+
+
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get("SPARK_GRAFT_RUNSLOW"):
+    if config.getoption("--runslow") or runslow_from_env(
+        os.environ.get("SPARK_GRAFT_RUNSLOW")
+    ):
         return
     skip = pytest.mark.skip(
         reason="slow: opt in with --runslow / SPARK_GRAFT_RUNSLOW=1 "

@@ -425,3 +425,59 @@ def test_two_batch_indexed_equals_rebuild(spark, sf_dir):
         tuple(r) for r in I.ingest_two_batch_indexed(spark, sf_dir).collect()
     }
     assert indexed == rebuild and len(indexed) > 0
+
+
+def _ckpt_rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_manifest_memo_lru_on_tiny_frames(spark):
+    """The manifest memo helper on tiny checkpointed frames: the bound
+    holds, the evicted checkpoint's RDD blocks are freed (with no
+    release-path skip), and a re-hit returns the SAME object without
+    rebuilding."""
+    from flink_project_userbehavioranalysis_spark.operators import similarity as S
+
+    saved = dict(I._MANIFEST_CACHE)
+    I._MANIFEST_CACHE.clear()
+    skipped0 = S.RELEASE_SKIPPED
+    try:
+        n = I._MANIFEST_CACHE_MAX + 1
+        frames = [
+            I._manifest_memo(("tiny", i), lambda i=i: spark.range(i + 1).localCheckpoint())
+            for i in range(n)
+        ]
+        assert len(I._MANIFEST_CACHE) == I._MANIFEST_CACHE_MAX
+        assert ("tiny", 0) not in I._MANIFEST_CACHE
+        live = _persistent_rdd_ids(spark)
+        assert _ckpt_rdd_id(frames[0]) not in live
+        assert all(_ckpt_rdd_id(f) in live for f in frames[1:])
+        assert S.RELEASE_SKIPPED == skipped0
+        # a hit re-inserts as most recent and never calls build
+        hit = I._manifest_memo(("tiny", 1), lambda: pytest.fail("rebuilt on a hit"))
+        assert hit is frames[1]
+        assert next(reversed(I._MANIFEST_CACHE)) == ("tiny", 1)
+    finally:
+        I._release_staged({f: S._release_local_ckpt for f in I._MANIFEST_CACHE.values()})
+        I._MANIFEST_CACHE.clear()
+        I._MANIFEST_CACHE.update(saved)
+
+
+def test_release_staged_frees_lazy_checkpoints(spark, sf_dir):
+    """Frames the cascade stages as lazy localCheckpoints are recorded
+    with the checkpoint release, and ``_release_staged`` frees their
+    RDD blocks."""
+    from flink_project_userbehavioranalysis_spark.operators import similarity as S
+
+    frame, staged = I._manifest_frame(spark, sf_dir, stage_ckpt=True)
+    frame.count()
+    ckpts = [df for df, release in staged.items() if release is S._release_local_ckpt]
+    assert len(ckpts) == 4  # pre, exact_ids, sh_b, near_ids
+    assert {_ckpt_rdd_id(df) for df in ckpts} <= _persistent_rdd_ids(spark)
+    I._release_staged(staged)
+    assert not {_ckpt_rdd_id(df) for df in ckpts} & _persistent_rdd_ids(spark)
+    assert not any(df.is_cached for df in staged)
