@@ -6,9 +6,10 @@ Reference: LoginFailDetect/.../{LoginFail, LoginFailWithCep}.scala [U]
 
 Batch formulation is pure window functions (lag over user partitions)
 — one shuffle on user_id, linear scan per partition, no state. The
-streaming-exact variant (keyed state of the previous event, emit
-immediately) is ``streaming/processors.py :: consec_fail_stream``;
-batch≡streaming is asserted in tests/test_streaming_processors.py.
+streaming-exact variant (each user's previous event in state, kept in
+user hash buckets; emits immediately, over the plain replay) is
+``streaming/processors.py :: consec_fail_stream``; batch≡streaming is
+asserted in tests/test_streaming_processors.py.
 
 Ordering determinism: events are ordered by (ts, event_id) in BOTH
 engines — microsecond timestamps could in principle tie, and a tie

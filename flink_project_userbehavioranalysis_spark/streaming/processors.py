@@ -19,6 +19,9 @@ End-of-input: the replay appends a far-future sentinel row (replay.py)
 reproducing Flink's bounded-input ``MAX_WATERMARK``, so all pending
 deadlines flush and each processor's finite-input output is *exactly*
 its batch twin's — asserted against the same DuckDB oracles.
+Processors without timers (``consec_fail_stream``) emit on arrival and
+read the plain replay instead: no sentinel, one micro-batch fewer, and
+the same chunk files the windowed twins replay.
 
 All processor arithmetic is integer **microseconds** (the precision
 the batch operators compare at); state per key is bounded by the
@@ -30,6 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -75,11 +79,20 @@ def _keyed_stream(
     )
 
 
-def _rows(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+def _concat(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     frames = [p for p in pdfs if len(p)]
     if not frames:
         return None
-    return pd.concat(frames).sort_values(["ts_us", "event_id"])
+    return frames[0] if len(frames) == 1 else pd.concat(frames)
+
+
+def _rows(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    batch = _concat(pdfs)
+    if batch is None:
+        return None
+    # event_id is unique, so this is the (ts_us, event_id) order
+    order = np.lexsort((batch["event_id"].to_numpy(), batch["ts_us"].to_numpy()))
+    return batch.iloc[order]
 
 
 def _set_next_timeout(state: GroupState, deadlines_us: list[int]) -> None:
@@ -190,37 +203,80 @@ WHERE s.event_type = 'signup'
 # --------------------------------------------------- ST2 consecutive_events
 
 
+# Hash buckets that key consec_fail_stream's state: a micro-batch costs
+# one vectorized call per touched bucket, not one Python call per user.
+STATE_BUCKETS = 16
+
+
 def consecutive_events_func(fail_type: str, gap_s: int):
     """Streaming-exact v2 consecutive-failure detect (LoginFail.scala
-    :: LoginFailWarningAdvanceResult [U]): compare each event with the
-    key's previous event (any type) and emit when both are failures
+    :: LoginFailWarningAdvanceResult [U]): compare each event with its
+    user's previous event (any type) and emit when both are failures
     within the gap. Relies on the replay's time-ordered micro-batches
-    (the reference's ascending-watermark assumption); rows are sorted
-    by (ts, event_id) within each batch."""
+    (the reference's ascending-watermark assumption); within a batch a
+    user's rows are ordered by (ts, event_id).
+
+    Keyed by a hash bucket of users, not by user. A bucket's state is
+    three parallel arrays sorted by user — user_id, last event type,
+    last ts_us — and the whole bucket is processed with numpy: rows are
+    lexsorted by (user, ts, event_id), each row's previous event is the
+    row above it within the same user, and each user's first row takes
+    its previous event from state (``searchsorted``). The emitted pairs
+    are exactly those of a per-user ValueState.
+
+    Scale tradeoff: each trigger rewrites the whole state of every
+    bucket it touches — users ÷ ``STATE_BUCKETS`` entries per call —
+    where per-user state rewrites only the users that had events."""
     gap_us = gap_s * US
 
     def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # no timers used; defensive
-            return
-        batch = _rows(pdfs)
+        batch = _concat(pdfs)
         if batch is None:
             return
-        prev_typ, prev_us = state.get if state.exists else (None, None)
-        out = []
-        for r in batch.itertuples(index=False):
-            if r.event_type == SENTINEL_TYPE:
-                continue
-            if (
-                r.event_type == fail_type
-                and prev_typ == fail_type
-                and int(r.ts_us) - prev_us <= gap_us
-            ):
-                out.append((key[0], prev_us // US, int(r.ts_us) // US))
-            prev_typ, prev_us = r.event_type, int(r.ts_us)
-        if prev_us is not None:
-            state.update((prev_typ, prev_us))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "first_fail_s", "last_fail_s"])
+        uid = batch["user_id"].to_numpy(np.int64)
+        us = batch["ts_us"].to_numpy(np.int64)
+        order = np.lexsort((batch["event_id"].to_numpy(np.int64), us, uid))
+        uid, us = uid[order], us[order]
+        typ = batch["event_type"].to_numpy(object)[order]
+        fail = typ == fail_type
+        # previous event of the same user: the row above, or the state
+        # entry for the user's first row in this batch
+        first = np.r_[True, uid[1:] != uid[:-1]]
+        prev_fail = np.r_[False, fail[:-1]]
+        prev_us = np.r_[0, us[:-1]]
+        prev_fail[first] = False
+        s_uid, s_typ, s_us = state.get if state.exists else ([], [], [])
+        s_uid = np.asarray(s_uid, np.int64)
+        s_typ = np.asarray(s_typ, object)
+        s_us = np.asarray(s_us, np.int64)
+        rows = np.flatnonzero(first)
+        pos = np.searchsorted(s_uid, uid[rows])
+        seen = pos < len(s_uid)
+        seen[seen] = s_uid[pos[seen]] == uid[rows[seen]]
+        rows, pos = rows[seen], pos[seen]
+        prev_fail[rows] = s_typ[pos] == fail_type
+        prev_us[rows] = s_us[pos]
+        hit = fail & prev_fail & (us - prev_us <= gap_us)
+        # write back each user's last row, merged with untouched users
+        last = np.r_[first[1:], True]
+        keep = ~np.isin(s_uid, uid[last])
+        n_uid = np.concatenate([s_uid[keep], uid[last]])
+        o = np.argsort(n_uid)
+        state.update(
+            (
+                n_uid[o].tolist(),
+                np.concatenate([s_typ[keep], typ[last]])[o].tolist(),
+                np.concatenate([s_us[keep], us[last]])[o].tolist(),
+            )
+        )
+        if hit.any():
+            yield pd.DataFrame(
+                {
+                    "user_id": uid[hit],
+                    "first_fail_s": prev_us[hit] // US,
+                    "last_fail_s": us[hit] // US,
+                }
+            )
 
     return fn
 
@@ -229,17 +285,25 @@ def consec_fail_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> D
     """ST2 streaming-exact — equals the batch lag() formulation.
 
     No type filter: the batch twin's lag() compares against the
-    previous event of ANY type, so the stream must see them all."""
-    inp = _keyed_stream(spark, sf_dir, None, n_chunks=n_chunks)
-    out = inp.groupBy("user_id").applyInPandasWithState(
+    previous event of ANY type, so the stream must see them all. The
+    processor sets no timers and emits on arrival, so it reads the
+    plain replay (no end-of-input sentinel)."""
+    inp = events_stream(spark, sf_dir, n_chunks=n_chunks).select(
+        F.pmod(F.xxhash64("user_id"), F.lit(STATE_BUCKETS)).alias("bucket"),
+        "user_id",
+        "event_type",
+        "event_id",
+        F.expr("ts_ns div 1000").alias("ts_us"),
+    )
+    out = inp.groupBy("bucket").applyInPandasWithState(
         consecutive_events_func("error", 7200),
         outputStructType="user_id BIGINT, first_fail_s BIGINT, last_fail_s BIGINT",
-        stateStructType="typ STRING, us BIGINT",
+        stateStructType="user_id ARRAY<BIGINT>, typ ARRAY<STRING>, us ARRAY<BIGINT>",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = f"consec_fail_stream_{abs(hash((sf_dir, n_chunks)))}"
-    return run_append_memory(out, name, spark).filter(F.col("user_id") >= 0)
+    return run_append_memory(out, name, spark)
 
 
 # ------------------------------------------------------- ST7 keyed_reconcile

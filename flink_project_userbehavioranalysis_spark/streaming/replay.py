@@ -88,11 +88,13 @@ def _prepare_chunks(
     an in-order stream (watermarks handle residual disorder, as they
     would in production). ``scramble=True`` replays the second time
     range *last* — a whole chunk of genuinely late data, used to
-    exercise T6/T7 drop semantics deterministically. Memoized per
-    (app, sf_dir, n_chunks, sentinel, scramble) in the session memo."""
+    exercise T6/T7 drop semantics deterministically. ``sentinel=True``
+    hard-links the plain replay's files into a fresh dir and adds the
+    sentinel file after them. Memoized per (app, sf_dir, n_chunks,
+    sentinel, scramble) in the session memo."""
     from pyspark.sql.types import LongType
 
-    def build() -> str:
+    def keyed_events() -> tuple[DataFrame, bool]:
         raw = load_table(spark, sf_dir, "events")
         # Chunk boundaries are computed on a derived BIGINT-nanos key so
         # the range arithmetic is identical whether the raw ts column is
@@ -104,7 +106,10 @@ def _prepare_chunks(
             if ts_is_long
             else F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
         )
-        keyed = raw.withColumn("_ts_key", key_col)
+        return raw.withColumn("_ts_key", key_col), ts_is_long
+
+    def build_plain() -> str:
+        keyed, _ = keyed_events()
         bounds = keyed.select(
             F.min("_ts_key").alias("lo"), F.max("_ts_key").alias("hi")
         ).collect()[0]
@@ -117,40 +122,50 @@ def _prepare_chunks(
             ).drop("_ts_key")
             for k in range(n_chunks)
         ]
-        if sentinel:
-            far_ns = hi + _SENTINEL_GAP_NS
-            if ts_is_long:
-                far = far_ns
-            else:
-                import datetime as _dt
-
-                far = _dt.datetime(1970, 1, 1) + _dt.timedelta(
-                    microseconds=far_ns // 1000
-                )
-            row = {
-                "event_id": -1,
-                "ts": far,
-                "user_id": -1,
-                "event_type": SENTINEL_TYPE,
-                "value": 0.0,
-                "props": "{}",
-            }
-            chunks.append(spark.createDataFrame([row], schema=raw.schema))
         return write_ordered_chunks(chunks, "ubx-replay-", _replay_order)
 
     def _replay_order(n_files: int) -> list[int]:
-        # scramble moves chunk #1 to the end — but always before the
-        # sentinel, which must stay last
+        # scramble moves chunk #1 to the end
         order = list(range(n_files))
         if scramble and n_files > 3:
-            last = order.pop() if sentinel else None
             order.append(order.pop(1))
-            if last is not None:
-                order.append(last)
         return order
 
+    def build_with_sentinel() -> str:
+        plain_dir = _prepare_chunks(spark, sf_dir, n_chunks, False, scramble)
+        keyed, ts_is_long = keyed_events()
+        far_ns = keyed.select(F.max("_ts_key")).collect()[0][0] + _SENTINEL_GAP_NS
+        if ts_is_long:
+            far = far_ns
+        else:
+            import datetime as _dt
+
+            far = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=far_ns // 1000)
+        row = {
+            "event_id": -1,
+            "ts": far,
+            "user_id": -1,
+            "event_type": SENTINEL_TYPE,
+            "value": 0.0,
+            "props": "{}",
+        }
+        flat_dir = write_ordered_chunks(
+            [spark.createDataFrame([row], schema=keyed.drop("_ts_key").schema)],
+            "ubx-replay-",
+        )
+        chunks = sorted(f for f in os.listdir(plain_dir) if f.endswith(".parquet"))
+        dst = os.path.join(flat_dir, f"{len(chunks):03d}.parquet")
+        os.rename(os.path.join(flat_dir, "000.parquet"), dst)
+        # hard links share the plain files' mtimes, so the plain
+        # (possibly scrambled) order holds and the sentinel goes last
+        for f in chunks:
+            os.link(os.path.join(plain_dir, f), os.path.join(flat_dir, f))
+        last = max(os.stat(os.path.join(plain_dir, f)).st_mtime for f in chunks)
+        os.utime(dst, (last + 10, last + 10))
+        return flat_dir
+
     key = session_key(spark, sf_dir, "replay-chunks", n_chunks, sentinel, scramble)
-    return session_memo(key, build)
+    return session_memo(key, build_with_sentinel if sentinel else build_plain)
 
 
 def write_ordered_chunks(

@@ -1,11 +1,38 @@
 """Stateful processor tests: streaming ≡ batch ≡ oracle on finite
 input (the ST2/ST4/ST5/ST6/ST7 parity promised by SURVEY §4.3)."""
 
+from collections import defaultdict
+
+import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from flink_project_userbehavioranalysis_spark.operators import login as L
 from flink_project_userbehavioranalysis_spark.operators import market as M
 from flink_project_userbehavioranalysis_spark.operators import order_pay as OP
 from flink_project_userbehavioranalysis_spark.streaming import processors as P
+from tests.conftest import SF_DIR_MID
 from tests.oracle import assert_matches_oracle
+
+US = 1_000_000
+
+
+class _FakeState:
+    """The slice of ``GroupState`` the NoTimeout processors use."""
+
+    def __init__(self):
+        self.exists = False
+        self.hasTimedOut = False
+        self._v = None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+        self.exists = True
 
 
 def test_order_lifecycle_stream(spark, sf_dir):
@@ -40,6 +67,116 @@ def test_consec_fail_stream(spark, sf_dir):
     assert_matches_oracle(df, L.consec_fail_oracle_sql(), sf_dir)
     batch = {tuple(r) for r in L.consec_fail(spark, sf_dir).collect()}
     assert {tuple(r) for r in df.collect()} == batch
+
+
+@pytest.mark.parametrize("n_chunks", [1, 7])
+def test_consec_fail_stream_equals_batch_mid_scale(spark, n_chunks):
+    """Bucketed state crosses every micro-batch boundary: one batch and
+    seven batches give the batch lag() rows at sf0.01."""
+    batch = sorted(tuple(r) for r in L.consec_fail(spark, SF_DIR_MID).collect())
+    df = P.consec_fail_stream(spark, SF_DIR_MID, n_chunks=n_chunks)
+    assert sorted(tuple(r) for r in df.collect()) == batch and batch
+
+
+# ------------------------------------------ consecutive_events_func (no Spark)
+
+GAP_S = 2
+N_BUCKETS = 3
+
+
+def _reference_pairs(batches, gap_s=GAP_S):
+    """Per-user ValueState: each batch's rows of a user in (ts_us,
+    event_id) order, the previous event carried across batches."""
+    prev, out = {}, []
+    for batch in batches:
+        by_user = defaultdict(list)
+        for eid, uid, us, typ in batch:
+            by_user[uid].append((us, eid, typ))
+        for uid, rows in by_user.items():
+            p_typ, p_us = prev.get(uid, (None, None))
+            for us, _eid, typ in sorted(rows):
+                if typ == "error" and p_typ == "error" and us - p_us <= gap_s * US:
+                    out.append((uid, p_us // US, us // US))
+                p_typ, p_us = typ, us
+            prev[uid] = (p_typ, p_us)
+    return sorted(out)
+
+
+def _bucketed_pairs(batches, gap_s=GAP_S):
+    """Drive the bucketed processor as the engine does: one call per
+    (micro-batch, bucket), the bucket's rows split over two frames."""
+    fn = P.consecutive_events_func("error", gap_s)
+    states, out = defaultdict(_FakeState), []
+    for batch in batches:
+        pdf = pd.DataFrame(batch, columns=["event_id", "user_id", "ts_us", "event_type"])
+        for b, grp in pdf.groupby(pdf["user_id"] % N_BUCKETS):
+            half = len(grp) // 2
+            for res in fn((b,), iter([grp.iloc[:half], grp.iloc[half:]]), states[b]):
+                out += [tuple(int(x) for x in r) for r in res.itertuples(index=False)]
+            users = states[b].get[0]
+            assert list(users) == sorted(set(users))  # sorted, one entry per user
+    return sorted(out)
+
+
+def _split(rows, cuts):
+    bounds = [0, *sorted(c % (len(rows) + 1) for c in cuts), len(rows)]
+    return [rows[a:b] for a, b in zip(bounds, bounds[1:])]
+
+
+@st.composite
+def _events(draw):
+    """(event_id, user_id, ts_us, event_type) rows: few users and a
+    half-second grid, so ts ties and gaps of exactly GAP_S are common;
+    event ids are a random permutation, so ties need the id order."""
+    picks = draw(
+        st.lists(
+            st.tuples(
+                st.integers(0, 5), st.integers(0, 16), st.sampled_from(["error", "login", "view"])
+            ),
+            max_size=40,
+        )
+    )
+    ids = draw(st.permutations(range(len(picks))))
+    return [(eid, u, t * US // 2, typ) for eid, (u, t, typ) in zip(ids, picks)]
+
+
+@settings(max_examples=200, deadline=None)
+@given(rows=_events(), cuts=st.lists(st.integers(0, 40), max_size=4))
+def test_consecutive_events_func_matches_per_user_reference(rows, cuts):
+    """Random events under random micro-batch splits equal the per-user
+    loop; time-ordered splits equal the single-batch (lag) result."""
+    assert _bucketed_pairs(_split(rows, cuts)) == _reference_pairs(_split(rows, cuts))
+    ordered = sorted(rows, key=lambda r: (r[2], r[0]))
+    assert _bucketed_pairs(_split(ordered, cuts)) == _reference_pairs([rows])
+
+
+@pytest.mark.parametrize(
+    "batches, expected",
+    [
+        pytest.param(
+            [[(1, 7, 0, "error")], [(2, 7, US, "error")]],
+            [(7, 0, 1)],
+            id="pair-straddles-batch-boundary",
+        ),
+        pytest.param(
+            [[(1, 1, 0, "error"), (2, 4, 0, "view")], [(3, 4, US, "error")], [(4, 1, US, "error")]],
+            [(1, 0, 1)],
+            id="user-absent-from-a-batch",
+        ),
+        pytest.param(
+            [[(9, 2, 0, "error"), (5, 2, US, "error"), (4, 2, US, "login")]],
+            [],
+            id="ts-tie-broken-by-event-id",
+        ),
+        pytest.param(
+            [[(1, 3, 0, "error"), (2, 3, GAP_S * US, "error"), (3, 3, 2 * GAP_S * US + 1, "error")]],
+            [(3, 0, GAP_S)],
+            id="gap-exactly-gap_s-included",
+        ),
+    ],
+)
+def test_consecutive_events_func_edge_cases(batches, expected):
+    assert _bucketed_pairs(batches) == _reference_pairs(batches) == expected
 
 
 def test_tx_reconcile_stream(spark, sf_dir):
@@ -108,23 +245,9 @@ def test_trailing_features_func_cross_batch_same_microsecond():
         trailing_features_func,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
     fn = trailing_features_func(window_days=7)
     horizon = 7 * 86_400 * 1_000_000
-    state = FakeState()
+    state = _FakeState()
 
     def run(rows):
         pdf = pd.DataFrame(
