@@ -70,6 +70,7 @@ from flink_project_userbehavioranalysis_spark.operators.llm_text import (
     _dup_gram_positions,
     _merge_islands,
 )
+from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
 from flink_project_userbehavioranalysis_spark.operators.similarity import (
     _banded,
     _release_local_ckpt,
@@ -528,10 +529,6 @@ def build_ingest_indexes(spark: SparkSession, sf_dir: str, **overrides) -> str:
     (app, sf_dir, params) in the session memo — repeated admission runs
     reuse one build (bench's per-run ``_MANIFEST_CACHE.clear()`` does
     not touch it: the nightly build persists across admission runs)."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     p = {**INGEST_DEFAULTS, **overrides}
 
     def build() -> str:
@@ -918,9 +915,6 @@ def ingest_two_batch_indexed(
     derived in-query on the corpus side at admission time."""
     p = {**INGEST_DEFAULTS, **overrides}
     split1 = p["split_id"] if split1 is None else split1
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
 
     def build() -> DataFrame:
         base_root = build_ingest_indexes(

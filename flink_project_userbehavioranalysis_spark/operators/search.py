@@ -38,10 +38,13 @@ Design rules for the 100 TB posture:
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
 from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 #: Ranked-retrieval query set (conjunctive AND; terms distinct per
@@ -225,10 +228,6 @@ def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
     instead and get the same pruned probe. Memoized per (app, sf_dir)
     in the session memo (not cleared between probe runs); production
     runs this as a scheduled job."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> str:
         root = _scratch_dir(spark, "fts-idx", sf_dir)
         _write_fts_index(_docs(spark, sf_dir), root)
@@ -261,17 +260,39 @@ def _write_fts_index(docs: DataFrame, root: str) -> None:
 _POSTINGS_SCHEMA = "doc_id BIGINT, tf BIGINT, term STRING"
 
 
-def _read_term_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a term-partitioned postings tree under the DECLARED schema
-    (`_POSTINGS_SCHEMA`). An explicit schema is the session-safe form:
-    the previous implementation toggled the session-global
-    partitionColumnTypeInference conf around the read, which leaked to
-    concurrent reads on the same SparkSession (r11 advisory)."""
-    return (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(path)
-        .select("term", "doc_id", "tf")
+def _read_term_partitioned(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read one or more term-partitioned postings trees under the
+    DECLARED schema (`_POSTINGS_SCHEMA`), unioned per path so each
+    scan keeps its own planning-time partition pruning. The explicit
+    schema keeps the read session-safe: it never toggles the
+    session-global partitionColumnTypeInference conf, which would leak
+    to concurrent reads on the same SparkSession (r11 advisory)."""
+    return reduce(
+        DataFrame.unionByName,
+        (
+            spark.read.schema(_POSTINGS_SCHEMA).parquet(p).select("term", "doc_id", "tf")
+            for p in paths
+        ),
     )
+
+
+def _fts_probe_roots(spark: SparkSession, k: int, *roots: str) -> DataFrame:
+    """The persisted-index probe shared by the nightly, maintained and
+    compacted forms: the queried terms' postings from every root (a
+    static IN-list per scan ⇒ partition pruning to those terms), the
+    term dictionary and doc count — SUM-merged across roots only when
+    there is more than one, so a single tree is read as stored — then
+    the conjunctive ranking tail."""
+    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
+    post = _read_term_partitioned(spark, *(f"{r}/postings" for r in roots)).filter(
+        F.col("term").isin(terms)
+    )
+    if len(roots) == 1:
+        dic = spark.read.parquet(f"{roots[0]}/dict")
+        n = spark.read.parquet(f"{roots[0]}/n")
+    else:
+        dic, n = _merged_summaries(spark, *roots)
+    return _rank_conjunctive(spark, post, dic, n, k)
 
 
 def fts_topk_indexed(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
@@ -283,14 +304,7 @@ def fts_topk_indexed(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame
     the derive form by construction (one `_postings` definition), so
     it shares the same oracle; cost ∝ postings of the queried terms,
     not ∝ corpus."""
-    root = build_fts_index(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = _read_term_partitioned(spark, f"{root}/postings").filter(
-        F.col("term").isin(terms)
-    )
-    dic = spark.read.parquet(f"{root}/dict")
-    n = spark.read.parquet(f"{root}/n")
-    return _rank_conjunctive(spark, post, dic, n, k)
+    return _fts_probe_roots(spark, k, build_fts_index(spark, sf_dir))
 
 
 #: Corpus/batch split for the maintained-index lifecycle (every fifth
@@ -310,10 +324,6 @@ def build_fts_index_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Probes read base ∪ overlay as one logical index. Memoized per
     (app, sf_dir); production runs the base build as a scheduled job
     and the overlay commit inside each admission run."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> tuple[str, str]:
         docs = _docs(spark, sf_dir)
         base = _scratch_dir(spark, "fts-base", sf_dir)
@@ -325,21 +335,19 @@ def build_fts_index_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return session_memo(session_key(spark, sf_dir, "fts-split"), build)
 
 
-def _merged_summaries(
-    spark: SparkSession, base: str, overlay: str
-) -> tuple[DataFrame, DataFrame]:
-    """The (term, df) dictionary and the doc count of base ∪ overlay,
-    merged by integer SUM (exact: both are mergeable summaries over
-    disjoint immutable doc sets)."""
+def _merged_summaries(spark: SparkSession, *roots: str) -> tuple[DataFrame, DataFrame]:
+    """The (term, df) dictionary and the doc count of the union of
+    ``roots``, merged by integer SUM (exact: both are mergeable
+    summaries over disjoint immutable doc sets)."""
     dic = (
         spark.read.schema("term STRING, df BIGINT")
-        .parquet(f"{base}/dict", f"{overlay}/dict")
+        .parquet(*(f"{r}/dict" for r in roots))
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
     )
     n = (
         spark.read.schema("n_docs BIGINT")
-        .parquet(f"{base}/n", f"{overlay}/n")
+        .parquet(*(f"{r}/n" for r in roots))
         .agg(F.sum("n_docs").alias("n_docs"))
     )
     return dic, n
@@ -357,15 +365,7 @@ def fts_topk_maintained(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
     contract applied to the search pillar. Probe cost shape identical
     to :func:`fts_topk_indexed`: both scans partition-prune to the
     queried terms."""
-    base, overlay = build_fts_index_split(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = (
-        _read_term_partitioned(spark, f"{base}/postings")
-        .unionByName(_read_term_partitioned(spark, f"{overlay}/postings"))
-        .filter(F.col("term").isin(terms))
-    )
-    dic, n = _merged_summaries(spark, base, overlay)
-    return _rank_conjunctive(spark, post, dic, n, k)
+    return _fts_probe_roots(spark, k, *build_fts_index_split(spark, sf_dir))
 
 
 def compact_fts_index(spark: SparkSession, sf_dir: str) -> str:
@@ -384,15 +384,11 @@ def compact_fts_index(spark: SparkSession, sf_dir: str) -> str:
     sf_dir); the layout invariant (single tree, no overlay) and the
     postings-multiset identity vs base ∪ overlay are pinned in
     tests/test_search.py."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> str:
         base, overlay = build_fts_index_split(spark, sf_dir)
         root = _scratch_dir(spark, "fts-compacted", sf_dir)
-        merged = _read_term_partitioned(spark, f"{base}/postings").unionByName(
-            _read_term_partitioned(spark, f"{overlay}/postings")
+        merged = _read_term_partitioned(
+            spark, f"{base}/postings", f"{overlay}/postings"
         )
         merged.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
             "term"
@@ -413,14 +409,7 @@ def fts_topk_compacted(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFra
     under the FULL-REBUILD oracle, so the scoreboard hash proves
     compacted ≡ maintained ≡ rebuilt — compaction changes the LAYOUT,
     never the relation."""
-    root = compact_fts_index(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = _read_term_partitioned(spark, f"{root}/postings").filter(
-        F.col("term").isin(terms)
-    )
-    dic = spark.read.parquet(f"{root}/dict")
-    n = spark.read.parquet(f"{root}/n")
-    return _rank_conjunctive(spark, post, dic, n, k)
+    return _fts_probe_roots(spark, k, compact_fts_index(spark, sf_dir))
 
 
 def _fts_ranked_cte() -> str:

@@ -24,10 +24,13 @@ ops) — this is the north-star extension pillar over ``embeddings``
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, spread_light
+from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
 from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 # --------------------------------------------------------------- shared prep
@@ -358,6 +361,21 @@ def _ivf_centroids(mat, n_cells: int, iters: int = 8):
     return cents
 
 
+def _unit_rows(vectors):
+    """A list of embeddings as float64 rows scaled to unit length."""
+    import numpy as np
+
+    v = np.array(vectors, dtype=np.float64)
+    return v / np.linalg.norm(v, axis=1, keepdims=True)
+
+
+def _nearest_cells(qn, cents, n: int):
+    """(B, n) ids of each unit row's n highest-cosine cells, best first."""
+    import numpy as np
+
+    return np.argsort(-(qn @ cents.T), axis=1)[:, :n].astype(np.int64)
+
+
 def ivf_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -394,10 +412,7 @@ def ivf_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
-            sim = v @ cents.T
-            cells = np.argsort(-sim, axis=1)[:, :n_probe].astype(np.int64)
+            cells = _nearest_cells(_unit_rows(pdf["embedding"].tolist()), cents, n_probe)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
@@ -438,9 +453,15 @@ def _pq_codebooks(mat, m_sub: int, n_codes: int, iters: int = 8):
     the same evenly-spaced-init / fixed-iteration Lloyd's used by the
     IVF coarse quantizer (no RNG anywhere). Returns an
     (m_sub, n_codes, dim // m_sub) array — 8×16×8 doubles ≈ 8 KB, a
-    trivially broadcastable model no matter the corpus size."""
+    trivially broadcastable model no matter the corpus size.
+
+    Every PQ path (in-query, nightly build, split build) trains here
+    before it encodes, so this is where the nibble-packing limit of
+    `_pack_codes` is enforced."""
     import numpy as np
 
+    if n_codes > 16 or m_sub > 32:
+        raise ValueError("code packing supports ≤16 codes (4 bits) × ≤32 subspaces")
     if not len(mat):
         return np.zeros((m_sub, 0, 0))
     normed = mat / np.linalg.norm(mat, axis=1, keepdims=True)
@@ -483,6 +504,20 @@ def _unpack_codes(lo, hi, m_sub: int):
         src, off = (ulo, m) if m < 16 else (uhi, m - 16)
         codes[:, m] = ((src >> np.uint64(4 * off)) & np.uint64(0xF)).view(np.int64)
     return codes
+
+
+def _pq_encode(vn, books):
+    """Unit rows → packed (lo, hi) PQ codes: per subspace, the nearest
+    codeword by squared distance."""
+    import numpy as np
+
+    m_sub, d = books.shape[0], books.shape[2]
+    codes = np.empty((len(vn), m_sub), dtype=np.int64)
+    for m in range(m_sub):
+        sub = vn[:, m * d : (m + 1) * d]
+        d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+        codes[:, m] = d2.argmin(axis=1)
+    return _pack_codes(codes, m_sub)
 
 
 def pq_topk(
@@ -538,16 +573,33 @@ def pq_topk(
 
     Output: (query_id, neighbor_id, rn) — same shape as knn_topk.
     """
-    import numpy as np
-    import pandas as pd
-
-    if n_codes > 16 or m_sub > 32:
-        raise ValueError("code packing supports ≤16 codes (4 bits) × ≤32 subspaces")
-
     sample = _sample_matrix(spark, sf_dir)
     cents = _ivf_centroids(sample, n_cells)
     books = _pq_codebooks(sample, m_sub, n_codes)
-    d = books.shape[2]
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # encode: one map-only pass → nearest cell + packed PQ codes
+    enc = _encode_with_models(emb, cents, books, with_vectors=False)
+    return _pq_shortlist_topk(emb, enc, emb, cents, books, n_probe, shortlist, k)
+
+
+def _pq_shortlist_topk(
+    queries: DataFrame,
+    enc: DataFrame,
+    emb: DataFrame,
+    cents,
+    books,
+    n_probe: int,
+    shortlist: int,
+    k: int,
+) -> DataFrame:
+    """The PQ probe → SDC → shortlist → exact re-rank tail shared by
+    the in-query and persisted-index forms. ``queries`` is the
+    (vec_id, embedding) query side, ``enc`` the (vec_id, cell, lo, hi)
+    inverted lists, ``emb`` the corpus the re-rank joins back to."""
+    import numpy as np
+    import pandas as pd
+
+    m_sub, n_codes = books.shape[0], books.shape[1]
     # symmetric LUT: per-subspace codeword⋅codeword inner products —
     # m_sub·n_codes² doubles (32·256 ≈ 64 KB), flattened for np.take
     lut_flat = (
@@ -555,30 +607,6 @@ def pq_topk(
         if books.size
         else np.zeros(0)
     )
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    _pack = lambda codes: _pack_codes(codes, m_sub)  # noqa: E731
-    _unpack = lambda lo, hi: _unpack_codes(lo, hi, m_sub)  # noqa: E731
-
-    # encode: one map-only pass → nearest cell + packed PQ codes
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cell = (v @ cents.T).argmax(axis=1).astype(np.int64)
-            codes = np.empty((len(v), m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                sub = v[:, m * d : (m + 1) * d]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            lo, hi = _pack(codes)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "cell": cell, "lo": lo, "hi": hi}
-            )
-
-    enc = emb.mapInPandas(encode, "vec_id BIGINT, cell BIGINT, lo BIGINT, hi BIGINT")
 
     # query probes its n_probe nearest cells, carrying only its packed
     # codes (same narrow width as the inverted-list side)
@@ -586,15 +614,9 @@ def pq_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cells = np.argsort(-(vn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-            codes = np.empty((len(v), m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                sub = vn[:, m * d : (m + 1) * d]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            lo, hi = _pack(codes)
+            vn = _unit_rows(pdf["embedding"].tolist())
+            cells = _nearest_cells(vn, cents, n_probe)
+            lo, hi = _pq_encode(vn, books)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
@@ -605,7 +627,7 @@ def pq_topk(
                 }
             )
 
-    probes = emb.mapInPandas(
+    probes = queries.mapInPandas(
         probe, "query_id BIGINT, cell BIGINT, qlo BIGINT, qhi BIGINT"
     )
     # candidate pairs: cell equi-join — six int64s per pair, nothing else
@@ -620,8 +642,8 @@ def pq_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            qc = _unpack(pdf["qlo"].to_numpy(), pdf["qhi"].to_numpy())
-            nc = _unpack(pdf["lo"].to_numpy(), pdf["hi"].to_numpy())
+            qc = _unpack_codes(pdf["qlo"].to_numpy(), pdf["qhi"].to_numpy(), m_sub)
+            nc = _unpack_codes(pdf["lo"].to_numpy(), pdf["hi"].to_numpy(), m_sub)
             base = (np.arange(m_sub) * n_codes * n_codes)[None, :]
             approx = lut_flat[base + qc * n_codes + nc].sum(axis=1)
             yield pd.DataFrame(
@@ -674,10 +696,6 @@ def build_ann_index(
     only the (narrow) inverted lists — never re-encodes the corpus.
     Memoized per (app, sf_dir, params) in the session memo, which is
     NOT cleared between probe runs — that separation is the point."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> str:
         sample = _sample_matrix(spark, sf_dir)
         cents = _ivf_centroids(sample, n_cells)
@@ -697,7 +715,9 @@ def _write_enc(enc: DataFrame, root: str) -> None:
     enc.write.mode("overwrite").partitionBy("cell").parquet(f"{root}/enc")
 
 
-def _encode_with_models(emb: DataFrame, cents, books) -> DataFrame:
+def _encode_with_models(
+    emb: DataFrame, cents, books, with_vectors: bool = True
+) -> DataFrame:
     """ONE map-only Arrow-batched encode pass of a (vec_id, embedding)
     frame against FROZEN centroids + codebooks: cell = argmax cosine
     cell, (lo, hi) = packed PQ codes. Deterministic per row given the
@@ -706,40 +726,32 @@ def _encode_with_models(emb: DataFrame, cents, books) -> DataFrame:
     The inverted lists carry the RAW vector too (IVF-Flat), so a probe
     scores candidates straight off the (partition-pruned) list scan
     without a second corpus join; columnar parquet means the PQ probe,
-    which rides only the packed codes, never reads it."""
+    which rides only the packed codes, never reads it.
+    ``with_vectors=False`` leaves the raw vector out of the batches
+    (the in-query encode of :func:`pq_topk`, which never stores it)."""
     import numpy as np
     import pandas as pd
-
-    m_sub = books.shape[0]
-    d = books.shape[2] if books.size else 0
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cell = (v @ cents.T).argmax(axis=1).astype(np.int64)
-            codes = np.empty((len(v), m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                sub = v[:, m * d : (m + 1) * d]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            lo, hi = _pack_codes(codes, m_sub)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": cell,
-                    "lo": lo,
-                    "hi": hi,
-                    "embedding": list(pdf["embedding"]),
-                }
-            )
+            v = _unit_rows(pdf["embedding"].tolist())
+            lo, hi = _pq_encode(v, books)
+            out = {
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "cell": (v @ cents.T).argmax(axis=1).astype(np.int64),
+                "lo": lo,
+                "hi": hi,
+            }
+            if with_vectors:
+                out["embedding"] = list(pdf["embedding"])
+            yield pd.DataFrame(out)
 
-    return emb.mapInPandas(
-        encode,
-        "vec_id BIGINT, cell BIGINT, lo BIGINT, hi BIGINT, embedding ARRAY<FLOAT>",
-    )
+    schema = "vec_id BIGINT, cell BIGINT, lo BIGINT, hi BIGINT"
+    if with_vectors:
+        schema += ", embedding ARRAY<FLOAT>"
+    return emb.mapInPandas(encode, schema)
 
 
 def _write_model_tables(spark: SparkSession, root: str, cents, books) -> None:
@@ -795,10 +807,6 @@ def build_ann_index_split(
     Probes read base ∪ overlay, both partition-pruned to the probed
     cells. Re-training (drift) is a separate decision gated by
     :func:`ann_overlay_drift`. Memoized per (app, sf_dir, params)."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> tuple[str, str]:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         base_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD != 0)
@@ -833,11 +841,9 @@ def _read_enc(spark: SparkSession, *roots: str) -> DataFrame:
     declared schema, unioned per path (a multi-path read of distinct
     partitioned roots needs separate scans — each keeps its own
     planning-time partition pruning)."""
-    out = None
-    for r in roots:
-        df = spark.read.schema(_ENC_SCHEMA).parquet(r)
-        out = df if out is None else out.unionByName(df)
-    return out
+    return reduce(
+        DataFrame.unionByName, (spark.read.schema(_ENC_SCHEMA).parquet(r) for r in roots)
+    )
 
 
 def ivf_probe_topk_maintained(
@@ -859,55 +865,8 @@ def ivf_probe_topk_maintained(
 
     Output: (query_id, neighbor_id, rn) — same shape as knn_topk.
     """
-    import numpy as np
-
     base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
-    cents, _books = _load_ann_model(spark, base)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < n_queries).collect(), key=lambda r: r[0]
-    )
-    if not qrows or not len(cents):
-        return spark.createDataFrame(
-            [], "query_id BIGINT, neighbor_id BIGINT, rn BIGINT"
-        )
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    cells = np.argsort(-(qn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-    probed = sorted({int(c) for row in cells for c in row})
-    q = spark.createDataFrame(
-        [
-            (int(r[0]), int(c), [float(x) for x in r[1]])
-            for r, row in zip(qrows, cells)
-            for c in row
-        ],
-        "query_id BIGINT, cell BIGINT, qv ARRAY<FLOAT>",
-    )
-    lists = (
-        _read_enc(spark, f"{base}/enc", f"{overlay}/enc")
-        .filter(F.col("cell").isin(probed))  # static ⇒ partition-pruned
-        .select(F.col("vec_id").alias("neighbor_id"), "cell", "embedding")
-    )
-    vd = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(vd(c), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    dot = F.aggregate(
-        F.zip_with(vd("qv"), vd("embedding"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        lists.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.col("rn").cast("long").alias("rn"))
-    )
+    return _ivf_probe_roots(spark, sf_dir, n_queries, k, n_probe, base, overlay)
 
 
 def ann_overlay_drift(
@@ -984,10 +943,6 @@ def compact_ann_index(spark: SparkSession, sf_dir: str, n_cells: int = 32) -> st
     per-row encodings are deterministic given frozen models, the
     compacted tree's row set is bit-for-bit base ∪ overlay
     (test-pinned)."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
-
     def build() -> str:
         base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
         root = _scratch_dir(spark, "ann-compacted", sf_dir)
@@ -1017,28 +972,24 @@ def ivf_probe_topk_compacted(
     (k-means cells are engine-specific); the strong check is pinned in
     pytest: frame-equality vs the maintained base ∪ overlay probe —
     compaction changes layout, never the relation."""
-    return _ivf_probe_roots(
-        spark, sf_dir, compact_ann_index(spark, sf_dir, n_cells), n_queries, k, n_probe
-    )
+    root = compact_ann_index(spark, sf_dir, n_cells)
+    return _ivf_probe_roots(spark, sf_dir, n_queries, k, n_probe, root)
 
 
 def _ivf_probe_roots(
     spark: SparkSession,
     sf_dir: str,
-    root: str,
     n_queries: int,
     k: int,
     n_probe: int,
-    enc_roots: tuple[str, ...] | None = None,
+    *roots: str,
 ) -> DataFrame:
-    """Shared single-model probe body: models from ``root``, inverted
-    lists from ``enc_roots`` (default: ``root``'s own tree). Same
-    contract as :func:`ivf_probe_topk` (driver-side probed cells from
-    the KB-scale request batch → planning-time partition pruning;
-    float64 cosine, round 9 dp, neighbor-id tie-break)."""
-    import numpy as np
-
-    cents, _books = _load_ann_model(spark, root)
+    """Shared bounded probe body: models from the first root, inverted
+    lists from every root's ``enc`` tree (one partition-pruned scan per
+    root). Contract of :func:`ivf_probe_topk`: driver-side probed cells
+    from the KB-scale request batch → planning-time partition pruning;
+    float64 cosine, round 9 dp, neighbor-id tie-break."""
+    cents, _books = _load_ann_model(spark, roots[0])
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrows = sorted(
         emb.filter(F.col("vec_id") < n_queries).collect(), key=lambda r: r[0]
@@ -1047,9 +998,7 @@ def _ivf_probe_roots(
         return spark.createDataFrame(
             [], "query_id BIGINT, neighbor_id BIGINT, rn BIGINT"
         )
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    cells = np.argsort(-(qn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
+    cells = _nearest_cells(_unit_rows([r[1] for r in qrows]), cents, n_probe)
     probed = sorted({int(c) for row in cells for c in row})
     q = spark.createDataFrame(
         [
@@ -1060,7 +1009,7 @@ def _ivf_probe_roots(
         "query_id BIGINT, cell BIGINT, qv ARRAY<FLOAT>",
     )
     lists = (
-        _read_enc(spark, *(enc_roots or (f"{root}/enc",)))
+        _read_enc(spark, *(f"{r}/enc" for r in roots))
         .filter(F.col("cell").isin(probed))  # static ⇒ partition-pruned
         .select(F.col("vec_id").alias("neighbor_id"), "cell", "embedding")
     )
@@ -1077,6 +1026,9 @@ def _ivf_probe_roots(
         lists.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
+        # no pair dedup needed: every vector lives in exactly ONE cell
+        # and a query's probed cells are distinct, so each (query,
+        # neighbor) pair joins at most once
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -1197,9 +1149,7 @@ def ivf_topk_indexed(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cells = np.argsort(-(v @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
+            cells = _nearest_cells(_unit_rows(pdf["embedding"].tolist()), cents, n_probe)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {"query_id": np.repeat(ids, n_probe), "cell": cells.reshape(-1)}
@@ -1237,79 +1187,12 @@ def pq_topk_indexed(
     persisted codebooks (64 KB), and only the per-query shortlist
     reaches the exact re-rank. Output ≡ :func:`pq_topk` bit-for-bit
     (frame-equality test-pinned), recall gates carry over."""
-    import numpy as np
-    import pandas as pd
-
     root = build_ann_index(spark, sf_dir, n_cells=n_cells, m_sub=m_sub, n_codes=n_codes)
     cents, books = _load_ann_model(spark, root)
-    d = books.shape[2]
-    lut_flat = (
-        np.einsum("mkd,mjd->mkj", books, books).reshape(-1)
-        if books.size
-        else np.zeros(0)
-    )
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    queries = _query_side(emb, n_queries)
     enc = _read_enc(spark, f"{root}/enc")
-
-    def probe(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cells = np.argsort(-(vn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-            codes = np.empty((len(v), m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                sub = vn[:, m * d : (m + 1) * d]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            lo, hi = _pack_codes(codes, m_sub)
-            ids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids, n_probe),
-                    "cell": cells.reshape(-1),
-                    "qlo": np.repeat(lo, n_probe),
-                    "qhi": np.repeat(hi, n_probe),
-                }
-            )
-
-    probes = _query_side(emb, n_queries).mapInPandas(
-        probe, "query_id BIGINT, cell BIGINT, qlo BIGINT, qhi BIGINT"
-    )
-    pairs = (
-        probes.join(enc, "cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qlo", "qhi", F.col("vec_id").alias("neighbor_id"), "lo", "hi"
-        )
-    )
-
-    def sdc(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qc = _unpack_codes(pdf["qlo"].to_numpy(), pdf["qhi"].to_numpy(), m_sub)
-            nc = _unpack_codes(pdf["lo"].to_numpy(), pdf["hi"].to_numpy(), m_sub)
-            base = (np.arange(m_sub) * n_codes * n_codes)[None, :]
-            approx = lut_flat[base + qc * n_codes + nc].sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "approx": np.round(approx, 9),
-                }
-            )
-
-    scored = pairs.mapInPandas(sdc, "query_id BIGINT, neighbor_id BIGINT, approx DOUBLE")
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("neighbor_id"))
-    short = (
-        scored.withColumn("arn", F.row_number().over(w))
-        .filter(F.col("arn") <= shortlist * k)
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _score_candidates(short, emb, k)
+    return _pq_shortlist_topk(queries, enc, emb, cents, books, n_probe, shortlist, k)
 
 
 def ivf_probe_topk(
@@ -1348,58 +1231,8 @@ def ivf_probe_topk(
 
     Output: (query_id, neighbor_id, rn) — same shape as knn_topk.
     """
-    import numpy as np
-
     root = build_ann_index(spark, sf_dir, n_cells=n_cells)
-    cents, _books = _load_ann_model(spark, root)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < n_queries).collect(), key=lambda r: r[0]
-    )
-    if not qrows or not len(cents):
-        return spark.createDataFrame(
-            [], "query_id BIGINT, neighbor_id BIGINT, rn BIGINT"
-        )
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    cells = np.argsort(-(qn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-    probed = sorted({int(c) for row in cells for c in row})
-    q = spark.createDataFrame(
-        [
-            (int(r[0]), int(c), [float(x) for x in r[1]])
-            for r, row in zip(qrows, cells)
-            for c in row
-        ],
-        "query_id BIGINT, cell BIGINT, qv ARRAY<FLOAT>",
-    )
-    lists = (
-        _read_enc(spark, f"{root}/enc")
-        .filter(F.col("cell").isin(probed))  # static ⇒ partition-pruned
-        .select(F.col("vec_id").alias("neighbor_id"), "cell", "embedding")
-    )
-    vd = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(vd(c), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    dot = F.aggregate(
-        F.zip_with(vd("qv"), vd("embedding"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        lists.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
-        # no pair dedup needed: every vector lives in exactly ONE cell
-        # and a query's probed cells are distinct, so each (query,
-        # neighbor) pair joins at most once
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.col("rn").cast("long").alias("rn"))
-    )
+    return _ivf_probe_roots(spark, sf_dir, n_queries, k, n_probe, root)
 
 
 # ------------------------------------------- embedding-cosine near-dup pairs
@@ -1575,9 +1408,7 @@ def semantic_dedup(
         for pdf in batches:
             if not len(pdf) or not n_take:
                 continue
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v = v / np.linalg.norm(v, axis=1, keepdims=True)
-            cells = np.argsort(-(v @ cents.T), axis=1)[:, :n_take].astype(np.int64)
+            cells = _nearest_cells(_unit_rows(pdf["embedding"].tolist()), cents, n_take)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {"vec_id": np.repeat(ids, n_take), "cell": cells.reshape(-1)}

@@ -12,6 +12,7 @@ import pytest
 from flink_project_userbehavioranalysis_spark.operators import search as S
 from tests.conftest import SF_DIR_MID
 from tests.oracle import assert_matches_oracle, duck_con
+from tests.plan_scans import partition_filters
 
 
 # ------------------------------------------------------ oracle parity
@@ -370,6 +371,24 @@ def test_fts_indexed_matches_derived_and_prunes_partitions(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters: [" in plan and "term" in plan.split("PartitionFilters")[1][:120]
+
+
+@pytest.mark.parametrize(
+    "probe, n_trees",
+    [("fts_topk_indexed", 1), ("fts_topk_maintained", 2), ("fts_topk_compacted", 1)],
+)
+def test_fts_persisted_probe_prunes_every_postings_scan(spark, sf_dir, probe, n_trees):
+    """On the executed probe plan itself, every postings scan (the one
+    tree, or base and overlay) is partition-pruned to the queried
+    terms, and the dictionary is SUM-merged only when the probe reads
+    more than one tree."""
+    df = getattr(S, probe)(spark, sf_dir)
+    df.collect()
+    scans = partition_filters(df, "doc_id")
+    assert len(scans) == n_trees, scans
+    assert all(pf.startswith("term#") for pf in scans.values()), scans
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("sum(df" in plan) == ("sum(n_docs" in plan) == (n_trees > 1)
 
 
 def test_search_snippets_matches_oracle_mid(spark):

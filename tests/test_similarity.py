@@ -3,9 +3,11 @@ plan-shape assertions (the 100 TB guarantee: no cartesian products in
 any candidate generator)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_project_userbehavioranalysis_spark.operators import similarity as S
 from tests.oracle import assert_matches_oracle
+from tests.plan_scans import partition_filters
 
 
 def test_knn_topk(spark, sf_dir):
@@ -157,6 +159,38 @@ def test_pq_codebooks_trained_on_bounded_sample(spark, sf_dir, monkeypatch):
     assert seen["n"] <= 3 * seen["cap"]
     books = S._pq_codebooks(real(spark, sf_dir, 256), m_sub=8, n_codes=4)
     assert books.shape[0] == 8 and books.shape[1] <= 4
+
+
+@pytest.mark.parametrize(
+    "path", ["pq_topk", "pq_topk_indexed", "build_ann_index", "build_ann_index_split"]
+)
+@pytest.mark.parametrize(
+    "limit", [{"n_codes": 17}, {"m_sub": 33}], ids=["n_codes17", "m_sub33"]
+)
+def test_pq_paths_reject_unpackable_codes(spark, sf_dir, path, limit):
+    """Codes are packed as 4-bit nibbles into two BIGINTs, so every PQ
+    path — in-query, nightly build, split build and the persisted probe
+    — refuses more than 16 codes or 32 subspaces before it encodes,
+    instead of silently writing codes that overflow their nibble."""
+    with pytest.raises(ValueError, match="code packing"):
+        getattr(S, path)(spark, sf_dir, **limit)
+
+
+def test_pq_topk_corpus_smaller_than_codebook(spark, tmp_path):
+    """A training sample with fewer vectors than ``n_codes`` trains
+    fewer codewords per subspace. The SDC lookup is indexed by the
+    trained codebook's size, so on a 10-vector corpus — all four cells
+    probed, every pair shortlisted — PQ returns the exact top-k."""
+    rows = [
+        (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)], "x")
+        for i in range(10)
+    ]
+    spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, label STRING"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    sf = str(tmp_path)
+    got = sorted(map(tuple, S.pq_topk(spark, sf, k=3, n_cells=4, n_probe=4).collect()))
+    assert got and got == sorted(map(tuple, S.knn_topk(spark, sf, k=3).collect()))
 
 
 def test_cosine_dup_pairs_lsh_recall(spark, sf_dir, monkeypatch):
@@ -519,8 +553,9 @@ def test_ivf_probe_maintained_recall_and_pruning(spark, sf_dir):
     assert len(probe & exact) / len(exact) >= 0.8
     plan = probe_df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "PartitionFilters: [" in plan
-    assert "cell" in plan.split("PartitionFilters")[1][:160]
+    scans = partition_filters(probe_df, "vec_id")
+    assert len(scans) == 2, scans  # the base tree and the overlay tree
+    assert all(pf.startswith("cell#") for pf in scans.values()), scans
 
 
 def test_ann_split_model_tables_bounded(spark, sf_dir):
@@ -589,10 +624,15 @@ def test_ann_compacted_layout_and_row_identity(spark, sf_dir):
 
 def test_ann_compacted_probe_equals_maintained(spark, sf_dir):
     """The compacted-tree probe is frame-equal to the maintained
-    base ∪ overlay probe — compaction is layout, not semantics."""
-    a = sorted(map(tuple, S.ivf_probe_topk_compacted(spark, sf_dir).collect()))
+    base ∪ overlay probe — compaction is layout, not semantics — and
+    its one list scan is partition-pruned to the probed cells."""
+    compacted = S.ivf_probe_topk_compacted(spark, sf_dir)
+    a = sorted(map(tuple, compacted.collect()))
     b = sorted(map(tuple, S.ivf_probe_topk_maintained(spark, sf_dir).collect()))
     assert a and a == b
+    scans = partition_filters(compacted, "vec_id")
+    assert len(scans) == 1, scans  # the one compacted tree
+    assert all(pf.startswith("cell#") for pf in scans.values()), scans
 
 
 def test_ann_retrain_roundtrip_recall_gates(spark, sf_dir):
