@@ -39,7 +39,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: the full width; a record without a ``cpus`` field was run at it
+DEFAULT_CPUS = 32
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS)))
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
 # Headline queries: the BASELINE.md-measured set plus one representative
@@ -212,6 +214,12 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
+def _record_cpus(d: dict) -> int:
+    """The core count a bench record ran at; records that predate the
+    ``cpus`` field ran at the default full width."""
+    return d.get("cpus") or DEFAULT_CPUS
+
+
 def _prev_bench(cur_sf: float) -> tuple[str, dict] | None:
     """The newest prior bench record WITH per-query detail at the
     CURRENT scale factor — the round-over-round trend anchor.
@@ -250,8 +258,9 @@ def _prev_bench(cur_sf: float) -> tuple[str, dict] | None:
             except (OSError, json.JSONDecodeError):
                 continue
             # a lower-core scaling pass (e.g. BENCH_r12_c8.json, 8
-            # cores) must not anchor a full-width run's vs_prev trend
-            if d.get("cpus") not in (None, CPUS):
+            # cores) must not anchor a full-width run's vs_prev trend,
+            # nor a legacy full-width record a lower-core run's
+            if _record_cpus(d) != CPUS:
                 continue
             parsed = d.get("parsed") if isinstance(d.get("parsed"), dict) else None
             if not parsed:
@@ -273,7 +282,7 @@ def _prev_bench(cur_sf: float) -> tuple[str, dict] | None:
     detail_path = os.path.join(here, "bench_detail.json")
     try:
         d = json.load(open(detail_path))
-        if d.get("queries") and d.get("sf") == cur_sf and d.get("cpus") in (None, CPUS):
+        if d.get("queries") and d.get("sf") == cur_sf and _record_cpus(d) == CPUS:
             if driver is not None and driver[1].get("value") == d.get("value") and (
                 driver[1].get("method") == d.get("method")
             ):

@@ -23,7 +23,7 @@ Correctness contracts mirror the image-codec split:
   reference and the measured corpus max error.
 
 Scale shape: all codec work is Arrow-batched ``mapInPandas`` over a
-``_spread`` source — map-only, no shuffle. The ADPCM state recurrence
+``io.spread`` source — map-only, no shuffle. The ADPCM state recurrence
 is sequential IN TIME but data-parallel ACROSS STREAMS, so the hot
 path vectorizes as a (n_streams, max_len) time-stepped numpy loop —
 O(max_len) numpy calls per batch instead of O(total_samples) Python
@@ -40,11 +40,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_project_userbehavioranalysis_spark.io import load_table, spread_light
-from flink_project_userbehavioranalysis_spark.operators.multimodal import (
-    _spread,
-    _wav_n_samples,
-)
+from flink_project_userbehavioranalysis_spark.io import load_table, spread, spread_light
+from flink_project_userbehavioranalysis_spark.operators.multimodal import _wav_n_samples
 
 # --------------------------------------------------- G.711 μ-law companding
 #
@@ -563,7 +560,7 @@ def adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     states dims + the bound; pytest pins the scalar↔vectorized state
     equality and the measured corpus max error.
     """
-    src = _spread(
+    src = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", F.col("text").cast("binary").alias("tb")
         )

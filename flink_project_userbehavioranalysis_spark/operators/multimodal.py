@@ -5,15 +5,18 @@ rounds out the §2.9 UDF surface.
 
 No reference analog (the Flink project is scalar-only). The codec
 libraries are NOT in this container; instead of a fake, the decode
-path implements REAL dependency-free decoders for three public image
-formats — Windows BMP (header fields at fixed offsets, bottom-up
-padded scanlines), PNG (chunk walk with CRC verification, stdlib
-zlib IDAT inflate, per-row unfilter across all five spec filter
-types), and baseline JPEG (standard Huffman/quant tables, zigzag,
-numpy DCT — see ``jpeg_codec.py``) — over synthesized-but-valid
-payloads, so the decoded integers and scanline hashes are
-exact-oracle-checkable (JPEG, being lossy, certifies an exact entropy
-layer plus a pixel error BOUND instead of scanline hashes).
+path implements REAL dependency-free decoders — Windows BMP (header
+fields at fixed offsets, bottom-up padded scanlines), PNG (chunk walk
+with CRC verification, stdlib zlib IDAT inflate, per-row unfilter
+across all five spec filter types), baseline JPEG (standard
+Huffman/quant tables, zigzag, numpy DCT — see ``jpeg_codec.py``) and
+GIF89a (variable-width LZW, ``gif_codec.py``) — over
+synthesized-but-valid payloads, so the decoded integers and scanline
+hashes are exact-oracle-checkable (JPEG, being lossy, certifies an
+exact entropy layer plus a pixel error BOUND instead of scanline
+hashes). The image-meta entries draw their payloads from one format
+table, ``_FORMATS``, with seven encodings: BMP, PNG RGB / grayscale /
+RGBA, grayscale JPEG, color 4:2:0 JPEG and GIF89a.
 Unimplemented formats raise at the explicit ``decode_real`` boundary;
 swapping in PIL/ffmpeg for them is a function-body change only.
 
@@ -28,7 +31,8 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -36,12 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from flink_project_userbehavioranalysis_spark.io import load_events, load_table, spread, spread_light
-
-
-# The codec fan-out now lives in io.spread (shared with the text /
-# similarity / ingest pillars since r12); this module keeps its
-# historical name for the many call sites and tests that import it.
-_spread = spread
+from flink_project_userbehavioranalysis_spark.operators import jpeg_codec
 
 
 def attach_binary_payload(docs: DataFrame) -> DataFrame:
@@ -105,8 +104,8 @@ FROM documents
 # (BITMAPFILEHEADER + BITMAPINFOHEADER, 24bpp, bottom-up scanlines,
 # 4-byte row padding — the layout documented in every BMP spec).
 # Pure stdlib `struct`, no codec libraries. The testdata carries no
-# image files, so `attach_bmp_payload` first ENCODES a valid BMP per
-# document from deterministic text-derived dimensions/pixels; the
+# image files, so the encode pass (``_payloads``) first ENCODES a valid
+# BMP per document from deterministic text-derived dimensions/pixels; the
 # decode pass then parses the actual header bytes at their fixed
 # offsets. Because the encoding rules are closed-form integer
 # arithmetic on octet_length(text), a DuckDB oracle can state the
@@ -166,25 +165,6 @@ def bmp_scanline(b: bytes, r: int) -> bytes:
     rs = ((bpp // 8 * width + 3) // 4) * 4
     start = data_off + (height - 1 - r) * rs
     return b[start : start + rs]
-
-
-def attach_bmp_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, payload: binary BMP) via an Arrow-batched
-    encode pass; NULL text encodes the 0-byte dimensions (total)."""
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["tb"].map(
-                        lambda t: encode_bmp(None if t is None else bytes(t))
-                    ),
-                }
-            )
-
-    return src.mapInPandas(enc, "doc_id BIGINT, payload BINARY")
 
 
 # ----------------------------------------------- real PNG codec (pure stdlib)
@@ -368,83 +348,146 @@ def png_scanlines(b: bytes) -> list[bytes]:
     return rows
 
 
-def attach_image_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload): even doc_ids encode as BMP,
-    odd as PNG — one mixed-format binary column with typed metadata,
-    the shape a real multimodal table arrives in. Arrow-batched
-    encode pass; NULL text encodes the 0-byte dimensions."""
+# ----------------------------------------------- the image format table
+#
+# Every image-meta entry decodes ONE mixed payload column in which row
+# doc_id carries encoding ``zoo[doc_id % len(zoo)]`` — the shape a
+# crawl directory has, where the mime varies row to row and formats
+# sharing a mime are told apart only by their parsed headers (IHDR
+# color type, SOF0 component count). Each encoding is stated once, in
+# ``_FORMATS``: the mime its rows carry, its encoder, and — for the
+# DuckDB oracle only — its closed-form bpp and data_size over the
+# synthetic w = n%31+1, h = n%17+1. The Spark side never reads those
+# two fields: it measures bpp and data_size through the real
+# ``decode_real`` parse, so the oracle stays an independent statement
+# of each format's closed form.
+
+
+class _Format(NamedTuple):
+    mime: str
+    #: (text bytes or None, turn) -> payload, where turn = doc_id //
+    #: len(zoo) counts the row's visits to its slot, so a per-row
+    #: variant cycles through all its values inside every zoo
+    encode: Callable[[bytes | None, int], bytes]
+    bpp: int  # oracle only
+    data_size: str  # oracle only: SQL over width, height
+
+
+def _n(t: bytes | None) -> int:
+    return 0 if t is None else len(t)
+
+
+def _png_encoder(color_type: int) -> Callable[[bytes | None, int], bytes]:
+    return lambda t, i: encode_png(t, color_type)
+
+
+_FORMATS: dict[str, _Format] = {
+    # data_size: the padded pixel array (4-byte-aligned stride × height)
+    "bmp": _Format(
+        "image/bmp", lambda t, i: encode_bmp(t), 24,
+        "((3 * width + 3) // 4) * 4 * height",
+    ),
+    # PNG data_size: the inflated filtered stream, one filter byte plus
+    # channels·width per row
+    "png_rgb": _Format("image/png", _png_encoder(2), 24, "(3 * width + 1) * height"),
+    "png_gray": _Format("image/png", _png_encoder(0), 8, "(width + 1) * height"),
+    "png_rgba": _Format("image/png", _png_encoder(6), 32, "(4 * width + 1) * height"),
+    # JPEG data_size: the decoded sample count
+    "jpeg_gray": _Format(
+        "image/jpeg",
+        lambda t, i: jpeg_codec.encode_jpeg(_gray_image(_n(t)), quality=90),
+        8, "width * height",
+    ),
+    # restart interval cycling none / 1 / 2 / 3 MCUs over the slot's
+    # rows: the DRI resync structure real-world encoders emit; decoded
+    # output is identical, so the closed form is untouched
+    "jpeg_color": _Format(
+        "image/jpeg",
+        lambda t, i: jpeg_codec.encode_jpeg_color(
+            _color_image(_n(t), *_bmp_dims(_n(t))), quality=90, restart_interval=i % 4
+        ),
+        24, "width * height * 3",
+    ),
+    # palette indices, alternately interlaced and sequential
+    "gif": _Format(
+        "image/gif", lambda t, i: encode_gif_doc(t, bool(i % 2)), 8, "width * height"
+    ),
+}
+
+_DECODE_META_ZOO = ("bmp", "png_rgb")
+_JPEG_META_ZOO = ("jpeg_gray",)
+_MIXED3_ZOO = ("bmp", "png_rgb", "jpeg_gray")
+_MIXED4_ZOO = _MIXED3_ZOO + ("jpeg_color",)
+_MIXED6_ZOO = ("bmp", "png_rgb", "png_gray", "png_rgba", "jpeg_gray", "jpeg_color")
+_MIXED7_ZOO = _MIXED6_ZOO + ("gif",)
+
+
+def _encode_row(zoo: tuple[str, ...], doc_id, tb) -> tuple:
+    """(doc_id, mime, payload) of one document under ``zoo``."""
+    turn, slot = divmod(int(doc_id), len(zoo))
+    fmt = _FORMATS[zoo[slot]]
+    return doc_id, fmt.mime, fmt.encode(None if tb is None else bytes(tb), turn)
+
+
+def _payloads(docs: DataFrame, zoo: tuple[str, ...]) -> DataFrame:
+    """documents → (doc_id, mime, payload): one Arrow-batched encode
+    pass; NULL text encodes the 0-byte dimensions."""
     src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                t = None if tb is None else bytes(tb)
-                if doc_id % 2 == 0:
-                    recs.append((doc_id, "image/bmp", encode_bmp(t)))
-                else:
-                    recs.append((doc_id, "image/png", encode_png(t)))
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
+            yield pd.DataFrame(
+                [_encode_row(zoo, d, tb) for d, tb in zip(pdf["doc_id"], pdf["tb"])],
+                columns=["doc_id", "mime", "payload"],
+            )
 
     return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
 
 
-def decode_meta_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id + mime + REAL header-parsed (width, height, bpp,
-    data_size) over the MIXED-format payload column (BMP on even ids,
-    PNG on odd — each decoded by its own real header parse via the
-    ``decode_real`` dispatch).
-
+def _decode_meta(docs: DataFrame, zoo: tuple[str, ...]) -> DataFrame:
+    """(doc_id, mime, width, height, bpp, data_size) of ``zoo``'s
+    payloads, each row measured by its own REAL parse in ``decode_real``.
     The payload column flows through Spark as a true binary column
     between the encode and decode passes (two separate Arrow-batched
-    UDFs), so the plumbing a real image pipeline needs — schema,
-    batch shapes, partitioning — is exercised end to end, and the
-    decoded integers hash-match the oracle's closed form. data_size
-    is each format's pixel-stream size: the BMP pixel array
-    (padded-scanline stride × height) / the PNG pre-compression
-    filtered stream ((1 + 3·width) × height, measured from the
-    inflated IDAT).
-    """
-    return decode_meta_projection(load_table(spark, sf_dir, "documents"))
-
-
-def decode_meta_projection(docs: DataFrame) -> DataFrame:
-    """The encode→decode body of ``decode_meta_table`` over an
-    arbitrary docs relation — batch AND streaming (mapInPandas is
-    stateless, so the same projection runs unchanged in append mode;
-    ``decode_meta_stream`` replays it per micro-batch and the batch
-    oracle doubles as the streaming oracle)."""
-    payloads = attach_image_payload(docs)
+    UDFs), so schema, batch shapes and partitioning are exercised end
+    to end. mapInPandas is stateless, so the same projection runs
+    unchanged over a streaming docs relation in append mode."""
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
             yield pd.DataFrame(
-                recs,
+                [
+                    (doc_id, mime, *decode_real(bytes(payload), mime))
+                    for doc_id, mime, payload in zip(
+                        pdf["doc_id"], pdf["mime"], pdf["payload"]
+                    )
+                ],
                 columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
             )
 
-    return payloads.mapInPandas(
+    return _payloads(docs, zoo).mapInPandas(
         dec,
         "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
         " data_size BIGINT",
     )
 
 
-DECODE_META_SQL = """
+def _meta_oracle_sql(zoo: tuple[str, ...]) -> str:
+    """The DuckDB oracle of ``_decode_meta`` over ``zoo``: each slot's
+    closed-form mime, bpp and data_size, chosen by ``doc_id % len(zoo)``."""
+
+    def case(field: Callable[[_Format], object]) -> str:
+        *head, last = (field(_FORMATS[name]) for name in zoo)
+        whens = "".join(f" WHEN {i} THEN {v}" for i, v in enumerate(head))
+        return f"CASE doc_id % {len(zoo)}{whens} ELSE {last} END" if head else str(last)
+
+    return f"""
 SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN 'image/bmp' ELSE 'image/png' END AS mime,
+       {case(lambda f: f"'{f.mime}'")} AS mime,
        CAST(width AS INTEGER) AS width,
        CAST(height AS INTEGER) AS height,
-       24 AS bpp,
-       CAST(CASE WHEN doc_id % 2 = 0
-                 THEN ((3 * width + 3) // 4) * 4 * height
-                 ELSE (3 * width + 1) * height END AS BIGINT) AS data_size
+       {case(lambda f: f.bpp)} AS bpp,
+       CAST({case(lambda f: f.data_size)} AS BIGINT) AS data_size
 FROM (
     SELECT doc_id,
            coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
@@ -452,6 +495,62 @@ FROM (
     FROM documents
 )
 """
+
+
+def decode_meta_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """doc_id + mime + REAL header-parsed (width, height, bpp,
+    data_size) over the MIXED BMP (even ids) / PNG (odd ids) payload
+    column."""
+    return decode_meta_projection(load_table(spark, sf_dir, "documents"))
+
+
+def decode_meta_projection(docs: DataFrame) -> DataFrame:
+    """The encode→decode body of ``decode_meta_table`` over an
+    arbitrary docs relation — batch AND streaming
+    (``decode_meta_stream`` replays it per micro-batch, so the batch
+    oracle doubles as the streaming oracle)."""
+    return _decode_meta(docs, _DECODE_META_ZOO)
+
+
+def jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grayscale baseline JPEG only: dims/precision parsed from the
+    SOF0 frame header, data_size measured as the sample count of the
+    ACTUAL full decode (entropy + IDCT) — so a scan-layer bug fails
+    this query even though the oracle only needs the dimension rules."""
+    return _decode_meta(load_table(spark, sf_dir, "documents"), _JPEG_META_ZOO)
+
+
+def decode_meta_mixed3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BMP / PNG / grayscale JPEG (doc_id mod 3) in one payload column."""
+    return _decode_meta(load_table(spark, sf_dir, "documents"), _MIXED3_ZOO)
+
+
+def decode_meta_mixed4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mixed3 zoo plus color 4:2:0 JPEG (doc_id mod 4): the two
+    JPEG flavors dispatch on the parsed SOF0 component count, not on
+    any row-metadata hint."""
+    return _decode_meta(load_table(spark, sf_dir, "documents"), _MIXED4_ZOO)
+
+
+def decode_meta_mixed6(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BMP / PNG-RGB / PNG-grayscale / PNG-RGBA / grayscale JPEG /
+    color JPEG (doc_id mod 6): three encodings share image/png and two
+    share image/jpeg."""
+    return _decode_meta(load_table(spark, sf_dir, "documents"), _MIXED6_ZOO)
+
+
+def decode_meta_mixed7(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mixed6 zoo plus GIF89a (doc_id mod 7), whose rows go through
+    the full variable-width LZW decode."""
+    return _decode_meta(load_table(spark, sf_dir, "documents"), _MIXED7_ZOO)
+
+
+DECODE_META_SQL = _meta_oracle_sql(_DECODE_META_ZOO)
+JPEG_META_SQL = _meta_oracle_sql(_JPEG_META_ZOO)
+DECODE_META_MIXED3_SQL = _meta_oracle_sql(_MIXED3_ZOO)
+DECODE_META_MIXED4_SQL = _meta_oracle_sql(_MIXED4_ZOO)
+DECODE_META_MIXED6_SQL = _meta_oracle_sql(_MIXED6_ZOO)
+DECODE_META_MIXED7_SQL = _meta_oracle_sql(_MIXED7_ZOO)
 
 
 def decode_real(payload: bytes, mime: str) -> tuple[int, int, int, int]:
@@ -494,8 +593,6 @@ def decode_real(payload: bytes, mime: str) -> tuple[int, int, int, int]:
     if mime == "image/jpeg":
         # data_size measured from the ACTUAL full decode (entropy +
         # IDCT), not the header — a corrupt scan is a decode error
-        from flink_project_userbehavioranalysis_spark.operators import jpeg_codec
-
         w, h, precision, ncomp = jpeg_codec.decode_jpeg_meta(payload)
         if precision != 8 or ncomp not in (1, 3):
             raise NotImplementedError(
@@ -520,6 +617,18 @@ def decode_real(payload: bytes, mime: str) -> tuple[int, int, int, int]:
 # ------------------------------------------------ frame sampling (mapInPandas)
 
 
+def _scan_rows(b: bytes, mime: str):
+    """(row_of, width, height) over the REAL decode of a BMP or PNG
+    payload: BMP rows by the bottom-up offset math (``bmp_scanline``,
+    rows carry the 4-byte padding), PNG rows by one inflate-and-unfilter
+    walk per image (``png_scanlines``, rows are exactly 3·width)."""
+    if mime == "image/bmp":
+        w, h, _, _ = decode_bmp_meta(b)
+        return (lambda r: bmp_scanline(b, r)), w, h
+    scan = png_scanlines(b)
+    return scan.__getitem__, len(scan[0]) // 3, len(scan)
+
+
 def frame_sample(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFrame:
     """Video-style frame sampling over the MIXED-format decoded
     payloads: each image → ``n_frames`` sampled scanlines (doc_id,
@@ -532,7 +641,7 @@ def frame_sample(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFra
     extracted bytes hash-matches the oracle's rebuilt row. Note the
     strides differ by design: BMP scanlines carry the 4-byte row
     padding, PNG rows are exactly 3·width."""
-    payloads = attach_image_payload(load_table(spark, sf_dir, "documents"))
+    payloads = _payloads(load_table(spark, sf_dir, "documents"), _DECODE_META_ZOO)
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -540,14 +649,7 @@ def frame_sample(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFra
             for doc_id, mime, payload in zip(
                 pdf["doc_id"], pdf["mime"], pdf["payload"]
             ):
-                b = bytes(payload)
-                if mime == "image/bmp":
-                    _, height, _, _ = decode_bmp_meta(b)
-                    grab = lambda r: bmp_scanline(b, r)  # noqa: E731
-                else:
-                    scan = png_scanlines(b)  # decode once per image
-                    height = len(scan)
-                    grab = scan.__getitem__
+                grab, _, height = _scan_rows(bytes(payload), mime)
                 for i in range(n_frames):
                     r = i * height // n_frames
                     rows.append(
@@ -618,7 +720,7 @@ def thumbnail(spark: SparkSession, sf_dir: str, side: int = 8) -> DataFrame:
 
     Output: (doc_id, mime, thumb_md5, byte_sum).
     """
-    payloads = attach_image_payload(load_table(spark, sf_dir, "documents"))
+    payloads = _payloads(load_table(spark, sf_dir, "documents"), _DECODE_META_ZOO)
 
     def tn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -626,15 +728,7 @@ def thumbnail(spark: SparkSession, sf_dir: str, side: int = 8) -> DataFrame:
             for doc_id, mime, payload in zip(
                 pdf["doc_id"], pdf["mime"], pdf["payload"]
             ):
-                b = bytes(payload)
-                if mime == "image/bmp":
-                    w, h, _, _ = decode_bmp_meta(b)
-                    row_of = lambda r: bmp_scanline(b, r)  # noqa: E731
-                else:
-                    scan = png_scanlines(b)
-                    h, w = len(scan), len(scan[0]) // 3
-                    row_of = scan.__getitem__
-                out = nn_thumbnail(row_of, w, h, side)
+                out = nn_thumbnail(*_scan_rows(bytes(payload), mime), side)
                 recs.append(
                     (doc_id, mime, hashlib.md5(out).hexdigest(), sum(out))
                 )
@@ -989,13 +1083,13 @@ def _riff_chunks(b: bytes, pos: int, end: int):
         pos += 8 + ln + (ln & 1)
 
 
-def encode_avi(text_bytes: bytes | None) -> bytes:
-    """Build a complete, valid uncompressed-DIB AVI for a doc payload."""
-    n = len(text_bytes) if text_bytes is not None else 0
-    w, h = _bmp_dims(n)
-    rs = _bmp_row_size(w)
-    nf = _avi_n_frames(n)
-    frames = [bytes([_avi_frame_byte(n, k)]) * (rs * h) for k in range(nf)]
+def _avi_container(w: int, h: int, frames: list[bytes], codec: bytes) -> bytes:
+    """RIFF/AVI around one video stream: the hdrl header tree (avih
+    MainAVIHeader, strl LIST with a 'vids' AVIStreamHeader + a
+    BITMAPINFOHEADER strf) and a movi LIST of one chunk per frame.
+    ``codec`` b"DIB " writes uncompressed '00db' chunks (biCompression
+    0); any other fourcc (b"MJPG") is the strf compression and the
+    chunks are '00dc'. The buffer sizes are the largest frame's."""
 
     def chunk(tag: bytes, data: bytes) -> bytes:
         return tag + struct.pack("<I", len(data)) + data + (b"\x00" * (len(data) & 1))
@@ -1003,26 +1097,40 @@ def encode_avi(text_bytes: bytes | None) -> bytes:
     def lst(list_type: bytes, data: bytes) -> bytes:
         return b"LIST" + struct.pack("<I", 4 + len(data)) + list_type + data
 
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, rs * h, 0, 0, 0, 0)
+    if codec == b"DIB ":
+        compression, tag = 0, b"00db"
+    else:
+        (compression,), tag = struct.unpack("<I", codec), b"00dc"
+    nf, buf_size = len(frames), max(len(f) for f in frames)
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, compression, buf_size, 0, 0, 0, 0)
     strh = struct.pack(
         "<4s4sIHHIIIIIIII4H",
-        b"vids", b"DIB ", 0, 0, 0, 0,
+        b"vids", codec, 0, 0, 0, 0,
         1, 1_000_000 // _AVI_USEC_PER_FRAME,  # scale, rate (10 fps)
-        0, nf, rs * h, 0, 0,
+        0, nf, buf_size, 0, 0,
         0, 0, w, h,  # rcFrame
     )
     avih = struct.pack(
         "<IIIIIIIIII4I",
-        _AVI_USEC_PER_FRAME, rs * h * 10, 0, 0, nf, 0, 1, rs * h, w, h,
+        _AVI_USEC_PER_FRAME, buf_size * 10, 0, 0, nf, 0, 1, buf_size, w, h,
         0, 0, 0, 0,
     )
     hdrl = lst(
         b"hdrl",
         chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
     )
-    movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frames))
+    movi = lst(b"movi", b"".join(chunk(tag, f) for f in frames))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def encode_avi(text_bytes: bytes | None) -> bytes:
+    """Build a complete, valid uncompressed-DIB AVI for a doc payload."""
+    n = len(text_bytes) if text_bytes is not None else 0
+    w, h = _bmp_dims(n)
+    rs = _bmp_row_size(w)
+    frames = [bytes([_avi_frame_byte(n, k)]) * (rs * h) for k in range(_avi_n_frames(n))]
+    return _avi_container(w, h, frames, b"DIB ")
 
 
 def decode_avi_meta(b: bytes) -> tuple[int, int, int, int]:
@@ -1161,49 +1269,23 @@ def _mjpeg_frame_image(n: int, k: int, w: int, h: int):
     return np.repeat(rows[:, None], w, axis=1)
 
 
-def encode_avi_mjpeg(text_bytes: bytes | None) -> bytes:
-    """Build a complete, valid MJPEG AVI: same header tree as
-    :func:`encode_avi` but strh/strf declare the 'MJPG' codec and the
-    movi LIST carries '00dc' chunks, each a full baseline JPEG."""
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-    )
+def _gray_image(n: int):
+    """The still grayscale source of a document of n bytes: _bmp_dims(n)
+    with row r filled with _bmp_row_byte(n, r) (MJPEG frame 0)."""
+    return _mjpeg_frame_image(n, 0, *_bmp_dims(n))
 
+
+def encode_avi_mjpeg(text_bytes: bytes | None) -> bytes:
+    """Build a complete, valid MJPEG AVI: the :func:`encode_avi` header
+    tree declaring the 'MJPG' codec, its movi LIST carrying '00dc'
+    chunks, each a full baseline JPEG."""
     n = len(text_bytes) if text_bytes is not None else 0
     w, h = _bmp_dims(n)
-    nf = _avi_n_frames(n)
     frames = [
-        encode_jpeg(_mjpeg_frame_image(n, k, w, h), quality=90) for k in range(nf)
+        jpeg_codec.encode_jpeg(_mjpeg_frame_image(n, k, w, h), quality=90)
+        for k in range(_avi_n_frames(n))
     ]
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return tag + struct.pack("<I", len(data)) + data + (b"\x00" * (len(data) & 1))
-
-    def lst(list_type: bytes, data: bytes) -> bytes:
-        return b"LIST" + struct.pack("<I", 4 + len(data)) + list_type + data
-
-    (mjpg,) = struct.unpack("<I", b"MJPG")
-    buf_size = max(len(f) for f in frames)
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, mjpg, buf_size, 0, 0, 0, 0)
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4H",
-        b"vids", b"MJPG", 0, 0, 0, 0,
-        1, 1_000_000 // _AVI_USEC_PER_FRAME,
-        0, nf, buf_size, 0, 0,
-        0, 0, w, h,
-    )
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        _AVI_USEC_PER_FRAME, buf_size * 10, 0, 0, nf, 0, 1, buf_size, w, h,
-        0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _avi_container(w, h, frames, b"MJPG")
 
 
 def video_frames_mjpeg(
@@ -1225,7 +1307,7 @@ def video_frames_mjpeg(
         decode_jpeg,
     )
 
-    src = _spread(
+    src = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", F.col("text").cast("binary").alias("tb")
         )
@@ -1339,80 +1421,6 @@ GROUP BY 1
 #     broken DCT/quantizer hash-mismatches the scoreboard.
 
 
-def attach_jpeg_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload) with a REAL baseline JPEG
-    per document: grayscale, same deterministic dims as the BMP path
-    (w = n%31+1, h = n%17+1), row r filled with 32 + (n+r) % 95.
-    Arrow-batched encode pass; NULL text encodes the 0-byte (1x1)
-    image."""
-    import numpy as np
-
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-    )
-
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                n = 0 if tb is None else len(bytes(tb))
-                w, h = _bmp_dims(n)
-                img = np.array(
-                    [[_bmp_row_byte(n, r)] * w for r in range(h)], dtype=np.uint8
-                )
-                recs.append((doc_id, "image/jpeg", encode_jpeg(img, quality=90)))
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
-
-    return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
-
-
-def jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id + REAL JPEG-decoded (width, height, bpp, data_size) via
-    the ``decode_real`` dispatch: dims/precision parsed from the SOF0
-    frame header, data_size measured as the sample count of the ACTUAL
-    full decode (entropy + IDCT) — so a scan-layer bug fails this
-    query even though the oracle's closed form only needs the
-    synthetic dimension rules."""
-    payloads = attach_jpeg_payload(load_table(spark, sf_dir, "documents"))
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
-        " data_size BIGINT",
-    )
-
-
-JPEG_META_SQL = """
-SELECT doc_id,
-       'image/jpeg' AS mime,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       8 AS bpp,
-       CAST(width * height AS BIGINT) AS data_size
-FROM (
-    SELECT doc_id,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height
-    FROM documents
-)
-"""
-
-
 def jpeg_roundtrip(spark: SparkSession, sf_dir: str, bound: int = 4) -> DataFrame:
     """Encode→decode each document's synthetic image through the FULL
     lossy pipeline and certify the reconstruction: (doc_id, width,
@@ -1446,9 +1454,7 @@ def jpeg_roundtrip(spark: SparkSession, sf_dir: str, bound: int = 4) -> DataFram
             for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
                 n = 0 if tb is None else len(bytes(tb))
                 w, h = _bmp_dims(n)
-                src = np.array(
-                    [[_bmp_row_byte(n, r)] * w for r in range(h)], dtype=np.uint8
-                )
+                src = _gray_image(n)
                 out = decode_jpeg(encode_jpeg(src, quality=90))
                 assert out.shape == (h, w)
                 max_err = int(
@@ -1473,92 +1479,6 @@ SELECT doc_id,
        CAST(height AS INTEGER) AS height,
        CAST(width * height AS BIGINT) AS n_samples,
        TRUE AS max_err_le_4
-FROM (
-    SELECT doc_id,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height
-    FROM documents
-)
-"""
-
-
-def attach_image3_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload) mixing all THREE real image
-    codecs in one binary column (doc_id mod 3: BMP / PNG / JPEG) — the
-    shape a production multimodal table actually has, where mime
-    varies row to row inside one file/batch. Arrow-batched encode."""
-    import numpy as np
-
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-    )
-
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                t = None if tb is None else bytes(tb)
-                m = doc_id % 3
-                if m == 0:
-                    recs.append((doc_id, "image/bmp", encode_bmp(t)))
-                elif m == 1:
-                    recs.append((doc_id, "image/png", encode_png(t)))
-                else:
-                    n = 0 if t is None else len(t)
-                    w, h = _bmp_dims(n)
-                    img = np.array(
-                        [[_bmp_row_byte(n, r)] * w for r in range(h)],
-                        dtype=np.uint8,
-                    )
-                    recs.append((doc_id, "image/jpeg", encode_jpeg(img, quality=90)))
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
-
-    return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
-
-
-def decode_meta_mixed3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full three-codec dispatch over ONE mixed payload column:
-    every row decoded by its own REAL parser (BMP fixed-offset header /
-    PNG CRC-verified chunk walk / JPEG SOF0 + full entropy decode) via
-    ``decode_real``; the hash oracle states each format's closed-form
-    meta exactly. This is the surface a user points at a directory of
-    mixed images — no per-format pre-split."""
-    payloads = attach_image3_payload(load_table(spark, sf_dir, "documents"))
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
-        " data_size BIGINT",
-    )
-
-
-DECODE_META_MIXED3_SQL = """
-SELECT doc_id,
-       CASE doc_id % 3 WHEN 0 THEN 'image/bmp'
-                       WHEN 1 THEN 'image/png'
-                       ELSE 'image/jpeg' END AS mime,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       CASE WHEN doc_id % 3 = 2 THEN 8 ELSE 24 END AS bpp,
-       CAST(CASE doc_id % 3
-                 WHEN 0 THEN ((3 * width + 3) // 4) * 4 * height
-                 WHEN 1 THEN (3 * width + 1) * height
-                 ELSE width * height END AS BIGINT) AS data_size
 FROM (
     SELECT doc_id,
            coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
@@ -1621,7 +1541,7 @@ def jpeg_color_roundtrip(
         encode_jpeg_color,
     )
 
-    src_docs = _spread(
+    src_docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", F.col("text").cast("binary").alias("tb")
         )
@@ -1690,7 +1610,7 @@ def jpeg_progressive_roundtrip(
         encode_jpeg_progressive,
     )
 
-    src_docs = _spread(
+    src_docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", F.col("text").cast("binary").alias("tb")
         )
@@ -1702,9 +1622,7 @@ def jpeg_progressive_roundtrip(
             for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
                 n = 0 if tb is None else len(bytes(tb))
                 w, h = _bmp_dims(n)
-                src = np.array(
-                    [[_bmp_row_byte(n, r)] * w for r in range(h)], dtype=np.uint8
-                )
+                src = _gray_image(n)
                 out = decode_jpeg(encode_jpeg_progressive(src, quality=90))
                 base = decode_jpeg(encode_jpeg(src, quality=90))
                 assert out.shape == (h, w)
@@ -1749,230 +1667,6 @@ SELECT doc_id,
        TRUE AS max_err_le_4,
        TRUE AS eq_baseline,
        TRUE AS eq_baseline_color
-FROM (
-    SELECT doc_id,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height
-    FROM documents
-)
-"""
-
-
-def attach_image4_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload) mixing all FOUR real image
-    encodings in one binary column (doc_id mod 4: BMP / PNG /
-    grayscale JPEG / color 4:2:0 JPEG — the last two share a mime and
-    are told apart only by their SOF0 component count, exactly like a
-    real crawl directory). Arrow-batched encode."""
-    import numpy as np
-
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-        encode_jpeg_color,
-    )
-
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                t = None if tb is None else bytes(tb)
-                n = 0 if t is None else len(t)
-                m = doc_id % 4
-                if m == 0:
-                    recs.append((doc_id, "image/bmp", encode_bmp(t)))
-                elif m == 1:
-                    recs.append((doc_id, "image/png", encode_png(t)))
-                elif m == 2:
-                    w, h = _bmp_dims(n)
-                    img = np.array(
-                        [[_bmp_row_byte(n, r)] * w for r in range(h)],
-                        dtype=np.uint8,
-                    )
-                    recs.append((doc_id, "image/jpeg", encode_jpeg(img, quality=90)))
-                else:
-                    w, h = _bmp_dims(n)
-                    # doc-dependent restart interval (0 = none, else
-                    # RSTm every 1-3 MCUs): the color slot exercises
-                    # the DRI resync structure real-world encoders
-                    # emit; decoded output is identical, so the
-                    # closed-form oracle is untouched
-                    recs.append(
-                        (
-                            doc_id,
-                            "image/jpeg",
-                            encode_jpeg_color(
-                                _color_image(n, w, h),
-                                quality=90,
-                                restart_interval=int(doc_id % 7 % 4),
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
-
-    return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
-
-
-def decode_meta_mixed4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The four-encoding dispatch over ONE mixed payload column — the
-    mixed3 surface extended with color 4:2:0 JPEG: every row decoded
-    by its own REAL parser via ``decode_real`` (the two JPEG flavors
-    dispatch on the parsed SOF0 component count, not on any
-    row-metadata hint); the hash oracle states each encoding's
-    closed-form meta exactly (color JPEG: bpp 24, data_size w*h*3
-    measured from the actual full decode)."""
-    payloads = attach_image4_payload(load_table(spark, sf_dir, "documents"))
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
-        " data_size BIGINT",
-    )
-
-
-DECODE_META_MIXED4_SQL = """
-SELECT doc_id,
-       CASE doc_id % 4 WHEN 0 THEN 'image/bmp'
-                       WHEN 1 THEN 'image/png'
-                       ELSE 'image/jpeg' END AS mime,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       CASE doc_id % 4 WHEN 2 THEN 8 ELSE 24 END AS bpp,
-       CAST(CASE doc_id % 4
-                 WHEN 0 THEN ((3 * width + 3) // 4) * 4 * height
-                 WHEN 1 THEN (3 * width + 1) * height
-                 WHEN 2 THEN width * height
-                 ELSE width * height * 3 END AS BIGINT) AS data_size
-FROM (
-    SELECT doc_id,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height
-    FROM documents
-)
-"""
-
-
-def attach_image6_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload): the full format zoo in ONE
-    binary column (doc_id mod 6: BMP / PNG-RGB / PNG-grayscale /
-    PNG-RGBA / baseline grayscale JPEG / color 4:2:0 JPEG with
-    doc-dependent restart intervals). Three of the six share the
-    image/png mime and two share image/jpeg — every row is told apart
-    only by its parsed header (IHDR color type, SOF0 component count),
-    exactly like a crawl directory. Arrow-batched encode."""
-    import numpy as np
-
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-        encode_jpeg_color,
-    )
-
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                t = None if tb is None else bytes(tb)
-                n = 0 if t is None else len(t)
-                m = doc_id % 6
-                if m == 0:
-                    recs.append((doc_id, "image/bmp", encode_bmp(t)))
-                elif m == 1:
-                    recs.append((doc_id, "image/png", encode_png(t, 2)))
-                elif m == 2:
-                    recs.append((doc_id, "image/png", encode_png(t, 0)))
-                elif m == 3:
-                    recs.append((doc_id, "image/png", encode_png(t, 6)))
-                elif m == 4:
-                    w, h = _bmp_dims(n)
-                    img = np.array(
-                        [[_bmp_row_byte(n, r)] * w for r in range(h)],
-                        dtype=np.uint8,
-                    )
-                    recs.append((doc_id, "image/jpeg", encode_jpeg(img, quality=90)))
-                else:
-                    w, h = _bmp_dims(n)
-                    recs.append(
-                        (
-                            doc_id,
-                            "image/jpeg",
-                            encode_jpeg_color(
-                                _color_image(n, w, h),
-                                quality=90,
-                                restart_interval=int(doc_id % 7 % 4),
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
-
-    return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
-
-
-def decode_meta_mixed6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The six-encoding dispatch over ONE mixed payload column (r10 —
-    extends mixed4 with grayscale and RGBA PNG): every row decoded by
-    its own REAL parser via ``decode_real``, formats disambiguated
-    only by their parsed headers; the hash oracle states each
-    encoding's closed-form meta exactly."""
-    payloads = attach_image6_payload(load_table(spark, sf_dir, "documents"))
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
-        " data_size BIGINT",
-    )
-
-
-DECODE_META_MIXED6_SQL = """
-SELECT doc_id,
-       CASE doc_id % 6 WHEN 0 THEN 'image/bmp'
-                       WHEN 1 THEN 'image/png'
-                       WHEN 2 THEN 'image/png'
-                       WHEN 3 THEN 'image/png'
-                       ELSE 'image/jpeg' END AS mime,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       CASE doc_id % 6 WHEN 0 THEN 24
-                       WHEN 1 THEN 24
-                       WHEN 2 THEN 8
-                       WHEN 3 THEN 32
-                       WHEN 4 THEN 8
-                       ELSE 24 END AS bpp,
-       CAST(CASE doc_id % 6
-                 WHEN 0 THEN ((3 * width + 3) // 4) * 4 * height
-                 WHEN 1 THEN (3 * width + 1) * height
-                 WHEN 2 THEN (width + 1) * height
-                 WHEN 3 THEN (4 * width + 1) * height
-                 WHEN 4 THEN width * height
-                 ELSE width * height * 3 END AS BIGINT) AS data_size
 FROM (
     SELECT doc_id,
            coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
@@ -2078,128 +1772,6 @@ FROM (
            coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
            coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height,
            32 + coalesce(octet_length(CAST(text AS BLOB)), 0) % 95 AS idx0
-    FROM documents
-)
-"""
-
-
-def attach_image7_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload): the mixed6 zoo plus GIF
-    (doc_id mod 7: BMP / PNG-RGB / PNG-grayscale / PNG-RGBA /
-    grayscale JPEG / color 4:2:0 JPEG / GIF89a — the GIF slot
-    alternating interlaced and sequential). Arrow-batched encode."""
-    import numpy as np
-
-    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
-        encode_jpeg,
-        encode_jpeg_color,
-    )
-
-    src = spread_light(docs.select("doc_id", F.col("text").cast("binary").alias("tb")))
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, tb in zip(pdf["doc_id"], pdf["tb"]):
-                t = None if tb is None else bytes(tb)
-                n = 0 if t is None else len(t)
-                m = doc_id % 7
-                if m == 0:
-                    recs.append((doc_id, "image/bmp", encode_bmp(t)))
-                elif m == 1:
-                    recs.append((doc_id, "image/png", encode_png(t, 2)))
-                elif m == 2:
-                    recs.append((doc_id, "image/png", encode_png(t, 0)))
-                elif m == 3:
-                    recs.append((doc_id, "image/png", encode_png(t, 6)))
-                elif m == 4:
-                    w, h = _bmp_dims(n)
-                    img = np.array(
-                        [[_bmp_row_byte(n, r)] * w for r in range(h)],
-                        dtype=np.uint8,
-                    )
-                    recs.append((doc_id, "image/jpeg", encode_jpeg(img, quality=90)))
-                elif m == 5:
-                    w, h = _bmp_dims(n)
-                    recs.append(
-                        (
-                            doc_id,
-                            "image/jpeg",
-                            encode_jpeg_color(
-                                _color_image(n, w, h),
-                                quality=90,
-                                restart_interval=int(doc_id % 5 % 4),
-                            ),
-                        )
-                    )
-                else:
-                    recs.append(
-                        (doc_id, "image/gif", encode_gif_doc(t, bool(doc_id % 2)))
-                    )
-            yield pd.DataFrame(recs, columns=["doc_id", "mime", "payload"])
-
-    return src.mapInPandas(enc, "doc_id BIGINT, mime STRING, payload BINARY")
-
-
-def decode_meta_mixed7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seven-encoding dispatch over ONE mixed payload column (r10 —
-    extends mixed6 with GIF89a): every row decoded by its own REAL
-    parser via ``decode_real`` (the GIF rows through the full
-    variable-width LZW decode, interlaced on odd ids), formats told
-    apart only by their parsed headers; the hash oracle states each
-    encoding's closed-form meta exactly."""
-    payloads = attach_image7_payload(load_table(spark, sf_dir, "documents"))
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                w, h, bpp, data_size = decode_real(bytes(payload), mime)
-                recs.append((doc_id, mime, w, h, bpp, data_size))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "mime", "width", "height", "bpp", "data_size"],
-            )
-
-    return payloads.mapInPandas(
-        dec,
-        "doc_id BIGINT, mime STRING, width INT, height INT, bpp INT,"
-        " data_size BIGINT",
-    )
-
-
-DECODE_META_MIXED7_SQL = """
-SELECT doc_id,
-       CASE doc_id % 7 WHEN 0 THEN 'image/bmp'
-                       WHEN 1 THEN 'image/png'
-                       WHEN 2 THEN 'image/png'
-                       WHEN 3 THEN 'image/png'
-                       WHEN 4 THEN 'image/jpeg'
-                       WHEN 5 THEN 'image/jpeg'
-                       ELSE 'image/gif' END AS mime,
-       CAST(width AS INTEGER) AS width,
-       CAST(height AS INTEGER) AS height,
-       CASE doc_id % 7 WHEN 0 THEN 24
-                       WHEN 1 THEN 24
-                       WHEN 2 THEN 8
-                       WHEN 3 THEN 32
-                       WHEN 4 THEN 8
-                       WHEN 5 THEN 24
-                       ELSE 8 END AS bpp,
-       CAST(CASE doc_id % 7
-                 WHEN 0 THEN ((3 * width + 3) // 4) * 4 * height
-                 WHEN 1 THEN (3 * width + 1) * height
-                 WHEN 2 THEN (width + 1) * height
-                 WHEN 3 THEN (4 * width + 1) * height
-                 WHEN 4 THEN width * height
-                 WHEN 5 THEN width * height * 3
-                 ELSE width * height END AS BIGINT) AS data_size
-FROM (
-    SELECT doc_id,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 31 + 1 AS width,
-           coalesce(octet_length(CAST(text AS BLOB)), 0) % 17 + 1 AS height
     FROM documents
 )
 """

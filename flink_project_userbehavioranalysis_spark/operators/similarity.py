@@ -370,7 +370,9 @@ def _unit_rows(vectors):
 
 
 def _nearest_cells(qn, cents, n: int):
-    """(B, n) ids of each unit row's n highest-cosine cells, best first."""
+    """(B, min(n, cells)) ids of each unit row's n highest-cosine cells,
+    best first: a probe wider than the trained cell count takes them
+    all, so callers repeat row ids by ``.shape[1]``, not by n."""
     import numpy as np
 
     return np.argsort(-(qn @ cents.T), axis=1)[:, :n].astype(np.int64)
@@ -413,11 +415,11 @@ def ivf_topk(
             if not len(pdf):
                 continue
             cells = _nearest_cells(_unit_rows(pdf["embedding"].tolist()), cents, n_probe)
-            ids = pdf["vec_id"].to_numpy()
+            ids, width = pdf["vec_id"].to_numpy(), cells.shape[1]
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(ids, n_probe),
-                    "probe_rank": np.tile(np.arange(n_probe), len(ids)),
+                    "vec_id": np.repeat(ids, width),
+                    "probe_rank": np.tile(np.arange(width), len(ids)),
                     "cell": cells.reshape(-1),
                 }
             )
@@ -617,13 +619,13 @@ def _pq_shortlist_topk(
             vn = _unit_rows(pdf["embedding"].tolist())
             cells = _nearest_cells(vn, cents, n_probe)
             lo, hi = _pq_encode(vn, books)
-            ids = pdf["vec_id"].to_numpy()
+            ids, width = pdf["vec_id"].to_numpy(), cells.shape[1]
             yield pd.DataFrame(
                 {
-                    "query_id": np.repeat(ids, n_probe),
+                    "query_id": np.repeat(ids, width),
                     "cell": cells.reshape(-1),
-                    "qlo": np.repeat(lo, n_probe),
-                    "qhi": np.repeat(hi, n_probe),
+                    "qlo": np.repeat(lo, width),
+                    "qhi": np.repeat(hi, width),
                 }
             )
 
@@ -1152,7 +1154,7 @@ def ivf_topk_indexed(
             cells = _nearest_cells(_unit_rows(pdf["embedding"].tolist()), cents, n_probe)
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
-                {"query_id": np.repeat(ids, n_probe), "cell": cells.reshape(-1)}
+                {"query_id": np.repeat(ids, cells.shape[1]), "cell": cells.reshape(-1)}
             )
 
     probes = _query_side(emb, n_queries).mapInPandas(

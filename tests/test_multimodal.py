@@ -5,6 +5,7 @@ roundtrip properties for both formats."""
 
 import pyspark.sql.functions as F
 
+from flink_project_userbehavioranalysis_spark.io import spread
 from flink_project_userbehavioranalysis_spark.operators import multimodal as MM
 from tests.oracle import assert_matches_oracle
 
@@ -327,7 +328,7 @@ def test_audio_features_stereo8_oracle(spark, sf_dir):
 
 
 def test_spread_contract(spark):
-    """_spread's two-sided contract: (a) a split-starved source fans
+    """io.spread's two-sided contract: (a) a split-starved source fans
     out to the cluster parallelism via ONE explicit round-robin
     Exchange; (b) a source that already has >= parallelism partitions
     passes through IDENTICALLY — no Exchange, because at 100 TB the
@@ -336,14 +337,14 @@ def test_spread_contract(spark):
     par = spark.sparkContext.defaultParallelism
 
     starved = spark.range(0, 1000, 1, 1).withColumnRenamed("id", "doc_id")
-    out = MM._spread(starved)
+    out = spread(starved)
     assert out.rdd.getNumPartitions() == par
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "roundrobin" in plan.lower()
     assert sorted(r["doc_id"] for r in out.collect()) == list(range(1000))
 
     plentiful = spark.range(0, 1000, 1, par).withColumnRenamed("id", "doc_id")
-    same = MM._spread(plentiful)
+    same = spread(plentiful)
     assert same is plentiful  # identity, not a rebuilt frame
 
 
@@ -397,3 +398,29 @@ def test_video_frames_mjpeg_oracle(spark, sf_dir):
     df = MM.video_frames_mjpeg(spark, sf_dir)
     assert_matches_oracle(df, MM.video_frames_mjpeg_oracle_sql(), sf_dir)
     assert df.filter(~F.col("max_err_le_4")).count() == 0
+
+
+def test_color_jpeg_restart_intervals_cycle_in_every_zoo():
+    """The color-JPEG slot of the mixed4, mixed6 and mixed7 zoos emits
+    all four restart intervals (no DRI, RSTm every 1, 2 or 3 MCUs) over
+    doc_id < 200: the interval cycles on the row's turn in its slot, so
+    no zoo length pins it to one value."""
+    import struct
+
+    from flink_project_userbehavioranalysis_spark.operators.jpeg_codec import (
+        _walk_segments,
+    )
+
+    def restart_interval(payload):
+        for marker, start, _ln in _walk_segments(payload):
+            if marker == 0xFFDD:
+                return struct.unpack_from(">H", payload, start)[0]
+        return 0
+
+    for zoo in (MM._MIXED4_ZOO, MM._MIXED6_ZOO, MM._MIXED7_ZOO):
+        seen = {
+            restart_interval(MM._encode_row(zoo, d, b"t" * d)[2])
+            for d in range(200)
+            if zoo[d % len(zoo)] == "jpeg_color"
+        }
+        assert seen == {0, 1, 2, 3}, zoo

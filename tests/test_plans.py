@@ -291,11 +291,11 @@ def test_jpeg_roundtrip_is_map_only(spark, sf_dir):
     """The lossy-codec certification is one Arrow-batched map pass: no
     join back to the source (the UDF rebuilds the closed-form row
     vector), no row-at-a-time Python, and only the two needed columns
-    reach the parquet scan. The ONLY Exchange allowed is `_spread`'s
+    reach the parquet scan. The ONLY Exchange allowed is `io.spread_light`'s
     explicit round-robin fan-out of the split-starved local fixture —
     never a hash/range shuffle (no keyed redistribution of payloads),
     and none at all once the input has splits (asserted separately in
-    test_multimodal's _spread contract test)."""
+    test_multimodal's io.spread contract test)."""
     from flink_project_userbehavioranalysis_spark.operators import multimodal as MM
 
     plan = _plan(MM.jpeg_roundtrip(spark, sf_dir))

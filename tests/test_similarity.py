@@ -176,11 +176,12 @@ def test_pq_paths_reject_unpackable_codes(spark, sf_dir, path, limit):
         getattr(S, path)(spark, sf_dir, **limit)
 
 
-def test_pq_topk_corpus_smaller_than_codebook(spark, tmp_path):
-    """A training sample with fewer vectors than ``n_codes`` trains
-    fewer codewords per subspace. The SDC lookup is indexed by the
-    trained codebook's size, so on a 10-vector corpus — all four cells
-    probed, every pair shortlisted — PQ returns the exact top-k."""
+@pytest.mark.parametrize("path", ["pq_topk", "ivf_topk", "ivf_topk_indexed"])
+def test_probe_corpus_smaller_than_cells(spark, tmp_path, path):
+    """A 10-vector corpus trains 10 IVF cells (and fewer PQ codewords
+    than ``n_codes``), so the default probe width 16 exceeds the cell
+    count: every path probes all 10 cells, every pair is a candidate,
+    and each returns the exact top-k."""
     rows = [
         (i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)], "x")
         for i in range(10)
@@ -189,7 +190,8 @@ def test_pq_topk_corpus_smaller_than_codebook(spark, tmp_path):
         rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, label STRING"
     ).write.parquet(str(tmp_path / "embeddings.parquet"))
     sf = str(tmp_path)
-    got = sorted(map(tuple, S.pq_topk(spark, sf, k=3, n_cells=4, n_probe=4).collect()))
+    got = getattr(S, path)(spark, sf, k=3, n_cells=32, n_probe=16)
+    got = sorted(map(tuple, got.collect()))
     assert got and got == sorted(map(tuple, S.knn_topk(spark, sf, k=3).collect()))
 
 
