@@ -85,8 +85,7 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     which AQE never coalesces back down.
 
     (Moved from ``operators.multimodal._spread`` in r12 so the text /
-    similarity / ingest pillars can share it; the multimodal name
-    stays as an alias.)
+    similarity / ingest pillars can share it.)
     """
     if df.isStreaming:
         # micro-batch parallelism is the source's (file-chunk / Kafka

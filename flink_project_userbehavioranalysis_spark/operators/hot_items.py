@@ -34,7 +34,70 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from flink_project_userbehavioranalysis_spark.functions import win_end_s
 from flink_project_userbehavioranalysis_spark.io import load_events
+
+
+def slide_ratio(window: str, slide: str) -> int | None:
+    """window/slide, or None when slide does not divide window — the
+    slide-bucket rollup is exact only when every sliding window is a
+    disjoint union of slide buckets."""
+    import pandas as pd
+
+    win_s, slide_s = (int(pd.Timedelta(t).total_seconds()) for t in (window, slide))
+    return None if win_s % slide_s else win_s // slide_s
+
+
+def slide_buckets(events: DataFrame, slide: str, *keys: str) -> DataFrame:
+    """Stage 1 of the rollup: tumbling slide-grain counts
+    (bucket_end, *keys, bcnt) — each event lands in exactly one row."""
+    return (
+        events.groupBy(F.window("ts", slide).alias("b"), *keys)
+        .agg(F.count("*").alias("bcnt"))
+        .select(F.col("b.end").cast("long").alias("bucket_end"), *keys, "bcnt")
+    )
+
+
+def slide_rollup(
+    buckets: DataFrame, slide: str, ratio: int, *keys: str, out: str = "cnt"
+) -> DataFrame:
+    """Stage 2 of the rollup: explode each aggregated bucket into the
+    ``ratio`` sliding windows it serves and sum bucket counts into
+    (window_end, *keys, out)."""
+    import pandas as pd
+
+    slide_s = int(pd.Timedelta(slide).total_seconds())
+    return (
+        buckets.withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(ratio - 1))))
+        .select(
+            (F.col("bucket_end") + F.col("k") * F.lit(slide_s)).alias("window_end"),
+            *keys,
+            "bcnt",
+        )
+        .groupBy("window_end", *keys)
+        .agg(F.sum("bcnt").alias(out))
+    )
+
+
+def top_n(counts: DataFrame, n: int, key: str = "item_id") -> DataFrame:
+    """Per-window Top-``n`` of (window_end, key, cnt) by cnt desc, ties
+    broken by key asc; rn is a BIGINT rank."""
+    rank = Window.partitionBy("window_end").orderBy(F.desc("cnt"), F.asc(key))
+    return (
+        counts.withColumn("rn", F.row_number().over(rank))
+        .filter(F.col("rn") <= n)
+        .select("window_end", key, "cnt", F.col("rn").cast("long").alias("rn"))
+    )
+
+
+def item_buckets(events: DataFrame, slide: str, event_type: str = "view") -> DataFrame:
+    """THE flagship's bucket frame, shared by ``hot_items`` and its
+    streaming twin: ``event_type`` events with an item, counted per
+    (slide bucket, item)."""
+    items = events.filter(F.col("event_type") == event_type).filter(
+        F.col("item_id").isNotNull()
+    )
+    return slide_buckets(items, slide, "item_id")
 
 
 def hot_items_direct(
@@ -56,16 +119,9 @@ def hot_items_direct(
         .filter(F.col("item_id").isNotNull())
         .groupBy(F.window("ts", window, slide).alias("w"), "item_id")
         .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "item_id", "cnt")
+        .select(win_end_s(), "item_id", "cnt")
     )
-    rank = Window.partitionBy("window_end").orderBy(
-        F.desc("cnt"), F.asc("item_id")
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") <= n)
-        .select("window_end", "item_id", "cnt", F.col("rn").cast("long").alias("rn"))
-    )
+    return top_n(counts, n)
 
 
 def hot_items(
@@ -91,39 +147,13 @@ def hot_items(
     (`hot_items_oracle_sql` expands bucket + j·slide), so the direct
     twin shares this oracle verbatim.
     """
-    import pandas as pd
-
-    win_s = int(pd.Timedelta(window).total_seconds())
-    slide_s = int(pd.Timedelta(slide).total_seconds())
-    if win_s % slide_s:
+    ratio = slide_ratio(window, slide)
+    if ratio is None:
         return hot_items_direct(
             spark, sf_dir, window=window, slide=slide, n=n, event_type=event_type
         )
-    ratio = win_s // slide_s
-    events = load_events(spark, sf_dir)
-    buckets = (
-        events.filter(F.col("event_type") == event_type)
-        .filter(F.col("item_id").isNotNull())
-        .groupBy(F.window("ts", slide).alias("b"), "item_id")
-        .agg(F.count("*").alias("bcnt"))
-        .select(F.col("b.end").cast("long").alias("bucket_end"), "item_id", "bcnt")
-    )
-    counts = (
-        buckets.withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(ratio - 1))))
-        .select(
-            (F.col("bucket_end") + F.col("k") * F.lit(slide_s)).alias("window_end"),
-            "item_id",
-            "bcnt",
-        )
-        .groupBy("window_end", "item_id")
-        .agg(F.sum("bcnt").alias("cnt"))
-    )
-    rank = Window.partitionBy("window_end").orderBy(F.desc("cnt"), F.asc("item_id"))
-    return (
-        counts.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") <= n)
-        .select("window_end", "item_id", "cnt", F.col("rn").cast("long").alias("rn"))
-    )
+    buckets = item_buckets(load_events(spark, sf_dir), slide, event_type)
+    return top_n(slide_rollup(buckets, slide, ratio, "item_id"), n)
 
 
 def hot_items_sql(
@@ -140,8 +170,6 @@ def hot_items_sql(
     is the HOP analog; the plan is identical to the `hot_items_direct`
     DataFrame formulation (same Catalyst pipeline), which is the point:
     the engine's SQL front end is not a separate engine."""
-    from flink_project_userbehavioranalysis_spark.io import load_events
-
     load_events(spark, sf_dir).createOrReplaceTempView("events_norm")
     return spark.sql(
         f"""

@@ -386,6 +386,19 @@ def user_tier_scd2_maintain(
 # ------------------------------------------------------- CDC changelog apply
 
 
+def _cdc_feed(events: DataFrame, *extra: F.Column) -> DataFrame:
+    """The events table as a CDC change feed: each record upserts the
+    user's profile except ``error`` rows, which model DELETEs."""
+    return events.select(
+        "user_id",
+        "ts_ns",
+        "event_id",
+        "value",
+        F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
+        *extra,
+    )
+
+
 def _cdc_compact(changes: DataFrame) -> DataFrame:
     """Last-write-wins compaction of a CDC changelog slice: per key,
     the record with the max (ts_ns, event_id) ordering key wins — a
@@ -433,14 +446,7 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_events(spark, sf_dir)
     maxd = ev.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    feed = ev.select(
-        "user_id",
-        "ts_ns",
-        "event_id",
-        "value",
-        F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-        F.to_date("ts").alias("d"),
-    )
+    feed = _cdc_feed(ev, F.to_date("ts").alias("d"))
     base = _cdc_compact(feed.filter(F.col("d") < F.lit(maxd)))
     delta = _cdc_compact(feed.filter(F.col("d") >= F.lit(maxd)))
     merged = (
@@ -448,7 +454,13 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.max("last").alias("last"), F.sum("n_changes").alias("n_changes"))
     )
-    return merged.filter(F.col("last.op") != "D").select(
+    return _cdc_snapshot(merged)
+
+
+def _cdc_snapshot(state: DataFrame) -> DataFrame:
+    """The final read of a compacted CDC state: tombstoned keys drop
+    out here, and only here."""
+    return state.filter(F.col("last.op") != "D").select(
         "user_id",
         F.col("last.t").alias("last_ts_ns"),
         F.col("last.v").alias("last_value"),

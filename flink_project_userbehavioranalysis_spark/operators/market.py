@@ -36,7 +36,12 @@ def count_by_channel_behavior(spark: SparkSession, sf_dir: str) -> DataFrame:
     the :func:`count_by_channel_report` twin (the ``hot_items_report``
     pattern): machine consumers read cheap fixed-width columns, humans
     read the report."""
-    events = load_events(spark, sf_dir)
+    return channel_counts(load_events(spark, sf_dir))
+
+
+def channel_counts(events: DataFrame) -> DataFrame:
+    """The (window, channel, behavior) count frame shared by
+    :func:`count_by_channel_behavior` and its streaming twin."""
     return (
         events.filter(F.col("event_type") != "error")  # P3 inequality filter (≈ UNINSTALL exclusion)
         .groupBy(
@@ -85,17 +90,28 @@ def ad_clicks_by_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (custkey → nation, region) dim and attached to the fact side with
     an explicit ``F.broadcast`` — the click stream never shuffles for
     the join; the only exchange is the windowed aggregation's."""
-    clicks = load_events(spark, sf_dir).filter(F.col("event_type") == "click")
+    return geo_click_counts(load_events(spark, sf_dir), geo_dim(spark, sf_dir))
+
+
+def geo_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer→nation→region dim as one narrow
+    (c_custkey, nation, region) relation."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
     region = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    dim = (
+    return (
         cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)
         .select("c_custkey", F.col("n_name").alias("nation"), F.col("r_name").alias("region"))
     )
+
+
+def geo_click_counts(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """The click-count frame shared by :func:`ad_clicks_by_geo` and its
+    streaming twin (a stream-static join when ``events`` streams)."""
+    clicks = events.filter(F.col("event_type") == "click")
     return (
         clicks.join(F.broadcast(dim), clicks.user_id == dim.c_custkey)
         .groupBy(F.window("ts", "1 hour").alias("w"), "region", "nation")

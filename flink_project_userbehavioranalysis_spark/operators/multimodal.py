@@ -307,11 +307,11 @@ def decode_png_meta(b: bytes) -> tuple[int, int, int, int]:
     return width, height, bit_depth, color_type
 
 
-def png_scanlines(b: bytes) -> list[bytes]:
-    """Decode every scanline: walk the chunk stream (CRC-verifying
-    each chunk), concatenate IDAT data, inflate, and unfilter row by
-    row. 8-bit non-interlaced grayscale / RGB / RGBA (color types
-    0/2/6, r10) — palette and 16-bit raise."""
+def _png_inflate(b: bytes) -> tuple[int, int, int, bytes]:
+    """Walk the chunk stream (CRC-verifying each chunk), concatenate
+    IDAT data and inflate it. 8-bit non-interlaced grayscale / RGB /
+    RGBA (color types 0/2/6) — palette and 16-bit raise. Returns
+    (width, height, channels, filtered scanline bytes)."""
     import zlib
 
     width, height, bit_depth, color_type = decode_png_meta(b)
@@ -333,8 +333,13 @@ def png_scanlines(b: bytes) -> list[bytes]:
         pos += 12 + ln
         if tag == b"IEND":
             break
-    raw = zlib.decompress(bytes(idat))
-    ch = _PNG_CHANNELS[color_type]
+    return width, height, _PNG_CHANNELS[color_type], zlib.decompress(bytes(idat))
+
+
+def png_scanlines(b: bytes) -> list[bytes]:
+    """Decode every scanline: inflate the CRC-verified IDAT stream
+    (``_png_inflate``) and unfilter row by row."""
+    width, height, ch, raw = _png_inflate(b)
     stride = ch * width
     if len(raw) != height * (stride + 1):
         raise ValueError("IDAT length does not match dimensions")
@@ -561,35 +566,15 @@ def decode_real(payload: bytes, mime: str) -> tuple[int, int, int, int]:
     without a codec here (e.g. mp4) raise at this explicit boundary so
     the implemented-format line is visible to reviewers. Returns
     (width, height, bpp, data_size)."""
-    import zlib
-
     if mime == "image/bmp":
         w, h, bpp, _file_size = decode_bmp_meta(payload)
         return w, h, bpp, ((bpp // 8 * w + 3) // 4) * 4 * h
     if mime == "image/png":
-        w, h, bit_depth, color_type = decode_png_meta(payload)
-        if bit_depth != 8 or color_type not in _PNG_CHANNELS:
-            raise NotImplementedError(
-                "only 8-bit grayscale/RGB/RGBA PNGs are supported"
-            )
-        # data_size measured from the actual inflated IDAT (not the
-        # header): a truncated stream is a decode error, not a guess
-        idat = bytearray()
-        pos = 8
-        while pos < len(payload):
-            (ln,) = struct.unpack_from(">I", payload, pos)
-            tag = payload[pos + 4 : pos + 8]
-            if tag == b"IDAT":
-                idat += payload[pos + 8 : pos + 8 + ln]
-            pos += 12 + ln
-            if tag == b"IEND":
-                break
-        return (
-            w,
-            h,
-            _PNG_CHANNELS[color_type] * bit_depth,
-            len(zlib.decompress(bytes(idat))),
-        )
+        # data_size measured from the actual inflated, CRC-verified
+        # IDAT (not the header): a truncated or corrupt stream is a
+        # decode error, not a guess
+        w, h, ch, raw = _png_inflate(payload)
+        return w, h, 8 * ch, len(raw)
     if mime == "image/jpeg":
         # data_size measured from the ACTUAL full decode (entropy +
         # IDCT), not the header — a corrupt scan is a decode error

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.functions import win_end_s
 from flink_project_userbehavioranalysis_spark.io import load_events
+from flink_project_userbehavioranalysis_spark.operators.hot_items import top_n
 
 
 def pv_rollup_frame(events: DataFrame, event_type: str = "view", extra_keys=()) -> DataFrame:
@@ -160,12 +161,7 @@ def hot_pages_topn(
         .agg(F.count("*").alias("cnt"))
         .select(win_end_s(), F.col("item_id").alias("page_id"), "cnt")
     )
-    rank = Window.partitionBy("window_end").orderBy(F.desc("cnt"), F.asc("page_id"))
-    return (
-        counts.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") <= n)
-        .select("window_end", "page_id", "cnt", F.col("rn").cast("long").alias("rn"))
-    )
+    return top_n(counts, n, key="page_id")
 
 
 # ---------------------------------------------------------------- oracle SQL
@@ -242,9 +238,13 @@ def pv_anomaly(
         .agg(F.count("*").alias("cnt"))
         .select("item_id", F.col("w.end").cast("long").alias("hour_s"), "cnt")
     )
-    trail = (
-        Window.partitionBy("item_id").orderBy("hour_s").rowsBetween(-lookback, -1)
-    )
+    return spike_flags(hourly, lookback, sigmas)
+
+
+def spike_flags(hourly: DataFrame, lookback: int, sigmas: float) -> DataFrame:
+    """Stage 2 of :func:`pv_anomaly` and its streaming twin: the
+    trailing z-score over (item_id, hour_s, cnt) buckets."""
+    trail = Window.partitionBy("item_id").orderBy("hour_s").rowsBetween(-lookback, -1)
     stats = (
         hourly.withColumn("n", F.count("cnt").over(trail))
         .withColumn("s", F.sum("cnt").over(trail))

@@ -55,9 +55,11 @@ _OBS_SQL = """obs AS (
 )"""
 
 
-def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir)
-    return ev.filter(F.col("value").isNotNull()).select(
+def _obs(events: DataFrame, *keep: str) -> DataFrame:
+    """The exact-cents observation projection; ``keep`` passes extra
+    event columns through in front (the streaming twin keeps ``ts``)."""
+    return events.filter(F.col("value").isNotNull()).select(
+        *keep,
         "event_type",
         F.unix_micros("ts").alias("t_us"),
         "event_id",
@@ -77,18 +79,21 @@ def ts_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event type: open/close picked by the unique
     (t_us, event_id) order via lexicographic struct min/max — ONE
     partial-agg shuffle, no window pass, no per-bucket sort."""
-    obs = _with_hour(_obs(spark, sf_dir))
+    obs = _with_hour(_obs(load_events(spark, sf_dir)))
+    return ohlc_bars(obs, "event_type", "hour_start")
+
+
+def ohlc_bars(obs: DataFrame, *keys) -> DataFrame:
+    """The six OHLC aggregates of :func:`ts_ohlc_hourly` and its
+    streaming twin, grouped by ``keys`` over an ``_obs`` frame."""
     ordered = F.struct("t_us", "event_id", "cents")
-    return (
-        obs.groupBy("event_type", "hour_start")
-        .agg(
-            F.min(ordered).getField("cents").alias("open_cents"),
-            F.max(ordered).getField("cents").alias("close_cents"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count("*").alias("n_events"),
-            F.sum("cents").alias("sum_cents"),
-        )
+    return obs.groupBy(*keys).agg(
+        F.min(ordered).getField("cents").alias("open_cents"),
+        F.max(ordered).getField("cents").alias("close_cents"),
+        F.max("cents").alias("high_cents"),
+        F.min("cents").alias("low_cents"),
+        F.count("*").alias("n_events"),
+        F.sum("cents").alias("sum_cents"),
     )
 
 
@@ -156,7 +161,7 @@ def ts_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense hourly grid with last-observation-carried-forward fill.
     Output: (event_type, hour_start, obs 0/1, cents — the carried
     value, NULL before the type's first observation)."""
-    hourly = _hourly_last(_obs(spark, sf_dir))
+    hourly = _hourly_last(_obs(load_events(spark, sf_dir)))
     grid = _dense_grid(hourly)
     j = grid.join(hourly, ["event_type", "hour_start"], "left")
     w = (
@@ -221,7 +226,7 @@ def ts_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_prev)) via the overflow-free split q·1000 + (r·1000) div den.
     Grid points outside the observed bracket emit NULL (span_us shows
     the bracket width where defined)."""
-    obs = _obs(spark, sf_dir)
+    obs = _obs(load_events(spark, sf_dir))
     # prev candidates: last observation per ceil-hour bucket. An obs at
     # exactly H·3600s has pb = H (ties with grid point H ⇒ eligible);
     # an obs strictly inside hour H has pb = H+1 (first eligible grid

@@ -8,6 +8,14 @@ batch DataFrame — so the driver's DuckDB oracle for the batch operator
 is also the oracle for the streaming one. That is the strongest
 correctness statement a finite stream can make: streaming ≡ batch ≡
 oracle on identical input.
+
+The rule that keeps the twins honest: a twin CALLS its batch
+operator's frame function (``f(events) -> DataFrame`` in the batch
+module, e.g. ``network_flow.pv_rollup_frame``, ``market.channel_counts``,
+``maintenance._cdc_compact``) and restates only what streaming forces
+on it — the ``window()`` column whose event-time metadata drives
+watermark eviction, and the sink boundary (``run_update_merge`` /
+``run_append_memory``). The aggregation itself is written once.
 """
 
 from __future__ import annotations
@@ -15,11 +23,75 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.functions import win_end_s
+from flink_project_userbehavioranalysis_spark.io import load_events, load_table
+from flink_project_userbehavioranalysis_spark.operators.audio_codecs import (
+    mulaw_features_projection,
+)
+from flink_project_userbehavioranalysis_spark.operators.corpus_quality import (
+    BLOCKLIST_TERMS,
+    gopher_quality_projection,
+)
+from flink_project_userbehavioranalysis_spark.operators.expectations import (
+    EVENT_TYPES,
+    _viol,
+)
+from flink_project_userbehavioranalysis_spark.operators.hot_items import (
+    item_buckets,
+    slide_buckets,
+    slide_ratio,
+    slide_rollup,
+    top_n,
+)
+from flink_project_userbehavioranalysis_spark.operators.ingest import (
+    INGEST_DEFAULTS,
+    corpus_fingerprints,
+    ingest_prefix_projection,
+)
+from flink_project_userbehavioranalysis_spark.operators.llm_text import (
+    _dup_gram_positions,
+    _merge_islands,
+    chunk_projection,
+    pii_scrub_projection,
+)
+from flink_project_userbehavioranalysis_spark.operators.maintenance import (
+    _cdc_compact,
+    _cdc_feed,
+    _cdc_snapshot,
+)
+from flink_project_userbehavioranalysis_spark.operators.market import (
+    channel_counts,
+    geo_click_counts,
+    geo_dim,
+)
+from flink_project_userbehavioranalysis_spark.operators.multimodal import (
+    decode_meta_projection,
+)
+from flink_project_userbehavioranalysis_spark.operators.network_flow import (
+    ddsketch_bucket,
+    ddsketch_quantiles_from_grid,
+    pv_rollup_frame,
+    spike_flags,
+)
+from flink_project_userbehavioranalysis_spark.operators.search import (
+    _query_frames,
+    _rank_query_frame,
+)
+from flink_project_userbehavioranalysis_spark.operators.similarity import (
+    _ANN_SPLIT_MOD,
+    _encode_with_models,
+    _load_ann_model,
+    build_ann_index_split,
+)
+from flink_project_userbehavioranalysis_spark.operators.timeseries import _obs, ohlc_bars
 from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 from flink_project_userbehavioranalysis_spark.streaming.replay import (
+    _NAME_SEQ,
+    SENTINEL_TYPE,
     events_stream,
+    run_append_memory,
     run_update_merge,
+    stream_shuffle_partitions,
     write_ordered_chunks,
 )
 
@@ -31,12 +103,7 @@ def pv_hourly_stream(
     (reference PageView.scala over a live stream [U]). Late chunks
     re-emit corrected counts; the update fold keeps the latest."""
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    counts = (
-        ev.filter(F.col("event_type") == event_type)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("pv"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "pv")
-    )
+    counts = pv_rollup_frame(ev, event_type).select(win_end_s(), "pv")
     return run_update_merge(counts, ["window_end"], spark)
 
 
@@ -50,7 +117,7 @@ def uv_hourly_dedup_counts(ev: DataFrame) -> DataFrame:
     return (
         dedup.groupBy("w")
         .agg(F.count("*").alias("uv"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "uv")
+        .select(win_end_s(), "uv")
     )
 
 
@@ -108,37 +175,12 @@ def hot_items_stream(
     the batch compaction stage (explode aggregated buckets into the
     12 windows each serves, sum) — exact, since slide divides window.
     """
-    import pandas as pd
-
-    win_s = int(pd.Timedelta(window).total_seconds())
-    slide_s = int(pd.Timedelta(slide).total_seconds())
-    if win_s % slide_s:
+    ratio = slide_ratio(window, slide)
+    if ratio is None:
         raise ValueError("streaming rollup requires slide to divide window")
-    ratio = win_s // slide_s
-    ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    buckets = (
-        ev.filter((F.col("event_type") == event_type) & F.col("item_id").isNotNull())
-        .groupBy(F.window("ts", slide).alias("b"), "item_id")
-        .agg(F.count("*").alias("bcnt"))
-        .select(F.col("b.end").cast("long").alias("bucket_end"), "item_id", "bcnt")
-    )
+    buckets = item_buckets(events_stream(spark, sf_dir, n_chunks=n_chunks), slide, event_type)
     final_buckets = run_update_merge(buckets, ["bucket_end", "item_id"], spark)
-    counts = (
-        final_buckets.withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(ratio - 1))))
-        .select(
-            (F.col("bucket_end") + F.col("k") * F.lit(slide_s)).alias("window_end"),
-            "item_id",
-            "bcnt",
-        )
-        .groupBy("window_end", "item_id")
-        .agg(F.sum("bcnt").alias("cnt"))
-    )
-    rank = Window.partitionBy("window_end").orderBy(F.desc("cnt"), F.asc("item_id"))
-    return (
-        counts.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") <= n)
-        .select("window_end", "item_id", "cnt", F.col("rn").cast("long").alias("rn"))
-    )
+    return top_n(slide_rollup(final_buckets, slide, ratio, "item_id"), n)
 
 
 def count_by_channel_stream(
@@ -147,26 +189,8 @@ def count_by_channel_stream(
     """A7 streaming — tumbling 1 h counts keyed by (channel, behavior)
     in update mode (reference AppMarketingByChannel.scala ::
     MarketingCountByChannel over a live stream [U]). Same window/agg
-    logic as the batch twin, so the batch oracle is the oracle."""
-    from flink_project_userbehavioranalysis_spark.operators.market import CHANNELS
-
-    ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    counts = (
-        ev.filter(F.col("event_type") != "error")
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            (F.col("user_id") % CHANNELS).alias("channel"),
-            F.col("event_type").alias("behavior"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            F.col("w.end").cast("long").alias("window_end"),
-            "channel",
-            "behavior",
-            "cnt",
-        )
-    )
+    frame as the batch twin, so the batch oracle is the oracle."""
+    counts = channel_counts(events_stream(spark, sf_dir, n_chunks=n_chunks))
     return run_update_merge(
         counts, ["window_start", "window_end", "channel", "behavior"], spark
     )
@@ -180,35 +204,8 @@ def ad_clicks_by_geo_stream(
     Spark re-plans the static side, so dim updates between batches are
     picked up — the streaming-enrichment pattern at 100 TB), then the
     windowed count aggregates in update mode. Batch oracle applies."""
-    from flink_project_userbehavioranalysis_spark.io import load_table
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    region = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    dim = (
-        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
-        .join(region, nation.n_regionkey == region.r_regionkey)
-        .select(
-            "c_custkey",
-            F.col("n_name").alias("nation"),
-            F.col("r_name").alias("region"),
-        )
-    )
-    clicks = ev.filter(F.col("event_type") == "click")
-    counts = (
-        clicks.join(F.broadcast(dim), clicks.user_id == dim.c_custkey)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "region", "nation")
-        .agg(F.count("*").alias("clicks"))
-        .select(
-            F.col("w.end").cast("long").alias("window_end"),
-            "region",
-            "nation",
-            "clicks",
-        )
-    )
+    counts = geo_click_counts(ev, geo_dim(spark, sf_dir))
     return run_update_merge(counts, ["window_end", "region", "nation"], spark)
 
 
@@ -221,24 +218,11 @@ def marketing_total_stream(
     at tumbling slide grain (15 min buckets — each event updates ONE
     state row instead of four) and the four-bucket sliding sum is
     reconstructed in the batch compaction stage."""
-    slide_s, ratio = 900, 4  # 1 h window / 15 min slide
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    buckets = (
-        ev.filter(F.col("event_type") != "error")
-        .groupBy(F.window("ts", "15 minutes").alias("b"))
-        .agg(F.count("*").alias("bcnt"))
-        .select(F.col("b.end").cast("long").alias("bucket_end"), "bcnt")
-    )
+    buckets = slide_buckets(ev.filter(F.col("event_type") != "error"), "15 minutes")
     final_buckets = run_update_merge(buckets, ["bucket_end"], spark)
-    return (
-        final_buckets.withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(ratio - 1))))
-        .select(
-            (F.col("bucket_end") + F.col("k") * F.lit(slide_s)).alias("window_end"),
-            "bcnt",
-        )
-        .groupBy("window_end")
-        .agg(F.sum("bcnt").alias("total"))
-    )
+    ratio = slide_ratio("1 hour", "15 minutes")
+    return slide_rollup(final_buckets, "15 minutes", ratio, out="total")
 
 
 def uv_approx_stream(
@@ -255,7 +239,7 @@ def uv_approx_stream(
         ev.filter(F.col("event_type") == event_type)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.approx_count_distinct("user_id").alias("uv_est"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "uv_est")
+        .select(win_end_s(), "uv_est")
     )
     return run_update_merge(counts, ["window_end"], spark)
 
@@ -270,10 +254,6 @@ def user_sessions_stream(
     (replay.py) advances the final watermark so every real session
     flushes — its own (user −1) session is filtered out. Batch oracle
     applies: streaming ≡ batch ≡ oracle."""
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, sentinel=True)
     sess = (
         ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -302,10 +282,6 @@ def _session_collect_stream(
     State = triples per open session — bounded by events-per-session ×
     sessions in the watermark horizon, the inherent floor for
     order-aware session analytics."""
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, sentinel=True)
     sess = (
         ev.groupBy(F.session_window("ts", f"{gap_s} seconds").alias("w"), "user_id")
@@ -429,14 +405,9 @@ def pv_anomaly_stream(
     unsupported by design in Structured Streaming.
 
     Exact oracle: append-mode hourly buckets ≡ the batch hourly agg on
-    finite input, and stage 2 is the identical expression — so
-    ``pv_anomaly_oracle_sql`` applies unchanged."""
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
-    from flink_project_userbehavioranalysis_spark.streaming.replay import SENTINEL_TYPE
-
+    finite input, and stage 2 is the batch operator's own
+    ``network_flow.spike_flags`` — so ``pv_anomaly_oracle_sql`` applies
+    unchanged."""
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, sentinel=True)
     # The sentinel row MUST survive this filter: Catalyst pushes a
     # deterministic predicate below the EventTimeWatermark node into
@@ -460,20 +431,7 @@ def pv_anomaly_stream(
     buckets = run_append_memory(hourly, name, spark).filter(
         F.col("item_id").isNotNull()
     )
-    trail = Window.partitionBy("item_id").orderBy("hour_s").rowsBetween(-lookback, -1)
-    stats = (
-        buckets.withColumn("n", F.count("cnt").over(trail))
-        .withColumn("s", F.sum("cnt").over(trail))
-        .withColumn("ss", F.sum(F.col("cnt") * F.col("cnt")).over(trail))
-    )
-    mean = F.col("s").cast("double") / F.col("n")
-    var = (
-        F.col("ss").cast("double") - F.col("s").cast("double") * F.col("s") / F.col("n")
-    ) / F.col("n")
-    thresh = mean + F.lit(float(sigmas)) * F.sqrt(F.greatest(var, F.lit(0.0)))
-    return stats.filter((F.col("n") == lookback) & (F.col("cnt") > thresh)).select(
-        "item_id", "hour_s", "cnt"
-    )
+    return spike_flags(buckets, lookback, sigmas)
 
 
 def dedup_events_stream(
@@ -494,8 +452,6 @@ def dedup_events_stream(
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, watermark=watermark)
     dedup = ev.dropDuplicatesWithinWatermark(keys or ["user_id", "event_type", "item_id"])
     out = dedup.select("event_id", "user_id", "event_type", "item_id")
-    from flink_project_userbehavioranalysis_spark.streaming.replay import run_append_memory
-
     return run_append_memory(out, "dedup_events_stream", spark)
 
 
@@ -538,17 +494,10 @@ def pv_hourly_late_observed(
     ev = events_stream(
         spark, sf_dir, n_chunks=n_chunks, watermark=watermark, scramble=True
     )
-    counts = (
-        ev.filter(F.col("event_type") == event_type)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("pv"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "pv")
-    )
-    from flink_project_userbehavioranalysis_spark.streaming import replay as _r
-
-    _r._NAME_SEQ[0] += 1
-    name = f"pv_late_{_r._NAME_SEQ[0]}"
-    with _r.stream_shuffle_partitions(spark):
+    counts = pv_rollup_frame(ev, event_type).select(win_end_s(), "pv")
+    _NAME_SEQ[0] += 1
+    name = f"pv_late_{_NAME_SEQ[0]}"
+    with stream_shuffle_partitions(spark):
         q = (
             counts.writeStream.outputMode("update")
             .format("memory")
@@ -577,20 +526,11 @@ def pv_hourly_append(
     asserts emitted ≡ batch result strictly below the final watermark
     and nothing else. Returns (result_df, final_watermark_epoch_s).
     """
-    from flink_project_userbehavioranalysis_spark.streaming.replay import run_append_memory
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, watermark=watermark)
-    counts = (
-        ev.filter(F.col("event_type") == event_type)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("pv"))
-        .select(F.col("w.end").cast("long").alias("window_end"), "pv")
-    )
+    counts = pv_rollup_frame(ev, event_type).select(win_end_s(), "pv")
     name = f"pv_append_{abs(hash((sf_dir, n_chunks)))}"
     out = run_append_memory(counts, name, spark)
     # final watermark = max event time - delay (computed batch-side)
-    from flink_project_userbehavioranalysis_spark.io import load_events
-
     max_ts = load_events(spark, sf_dir).agg(F.max("ts").cast("long")).collect()[0][0]
     delay_s = 600 if watermark == "10 minutes" else 0
     return out, max_ts - delay_s
@@ -604,13 +544,6 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     map-only continuous pipeline whose throughput is the parquet/Kafka
     scan rate. Shares ``pii_scrub_projection`` with the batch operator,
     so the batch oracle is the streaming oracle."""
-    from flink_project_userbehavioranalysis_spark.operators.llm_text import (
-        pii_scrub_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, watermark=None)
     return run_append_memory(pii_scrub_projection(ev), "pii_scrub_stream", spark)
 
@@ -679,11 +612,6 @@ def dedup_incremental_stream(
 
     Output: (doc_id, set_md5) of accepted batch docs.
     """
-    from flink_project_userbehavioranalysis_spark.io import load_table
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     fp = F.md5(
         F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), " ").cast(
             "binary"
@@ -719,13 +647,6 @@ def gopher_quality_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -
     bit-identical to the batch operator, so the batch oracle is the
     streaming oracle.
     """
-    from flink_project_userbehavioranalysis_spark.operators.corpus_quality import (
-        gopher_quality_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
     return run_append_memory(
         gopher_quality_projection(docs), "gopher_quality_stream", spark
@@ -738,13 +659,6 @@ def chunk_documents_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) 
     same streaming family as ``pii_scrub_stream``/
     ``gopher_quality_stream``). Shares ``llm_text.chunk_projection``,
     so the batch oracle is the streaming oracle."""
-    from flink_project_userbehavioranalysis_spark.operators.llm_text import (
-        chunk_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
     return run_append_memory(
         chunk_projection(docs.select("doc_id", "text")),
@@ -763,13 +677,6 @@ def decode_meta_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> D
     state, no watermark — the ``pii_scrub_stream`` family). Shares
     ``decode_meta_projection`` with the batch operator, so the batch
     hash oracle is the streaming oracle."""
-    from flink_project_userbehavioranalysis_spark.operators.multimodal import (
-        decode_meta_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
     return run_append_memory(
         decode_meta_projection(docs.select("doc_id", "text")),
@@ -789,13 +696,6 @@ def audio_features_mulaw_stream(
     append-mode projection at scan rate (zero state, no watermark).
     Shares ``mulaw_features_projection`` with the batch operator, so
     the batch hash oracle is the streaming oracle."""
-    from flink_project_userbehavioranalysis_spark.operators.audio_codecs import (
-        mulaw_features_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
     return run_append_memory(
         mulaw_features_projection(docs.select("doc_id", "text")),
@@ -826,24 +726,15 @@ def expectations_stream(
     map-only projection AFTER the agg; update-mode merge keyed on
     (window_end, check). Late events re-open only their own hour.
     """
-    from flink_project_userbehavioranalysis_spark.operators.expectations import (
-        EVENT_TYPES,
-    )
-
-    def viol(cond) -> F.Column:
-        return F.coalesce(
-            F.sum(F.when(F.coalesce(cond, F.lit(True)), 1).otherwise(0)), F.lit(0)
-        ).cast("long")
-
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.count("*").cast("long").alias("n_checked"),
-        viol(~F.col("event_type").isin(*EVENT_TYPES)).alias("v_type"),
-        viol(~(F.col("value") > 0)).alias("v_value_pos"),
-        viol(F.col("value") > 400).alias("v_value_cap"),
+        _viol(~F.col("event_type").isin(*EVENT_TYPES)).alias("v_type"),
+        _viol(~(F.col("value") > 0)).alias("v_value_pos"),
+        _viol(F.col("value") > 400).alias("v_value_cap"),
     )
     rows = agg.select(
-        F.col("w.end").cast("long").alias("window_end"),
+        win_end_s(),
         "n_checked",
         F.expr(
             "stack(3,"
@@ -880,10 +771,6 @@ def hashed_features_stream(
     import hashlib
 
     import pandas as pd
-
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
 
     d = int(dims)
 
@@ -934,11 +821,6 @@ def dup_span_incremental_stream(
 
     Output: (doc_id, span_start, span_end, n_words_dup), batch docs only.
     """
-    from flink_project_userbehavioranalysis_spark.io import load_table
-    from flink_project_userbehavioranalysis_spark.operators.llm_text import (
-        _dup_gram_positions,
-        _merge_islands,
-    )
 
     index = (
         _dup_gram_positions(
@@ -1003,31 +885,8 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     streaming ≡ batch ≡ oracle.
     """
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks, watermark=None)
-    feed = ev.select(
-        "user_id",
-        "ts_ns",
-        "event_id",
-        "value",
-        F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-    )
-    agg = feed.groupBy("user_id").agg(
-        F.max(
-            F.struct(
-                F.col("ts_ns").alias("t"),
-                F.col("event_id").alias("e"),
-                F.col("op").alias("op"),
-                F.col("value").alias("v"),
-            )
-        ).alias("last"),
-        F.count("*").alias("n_changes"),
-    )
-    state = run_update_merge(agg, ["user_id"], spark)
-    return state.filter(F.col("last.op") != "D").select(
-        "user_id",
-        F.col("last.t").alias("last_ts_ns"),
-        F.col("last.v").alias("last_value"),
-        F.col("n_changes").cast("long").alias("n_changes"),
-    )
+    state = run_update_merge(_cdc_compact(_cdc_feed(ev)), ["user_id"], spark)
+    return _cdc_snapshot(state)
 
 
 def term_blocklist_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
@@ -1039,13 +898,6 @@ def term_blocklist_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -
     is value-identical to the batch operator, so the batch oracle is
     the streaming oracle.
     """
-    from flink_project_userbehavioranalysis_spark.operators.corpus_quality import (
-        BLOCKLIST_TERMS,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
     terms = F.array(*[F.lit(t) for t in BLOCKLIST_TERMS])
     n_blocked = F.size(
@@ -1057,6 +909,20 @@ def term_blocklist_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -
         (n_blocked == 0).alias("keep"),
     )
     return run_append_memory(out, "term_blocklist_stream", spark)
+
+
+def _doc_term_pairs() -> F.Column:
+    """Row-local (term, tf) pairs of a doc's ``text``: distinct non-empty
+    tokens, each with its in-doc count (array HOFs, no explode→groupBy
+    pass — a stream allows one aggregation per query)."""
+    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    return F.transform(
+        F.array_distinct(toks),
+        lambda t: F.struct(
+            t.alias("term"),
+            F.size(F.filter(toks, lambda x: x == t)).cast("long").alias("tf"),
+        ),
+    )
 
 
 def term_stats_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
@@ -1077,17 +943,9 @@ def term_stats_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Da
     replays ALL docs, so the finite replay is hash-oracled against the
     batch REBUILD oracle: streaming ≡ maintained ≡ rebuilt."""
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    pairs = F.transform(
-        F.array_distinct(toks),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(toks, lambda x: x == t)).cast("long").alias("tf"),
-        ),
-    )
     dic = (
         docs.filter(F.col("text").isNotNull())
-        .select(F.explode(pairs).alias("p"))
+        .select(F.explode(_doc_term_pairs()).alias("p"))
         .select("p.term", "p.tf")
         .groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
@@ -1115,29 +973,13 @@ def fts_topk_stream_maintained(
     tokens, so N stays exact). The feed replays ALL docs, so the batch
     REBUILD oracle applies at full hash strength:
     streaming-maintained ≡ rebuilt (fts_topk_oracle_sql)."""
-    from flink_project_userbehavioranalysis_spark.operators.search import (
-        _query_frames,
-        _rank_query_frame,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     docs = docs_stream(spark, sf_dir, n_chunks=n_chunks)
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    pairs = F.transform(
-        F.array_distinct(toks),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(toks, lambda x: x == t)).cast("long").alias("tf"),
-        ),
-    )
     marker = F.array(
         F.struct(F.lit("").alias("term"), F.lit(0).cast("long").alias("tf"))
     )
     rows = (
         docs.filter(F.col("text").isNotNull())
-        .select("doc_id", F.explode(F.concat(pairs, marker)).alias("p"))
+        .select("doc_id", F.explode(F.concat(_doc_term_pairs(), marker)).alias("p"))
         .select("doc_id", "p.term", "p.tf")
     )
     maintained = run_append_memory(rows, "fts_postings_stream", spark)
@@ -1180,15 +1022,6 @@ def ingest_accept_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) ->
     identical; stream 'accept' ⟺ the batch pipeline judged the doc at
     a downstream stage or accepted it).
     """
-    from flink_project_userbehavioranalysis_spark.operators.ingest import (
-        INGEST_DEFAULTS,
-        corpus_fingerprints,
-        ingest_prefix_projection,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     split_id = INGEST_DEFAULTS["split_id"]
     corpus_fp = corpus_fingerprints(spark, sf_dir, split_id)
     st = docs_stream(spark, sf_dir, min_doc_id=split_id, n_chunks=n_chunks)
@@ -1211,14 +1044,21 @@ def value_hist_daily_stream(
     days-in-horizon × types × buckets, watermark-evicted), never raw
     rows — the at-ingest form of the summary's 100 TB story: raw
     events are seen once, only grid cells persist."""
+    return _daily_grid_stream(
+        spark, sf_dir, F.floor(F.col("value") * bin_inv), n_chunks
+    )
+
+
+def _daily_grid_stream(
+    spark: SparkSession, sf_dir: str, bucket: F.Column, n_chunks: int
+) -> DataFrame:
+    """The maintained (day, event_type, bucket, cnt) value grid:
+    watermarked 1-day windows keyed by (window, event_type, ``bucket``)
+    over non-null values, folded by the changelog-MERGE sink."""
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
     grid = (
         ev.filter(F.col("value").isNotNull())
-        .groupBy(
-            F.window("ts", "1 day").alias("w"),
-            "event_type",
-            F.floor(F.col("value") * bin_inv).alias("bucket"),
-        )
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type", bucket.alias("bucket"))
         .agg(F.count("*").alias("cnt"))
         .select(
             F.col("w.start").cast("date").cast("string").alias("day"),
@@ -1248,29 +1088,11 @@ def value_percentiles_ddsketch_stream(
     reason as the batch entry; the exact stream≡batch equality is the
     stronger check and lives in pytest. State is the KB-scale grid,
     never raw rows."""
-    from flink_project_userbehavioranalysis_spark.operators.network_flow import (
-        ddsketch_bucket,
-        ddsketch_quantiles_from_grid,
-    )
 
     gamma = (1.0 + alpha) / (1.0 - alpha)
-    ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    grid = (
-        ev.filter(F.col("value").isNotNull())
-        .groupBy(
-            F.window("ts", "1 day").alias("w"),
-            "event_type",
-            ddsketch_bucket(F.col("value"), gamma).alias("bucket"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("w.start").cast("date").cast("string").alias("day"),
-            "event_type",
-            "bucket",
-            "cnt",
-        )
+    state = _daily_grid_stream(
+        spark, sf_dir, ddsketch_bucket(F.col("value"), gamma), n_chunks
     )
-    state = run_update_merge(grid, ["day", "event_type", "bucket"], spark)
     merged = state.groupBy("event_type", "bucket").agg(F.sum("cnt").alias("cnt"))
     return ddsketch_quantiles_from_grid(merged, gamma)
 
@@ -1286,9 +1108,6 @@ def embeddings_stream(
     maxFilesPerTrigger=1). ``only_overlay`` replays just the
     maintained-ANN lifecycle's ingest batch (vec_id % 5 = 0) — the
     vectors whose at-ingest encode the streaming twin maintains."""
-    from flink_project_userbehavioranalysis_spark.operators.similarity import (
-        _ANN_SPLIT_MOD,
-    )
 
     def build() -> str:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1328,15 +1147,6 @@ def ann_encode_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Da
 
     Output: (vec_id, cell, lo, hi).
     """
-    from flink_project_userbehavioranalysis_spark.operators.similarity import (
-        _encode_with_models,
-        _load_ann_model,
-        build_ann_index_split,
-    )
-    from flink_project_userbehavioranalysis_spark.streaming.replay import (
-        run_append_memory,
-    )
-
     base, _overlay = build_ann_index_split(spark, sf_dir)
     cents, books = _load_ann_model(spark, base)
     feed = embeddings_stream(spark, sf_dir, only_overlay=True, n_chunks=n_chunks)
@@ -1356,34 +1166,9 @@ def ts_ohlc_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataF
     latest. Deterministic integers end to end, so the finite replay is
     hash-oracled against the BATCH oracle (streaming ≡ batch ≡ oracle).
     """
-    ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    obs = ev.filter(F.col("value").isNotNull()).select(
-        "ts",
-        "event_type",
-        F.unix_micros("ts").alias("t_us"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    ordered = F.struct("t_us", "event_id", "cents")
-    bars = (
-        obs.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.min(ordered).getField("cents").alias("open_cents"),
-            F.max(ordered).getField("cents").alias("close_cents"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count("*").alias("n_events"),
-            F.sum("cents").alias("sum_cents"),
-        )
-        .select(
-            "event_type",
-            F.col("w.start").cast("long").alias("hour_start"),
-            "open_cents",
-            "close_cents",
-            "high_cents",
-            "low_cents",
-            "n_events",
-            "sum_cents",
-        )
+    obs = _obs(events_stream(spark, sf_dir, n_chunks=n_chunks), "ts")
+    bars = ohlc_bars(obs, F.window("ts", "1 hour").alias("w"), "event_type")
+    bars = bars.select(
+        "event_type", F.col("w.start").cast("long").alias("hour_start"), *bars.columns[2:]
     )
     return run_update_merge(bars, ["event_type", "hour_start"], spark)

@@ -3,6 +3,8 @@ ones (the mixed BMP/PNG decode path included — real header parses, a
 CRC-verified chunk walk, and per-row PNG unfiltering), plus codec
 roundtrip properties for both formats."""
 
+import struct
+
 import pyspark.sql.functions as F
 
 from flink_project_userbehavioranalysis_spark.io import spread
@@ -114,6 +116,25 @@ def test_png_codec_roundtrip_properties():
     tampered[20] ^= 0x01  # flip a bit inside IHDR data → CRC mismatch
     with pytest.raises(ValueError):
         MM.decode_png_meta(bytes(tampered))
+
+
+def test_png_idat_crc_checked_by_every_decoder():
+    """A flipped bit in the IDAT chunk's CRC is rejected by both PNG
+    decode paths — the scanline decoder and the ``decode_real`` size
+    probe share one CRC-verifying chunk walk."""
+    import pytest
+
+    good = MM.encode_png(b"hello world")
+    assert MM.decode_real(good, "image/png") == (12, 12, 24, 444)
+    idat = 8 + 12 + 13  # signature + the IHDR chunk
+    assert good[idat + 4 : idat + 8] == b"IDAT"
+    (ln,) = struct.unpack_from(">I", good, idat)
+    tampered = bytearray(good)
+    tampered[idat + 8 + ln] ^= 0x01  # first byte of the IDAT CRC
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        MM.png_scanlines(bytes(tampered))
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        MM.decode_real(bytes(tampered), "image/png")
 
 
 def test_png_filter_unfilter_random_content():

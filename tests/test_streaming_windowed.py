@@ -214,17 +214,19 @@ def test_pv_append_mode_watermark_semantics(spark, sf_dir):
 
 
 def test_new_streaming_twins_equal_batch(spark, sf_dir):
-    """count_by_channel / marketing_total / geo / session streaming
-    twins each equal their batch operator row-for-row on finite
-    input (their oracle match is covered by the driver gate)."""
+    """count_by_channel / marketing_total / geo / session / OHLC
+    streaming twins each equal their batch operator row-for-row on
+    finite input (each also has its registered oracle)."""
     from flink_project_userbehavioranalysis_spark.operators import market as M
     from flink_project_userbehavioranalysis_spark.operators import relational as R
+    from flink_project_userbehavioranalysis_spark.operators import timeseries as T
 
     pairs = [
         (W.count_by_channel_stream, M.count_by_channel_behavior),
         (W.marketing_total_stream, M.marketing_total),
         (W.ad_clicks_by_geo_stream, M.ad_clicks_by_geo),
         (W.user_sessions_stream, R.user_sessions),
+        (W.ts_ohlc_stream, T.ts_ohlc_hourly),
     ]
     for stream_fn, batch_fn in pairs:
         got = sorted(tuple(r) for r in stream_fn(spark, sf_dir).collect())

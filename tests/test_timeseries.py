@@ -7,6 +7,7 @@ from fractions import Fraction
 
 import pyspark.sql.functions as F
 
+from flink_project_userbehavioranalysis_spark.io import load_events
 from flink_project_userbehavioranalysis_spark.operators import timeseries as T
 from flink_project_userbehavioranalysis_spark.streaming.windowed import ts_ohlc_stream
 from tests.oracle import assert_matches_oracle
@@ -76,7 +77,8 @@ def test_interp_exact_vs_fraction_recompute(spark, sf_dir):
     per grid point from the raw bracketing observations with Fraction —
     pins the overflow-free BIGINT split to the true rational value."""
     obs = sorted(
-        T._obs(spark, sf_dir).collect(), key=lambda r: (r.event_type, r.t_us, r.event_id)
+        T._obs(load_events(spark, sf_dir)).collect(),
+        key=lambda r: (r.event_type, r.t_us, r.event_id),
     )
     out = T.ts_gapfill_interp(spark, sf_dir).collect()
     by_type: dict[str, list] = {}
@@ -115,7 +117,7 @@ def test_ohlc_invariants(spark, sf_dir):
         == 0
     )
     total = df.agg(F.sum("n_events")).first()[0]
-    raw = T._obs(spark, sf_dir).count()
+    raw = T._obs(load_events(spark, sf_dir)).count()
     assert total == raw
 
 

@@ -4,14 +4,16 @@ Runs every ``__spark_entry__.queries()`` entry at sf0.01 and compares
 it against its ``oracle_sql()`` via the same normalize-sort-hash logic
 as tests/oracle.py. Rows-only entries just assert the query runs.
 
-Usage: python tools/check_all.py [sf_dir] [query_name ...]
-(query names filter the run; no names = all queries)
+Usage: python tools/check_all.py [sf_dir] [query_name_or_pattern ...]
+(names or fnmatch patterns filter the run, e.g. '*_stream' 'hot_*';
+no names = all queries)
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from fnmatch import fnmatchcase
 
 sys.path.insert(0, ".")
 
@@ -54,11 +56,11 @@ def _fast_oracle_overrides(sf_dir: str) -> dict[str, str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
     spark = get_spark(app_name="check-all", streaming=True)
     qs = entry_mod.queries()
     if only:
-        qs = {n: f for n, f in qs.items() if n in only}
+        qs = {n: f for n, f in qs.items() if any(fnmatchcase(n, p) for p in only)}
     oracles = entry_mod.oracle_sql()
     oracles.update(_fast_oracle_overrides(sf_dir))
     failed = []
