@@ -50,6 +50,8 @@ def cache_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the analog is a materialized normalized table (or a cached scan
     across a query batch), not per-query re-parsing of props JSON."""
 
+    # the one persist outside session.FrameOwner: the scan outlives any
+    # call, so the session memo owns it (until uncache_events)
     def build() -> DataFrame:
         df = load_events(spark, sf_dir).persist()
         df.count()  # materialize eagerly so first benched query isn't charged

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.functions import money
 from flink_project_userbehavioranalysis_spark.io import load_events
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 GAP_SECONDS = 1800  # session inactivity gap (matches relational.user_sessions)
 
@@ -921,26 +922,25 @@ def retention_rolling(
     horizon (no future data), matching the oracle.
     """
     ev = load_events(spark, sf_dir)
-    ud = ev.select(F.to_date("ts").alias("d"), "user_id").distinct().persist()
-    out = ud.groupBy("d").agg(F.count("*").alias("active"))
-    for k in horizons:
-        later = ud.select(F.date_sub(F.col("d"), k).alias("d"), "user_id")
-        ret = (
-            ud.join(later, ["d", "user_id"], "left_semi")
-            .groupBy("d")
-            .agg(F.count("*").alias(f"retained_{k}"))
-        )
-        out = out.join(ret, "d", "left")
-    result = out.select(
-        F.col("d").cast("string").alias("day"),
-        "active",
-        *[
-            F.coalesce(f"retained_{k}", F.lit(0)).cast("long").alias(f"retained_{k}")
-            for k in horizons
-        ],
-    ).localCheckpoint(eager=True)
-    ud.unpersist()
-    return result
+    with FrameOwner() as own:
+        ud = own.persisted(ev.select(F.to_date("ts").alias("d"), "user_id").distinct())
+        out = ud.groupBy("d").agg(F.count("*").alias("active"))
+        for k in horizons:
+            later = ud.select(F.date_sub(F.col("d"), k).alias("d"), "user_id")
+            ret = (
+                ud.join(later, ["d", "user_id"], "left_semi")
+                .groupBy("d")
+                .agg(F.count("*").alias(f"retained_{k}"))
+            )
+            out = out.join(ret, "d", "left")
+        return out.select(
+            F.col("d").cast("string").alias("day"),
+            "active",
+            *[
+                F.coalesce(f"retained_{k}", F.lit(0)).cast("long").alias(f"retained_{k}")
+                for k in horizons
+            ],
+        ).localCheckpoint(eager=True)
 
 
 def retention_rolling_oracle_sql(horizons=(1, 7)) -> str:

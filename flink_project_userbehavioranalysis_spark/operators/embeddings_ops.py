@@ -22,9 +22,10 @@ store 4× before serving.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 # ------------------------------------------------------- label centroids
 
@@ -323,99 +324,93 @@ def kmeans_lloyd(
     integers on the lattice; one row per non-empty cluster.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    pts = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda v: F.round(v.cast("double") * grid).cast("long")
-        ).alias("xq"),
-    ).persist()
-
-    from pyspark.sql import Window
-
-    seeds = (
-        pts.select("vec_id", "xq", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(int(k))
-    )
-    cents = seeds.select(
-        F.row_number().over(Window.orderBy("h", "vec_id")).alias("cid"),
-        F.col("xq").alias("cq"),
-    )
-
-    def assign(cents_df: DataFrame) -> DataFrame:
-        one = cents_df.groupBy().agg(
-            F.array_sort(F.collect_list(F.struct("cid", "cq"))).alias("cents")
-        )
-        return (
-            pts.crossJoin(F.broadcast(one))
-            .select(
+    with FrameOwner() as own:
+        pts = own.persisted(
+            emb.select(
                 "vec_id",
-                "xq",
-                F.array_min(
-                    F.transform(
-                        "cents",
-                        lambda c: F.struct(
-                            F.aggregate(
-                                F.zip_with(
-                                    F.col("xq"), c["cq"], lambda a, b: (a - b) * (a - b)
-                                ),
-                                F.lit(0).cast("long"),
-                                lambda acc, v: acc + v,
-                            ).alias("d"),
-                            c["cid"].alias("cid"),
-                        ),
-                    )
-                ).alias("best"),
-            )
-            .select(
-                "vec_id", "xq", F.col("best.cid").alias("cid"), F.col("best.d").alias("d")
-            )
-        )
-
-    pinned = []
-    for _ in range(int(iters)):
-        cents = cents.persist()
-        pinned.append(cents)
-        upd = (
-            assign(cents)
-            .select("cid", F.posexplode("xq").alias("dim", "v"))
-            .groupBy("cid", "dim")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .groupBy("cid")
-            .agg(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", F.expr("s div n").alias("q")))
-                    ),
-                    lambda st: st["q"],
-                ).alias("cq_new")
+                    "embedding", lambda v: F.round(v.cast("double") * grid).cast("long")
+                ).alias("xq"),
             )
         )
-        cents = cents.join(upd, "cid", "left").select(
-            "cid", F.coalesce("cq_new", "cq").alias("cq")
+
+        seeds = (
+            pts.select("vec_id", "xq", F.md5(F.col("vec_id").cast("string")).alias("h"))
+            .orderBy("h", "vec_id")
+            .limit(int(k))
+        )
+        cents = seeds.select(
+            F.row_number().over(Window.orderBy("h", "vec_id")).alias("cid"),
+            F.col("xq").alias("cq"),
         )
 
-    final = assign(cents)
-    out = (
-        final.groupBy("cid")
-        .agg(F.count("*").alias("n_points"), F.sum("d").alias("inertia_q"))
-        .join(cents, "cid")
-        .select(
-            F.col("cid").cast("long").alias("cid"),
-            "n_points",
-            "inertia_q",
-            F.col("cq").alias("centroid_q"),
+        def assign(cents_df: DataFrame) -> DataFrame:
+            one = cents_df.groupBy().agg(
+                F.array_sort(F.collect_list(F.struct("cid", "cq"))).alias("cents")
+            )
+            return (
+                pts.crossJoin(F.broadcast(one))
+                .select(
+                    "vec_id",
+                    "xq",
+                    F.array_min(
+                        F.transform(
+                            "cents",
+                            lambda c: F.struct(
+                                F.aggregate(
+                                    F.zip_with(
+                                        F.col("xq"), c["cq"], lambda a, b: (a - b) * (a - b)
+                                    ),
+                                    F.lit(0).cast("long"),
+                                    lambda acc, v: acc + v,
+                                ).alias("d"),
+                                c["cid"].alias("cid"),
+                            ),
+                        )
+                    ).alias("best"),
+                )
+                .select(
+                    "vec_id", "xq", F.col("best.cid").alias("cid"), F.col("best.d").alias("d")
+                )
+            )
+
+        for _ in range(int(iters)):
+            cents = own.persisted(cents)
+            upd = (
+                assign(cents)
+                .select("cid", F.posexplode("xq").alias("dim", "v"))
+                .groupBy("cid", "dim")
+                .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+                .groupBy("cid")
+                .agg(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(F.struct("dim", F.expr("s div n").alias("q")))
+                        ),
+                        lambda st: st["q"],
+                    ).alias("cq_new")
+                )
+            )
+            cents = cents.join(upd, "cid", "left").select(
+                "cid", F.coalesce("cq_new", "cq").alias("cq")
+            )
+
+        final = assign(cents)
+        return (
+            final.groupBy("cid")
+            .agg(F.count("*").alias("n_points"), F.sum("d").alias("inertia_q"))
+            .join(cents, "cid")
+            .select(
+                F.col("cid").cast("long").alias("cid"),
+                "n_points",
+                "inertia_q",
+                F.col("cq").alias("centroid_q"),
+            )
+            # k-row result: materialize before the owner releases the
+            # persisted points and the per-round centroid caches; also cuts
+            # the iters-deep lineage
+            .localCheckpoint(eager=True)
         )
-        # k-row result: materialize so the persisted points and the
-        # per-round centroid caches can be released instead of living
-        # for the session (same unpersist discipline as item_pagerank /
-        # near_dup_clusters); also cuts the iters-deep lineage
-        .localCheckpoint(eager=True)
-    )
-    pts.unpersist()
-    for c in pinned:
-        c.unpersist()
-    return out
 
 
 def kmeans_lloyd_oracle_sql(k: int = 8, iters: int = 2, grid: int = 10_000) -> str:

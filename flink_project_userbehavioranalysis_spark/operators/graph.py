@@ -36,8 +36,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from flink_project_userbehavioranalysis_spark.io import load_events
+from flink_project_userbehavioranalysis_spark.io import load_events, load_table
 from flink_project_userbehavioranalysis_spark.operators.behavior import _sessionized
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 GAP_SECONDS = 1800
 SCALE = 1_000_000_000
@@ -92,60 +93,47 @@ def item_pagerank(
     if rank_join not in ("broadcast", "shuffle"):
         raise ValueError(f"rank_join must be 'broadcast' or 'shuffle', got {rank_join!r}")
     ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id", "item_id")
-    edges = _transition_edges(ev, gap_s)
-    nodes = (
-        edges.select(F.col("src").alias("item_id"))
-        .union(edges.select(F.col("dst").alias("item_id")))
-        .distinct()
-    )
-    if materialize:
-        # persist only when this call also owns the release (below);
-        # the lazy plan-inspection form must not pin caches the caller
-        # has no handle to unpersist
-        edges = edges.persist()
-        nodes = nodes.persist()
+    with FrameOwner() as own:
+        edges = own.persisted(_transition_edges(ev, gap_s))
+        nodes = own.persisted(
+            edges.select(F.col("src").alias("item_id"))
+            .union(edges.select(F.col("dst").alias("item_id")))
+            .distinct()
+        )
 
-    ranks = nodes.select("item_id", F.lit(SCALE).cast("long").alias("r"))
-    for _ in range(int(iters)):
-        rk = F.broadcast(ranks) if rank_join == "broadcast" else ranks.hint("SHUFFLE_HASH")
-        contribs = (
-            edges.join(rk, edges.src == rk.item_id)
-            .select(
-                "dst",
-                # the product runs in DECIMAL(38,0): rank can reach the
-                # TOTAL lattice mass (nodes × SCALE) under heavy skew,
-                # and a BIGINT r*w overflows once r·w ≥ 2^63 (w ~ 1e7
-                # in-edges against r ~ 1e12 is enough). DECIMAL(38,0)
-                # holds any realistic product exactly; `div` truncates
-                # back to BIGINT identically on both engines.
-                F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
+        ranks = nodes.select("item_id", F.lit(SCALE).cast("long").alias("r"))
+        for _ in range(int(iters)):
+            rk = F.broadcast(ranks) if rank_join == "broadcast" else ranks.hint("SHUFFLE_HASH")
+            contribs = (
+                edges.join(rk, edges.src == rk.item_id)
+                .select(
+                    "dst",
+                    # the product runs in DECIMAL(38,0): rank can reach the
+                    # TOTAL lattice mass (nodes × SCALE) under heavy skew,
+                    # and a BIGINT r*w overflows once r·w ≥ 2^63 (w ~ 1e7
+                    # in-edges against r ~ 1e12 is enough). DECIMAL(38,0)
+                    # holds any realistic product exactly; `div` truncates
+                    # back to BIGINT identically on both engines.
+                    F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
+                )
+                .groupBy("dst")
+                .agg(F.sum("c").alias("s"))
             )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nodes.join(
-            contribs, nodes.item_id == contribs.dst, "left"
-        ).select(
-            "item_id",
-            (
-                F.lit(15 * SCALE // 100).cast("long")
-                + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
-            ).alias("r"),
-        )
-    out = ranks.select("item_id", F.col("r").alias("rank_q"))
-    if not materialize:
-        # lazy form for plan inspection/composition; caller owns the
-        # cached edge/node lifetime
-        return out
-    # materialize the final ranks (node-cardinality, distributed — no
-    # driver collect) so the cached edge/node relations can be released
-    # instead of leaking into the shared session for its lifetime (the
-    # near_dup_clusters unpersist discipline); localCheckpoint also cuts
-    # the iters-deep lineage.
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+            ranks = nodes.join(
+                contribs, nodes.item_id == contribs.dst, "left"
+            ).select(
+                "item_id",
+                (
+                    F.lit(15 * SCALE // 100).cast("long")
+                    + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
+                ).alias("r"),
+            )
+        out = ranks.select("item_id", F.col("r").alias("rank_q"))
+        # materialize the final ranks (node-cardinality, distributed — no
+        # driver collect) before the owner releases the cached edge/node
+        # relations; localCheckpoint also cuts the iters-deep lineage. The
+        # lazy form (plan inspection/composition) recomputes them instead.
+        return out.localCheckpoint(eager=True) if materialize else out
 
 
 def _edges_cte(gap_s: int) -> str:
@@ -459,75 +447,63 @@ def keyphrase_textrank(
     runs entirely on vocabulary-sized frames (ranks broadcast into the
     edge join per round), and the final top-k is a window over vocab
     rows. The corpus is touched exactly once regardless of iters."""
-    from flink_project_userbehavioranalysis_spark.io import load_table
-
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    edges = _kp_edges(docs)
-    nodes = edges.select("lang", F.col("src").alias("term")).distinct()
-    if materialize:
-        # persist only when this call also owns the release (below) —
-        # the lazy plan-inspection form must not pin caches the caller
-        # has no handle to unpersist (item_pagerank discipline)
-        edges = edges.persist()
-        nodes = nodes.persist()
+    with FrameOwner() as own:
+        edges = own.persisted(_kp_edges(docs))
+        nodes = own.persisted(edges.select("lang", F.col("src").alias("term")).distinct())
 
-    ranks = nodes.select("lang", "term", F.lit(SCALE).cast("long").alias("r"))
-    for _ in range(int(iters)):
-        rk = F.broadcast(
-            ranks.select(
-                F.col("lang").alias("rlang"),
-                F.col("term").alias("rterm"),
-                "r",
+        ranks = nodes.select("lang", "term", F.lit(SCALE).cast("long").alias("r"))
+        for _ in range(int(iters)):
+            rk = F.broadcast(
+                ranks.select(
+                    F.col("lang").alias("rlang"),
+                    F.col("term").alias("rterm"),
+                    "r",
+                )
             )
-        )
-        contribs = (
-            edges.join(
-                rk, (F.col("lang") == F.col("rlang")) & (F.col("src") == F.col("rterm"))
+            contribs = (
+                edges.join(
+                    rk, (F.col("lang") == F.col("rlang")) & (F.col("src") == F.col("rterm"))
+                )
+                .select(
+                    "lang",
+                    "dst",
+                    F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
+                )
+                .groupBy("lang", "dst")
+                .agg(F.sum("c").alias("s"))
+                .select(F.col("lang").alias("clang"), "dst", "s")
             )
-            .select(
-                "lang",
-                "dst",
-                F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
+            ranks = (
+                nodes.join(
+                    contribs,
+                    (F.col("lang") == F.col("clang")) & (F.col("term") == F.col("dst")),
+                    "left",
+                )
+                .select(
+                    "lang",
+                    "term",
+                    (
+                        F.lit(15 * SCALE // 100).cast("long")
+                        + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
+                    ).alias("r"),
+                )
             )
-            .groupBy("lang", "dst")
-            .agg(F.sum("c").alias("s"))
-            .select(F.col("lang").alias("clang"), "dst", "s")
-        )
-        ranks = (
-            nodes.join(
-                contribs,
-                (F.col("lang") == F.col("clang")) & (F.col("term") == F.col("dst")),
-                "left",
-            )
+        by_lang = Window.partitionBy("lang").orderBy(F.desc("r"), F.asc("term"))
+        out = (
+            ranks.withColumn("rnk", F.row_number().over(by_lang))
+            .filter(F.col("rnk") <= k)
             .select(
                 "lang",
                 "term",
-                (
-                    F.lit(15 * SCALE // 100).cast("long")
-                    + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
-                ).alias("r"),
+                F.col("r").alias("rank_q"),
+                F.col("rnk").cast("long").alias("rnk"),
             )
         )
-    by_lang = Window.partitionBy("lang").orderBy(F.desc("r"), F.asc("term"))
-    out = (
-        ranks.withColumn("rnk", F.row_number().over(by_lang))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "lang",
-            "term",
-            F.col("r").alias("rank_q"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
-    if not materialize:
-        return out
-    # materialize the bounded result (k rows per lang) so the cached
-    # edge/node relations can be released instead of leaking into the
-    # shared session; localCheckpoint also cuts the iters-deep lineage
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+        # materialize the bounded result (k rows per lang) before the owner
+        # releases the cached edge/node relations; localCheckpoint also cuts
+        # the iters-deep lineage
+        return out.localCheckpoint(eager=True) if materialize else out
 
 
 def keyphrase_textrank_oracle_sql(iters: int = _KP_ITERS, k: int = _KP_TOPK) -> str:

@@ -56,6 +56,7 @@ is inherently a batch-grain decision (and is why the STREAMING twin
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -67,16 +68,15 @@ from flink_project_userbehavioranalysis_spark.operators.corpus_quality import (
     GOPHER_STOPWORDS,
 )
 from flink_project_userbehavioranalysis_spark.operators.llm_text import (
+    _canonical_set_md5,
     _dup_gram_positions,
     _merge_islands,
 )
 from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
-from flink_project_userbehavioranalysis_spark.operators.similarity import (
-    _banded,
-    _release_local_ckpt,
-    _shingles,
+from flink_project_userbehavioranalysis_spark.operators.similarity import _banded, _shingles
+from flink_project_userbehavioranalysis_spark.session import (
+    FrameOwner, release_frame, session_key, session_memo
 )
-from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
 
 # Deployment config for the composed admission pipeline. The Gopher
 # bounds are deliberately looser than gopher_quality_filter's
@@ -126,25 +126,6 @@ _STAGES = (
 )
 
 
-def _release_staged(staged: dict[DataFrame, Callable]) -> None:
-    """Release staged relations once the manifest is materialized.
-    ``staged`` maps each frame to the release recorded when it was
-    staged: ``DataFrame.unpersist`` for persisted caches,
-    ``_release_local_ckpt`` for localCheckpoints (their blocks belong
-    to the checkpointed RDD — the r8 checkpoint-release discipline)."""
-    for df, release in staged.items():
-        release(df)
-
-
-def _admit(frame: DataFrame, staged: dict[DataFrame, Callable]) -> DataFrame:
-    """The admit step: materialize the batch-cardinality manifest
-    eagerly, then release the (corpus-scale) staged relations it was
-    built from."""
-    out = frame.localCheckpoint(eager=True)
-    _release_staged(staged)
-    return out
-
-
 def _manifest_memo(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
     """Get-or-build over ``_MANIFEST_CACHE``, a small LRU: insertion
     order IS access order (hits re-insert), and an evicted manifest's
@@ -154,18 +135,8 @@ def _manifest_memo(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
         out = build()
     _MANIFEST_CACHE[key] = out
     while len(_MANIFEST_CACHE) > _MANIFEST_CACHE_MAX:
-        _release_local_ckpt(_MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE))))
+        release_frame(_MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE))))
     return out
-
-
-def _doc_fingerprint() -> F.Column:
-    """Canonical-form fingerprint (md5 of the sorted distinct token
-    set) — the same key as ``llm_text.dedup_incremental``."""
-    return F.md5(
-        F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), " ").cast(
-            "binary"
-        )
-    )
 
 
 def ingest_accept_batch(
@@ -185,17 +156,22 @@ def ingest_accept_batch(
     # the audit rollup and repeated drives reuse ONE cascade execution;
     # the pinned blocks are batch-cardinality rows, not corpus-scale
     key = _param_key(spark, sf_dir, {**INGEST_DEFAULTS, **overrides}, "manifest")
-    return _manifest_memo(
-        key, lambda: _admit(*_manifest_frame(spark, sf_dir, **overrides))
-    )
+
+    def build() -> DataFrame:
+        # admit: checkpoint the manifest, then release what it was built from
+        with FrameOwner() as own:
+            frame = _manifest_frame(spark, sf_dir, own, **overrides)
+            return frame.localCheckpoint(eager=True)
+
+    return _manifest_memo(key, build)
 
 
 def _manifest_frame(
-    spark: SparkSession, sf_dir: str, *, stage_ckpt: bool = True, **overrides
-) -> tuple[DataFrame, dict[DataFrame, Callable]]:
+    spark: SparkSession, sf_dir: str, own: FrameOwner, *, stage_ckpt: bool = True, **overrides
+) -> DataFrame:
     """Builds the (lazy) manifest frame with its probe indexes derived
-    in-query from the corpus half; returns it plus the staged
-    relations so the caller controls release (the registered entry
+    in-query from the corpus half; its staged relations belong to
+    ``own``, so the caller controls release (the registered entry
     admits it; tests inspect the live plan — with ``stage_ckpt=False``
     for the fully-composed, uncut tree)."""
     p = {**INGEST_DEFAULTS, **overrides}
@@ -206,16 +182,17 @@ def _manifest_frame(
     # and persist the fanned-out rows so the many staged
     # materializations re-read them instead of re-running the
     # scan + fan-out per action (released with the other staged frames)
-    docs = spread_light(
-        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    ).persist()
+    docs = own.persisted(
+        spread_light(
+            load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+        )
+    )
     batch = docs.filter(F.col("doc_id") >= split_id)
     corpus = docs.filter(
         (F.col("doc_id") < split_id) & F.col("text").isNotNull()
     )
-    idx, held = _corpus_index_frames(corpus, p)
-    frame, staged = _cascade_over_indexes(batch, idx, p, stage_ckpt=stage_ckpt)
-    return frame, {**staged, **held, docs: DataFrame.unpersist}
+    idx = _corpus_index_frames(corpus, p, own)
+    return _cascade_over_indexes(batch, idx, p, own, stage_ckpt=stage_ckpt)
 
 
 # Names of the corpus-side probe indexes the cascade needs. In
@@ -236,22 +213,21 @@ _INGEST_INDEX_NAMES = (
 
 
 def _corpus_index_frames(
-    corpus: DataFrame, p: dict
-) -> tuple[dict[str, DataFrame], dict[DataFrame, Callable]]:
+    corpus: DataFrame, p: dict, own: FrameOwner
+) -> dict[str, DataFrame]:
     """Derive the seven probe indexes from an explicit corpus relation
     ((doc_id, lang, text), text non-null) — ONE definition shared by
     the in-query cascade and the persisted nightly build, so the two
     admission forms are content-equal by construction. The shingle
     pass is persisted, so the band build, the size table and the
-    Jaccard verify share it; returns the indexes plus the frames the
-    caller must release (``_release_staged``)."""
-    sh_c = _shingles(corpus, p["shingle_len"]).persist()
+    Jaccard verify share it (owned by ``own``)."""
+    sh_c = own.persisted(_shingles(corpus, p["shingle_len"]))
     idx = {
         "vocab": corpus.select(
             "lang", F.explode(F.split("text", " ")).alias("token")
         ).distinct(),
         "lang_counts": corpus.groupBy("lang").agg(F.count("*").alias("n_old")),
-        "fingerprints": corpus.select(_doc_fingerprint().alias("fp")).distinct(),
+        "fingerprints": corpus.select(_canonical_set_md5().alias("fp")).distinct(),
         "shingles": sh_c,
         "bands": _banded(sh_c, p["n_hashes"], p["n_bands"]),
         "sizes": sh_c.groupBy("doc_id")
@@ -259,7 +235,7 @@ def _corpus_index_frames(
         .withColumnRenamed("doc_id", "corpus_doc"),
         "grams": _dup_gram_positions(corpus, p["span_w"]).select("g_md5").distinct(),
     }
-    return idx, {sh_c: DataFrame.unpersist}
+    return idx
 
 
 def _union_index_sets(parts: list[dict[str, DataFrame]]) -> dict[str, DataFrame]:
@@ -280,8 +256,8 @@ def _union_index_sets(parts: list[dict[str, DataFrame]]) -> dict[str, DataFrame]
 
 
 def _cascade_over_indexes(
-    batch: DataFrame, idx: dict[str, DataFrame], p: dict, stage_ckpt: bool = True
-) -> tuple[DataFrame, dict[DataFrame, Callable]]:
+    batch: DataFrame, idx: dict[str, DataFrame], p: dict, own: FrameOwner, stage_ckpt: bool = True
+) -> DataFrame:
     """The admission cascade probing EXPLICIT index relations (see
     ``_INGEST_INDEX_NAMES``) — the production shape: every corpus
     touch is an equi-join against an index, so the job's cost is
@@ -299,29 +275,21 @@ def _cascade_over_indexes(
     persists materialized — same rows, same single-action execution,
     quadratic analysis cost cut into segments. Tests that inspect the
     fully-composed lazy plan pass ``stage_ckpt=False`` to get the
-    uncut tree (same logical dataflow). The returned staged map records
-    how each staged frame must be released."""
-    staged: dict[DataFrame, Callable] = {}
+    uncut tree (same logical dataflow). Every staged frame belongs to
+    ``own``."""
 
     def _stage(df: DataFrame) -> DataFrame:
-        if stage_ckpt:
-            df = df.localCheckpoint(eager=False)
-            staged[df] = _release_local_ckpt
-        else:
-            staged[df.persist()] = DataFrame.unpersist
-        return df
+        return own.checkpointed(df, eager=False) if stage_ckpt else own.persisted(df)
 
     # ---- staged token relation: ONE explode + per-(doc, token) tf,
     # persisted so the per-doc stats rollup AND the drift gate's batch
     # vocabulary read the same staging pass (plan-asserted in tests)
-    tf = (
+    tf = own.persisted(
         batch.filter(F.col("text").isNotNull())
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
-        .persist()
     )
-    staged[tf] = DataFrame.unpersist
     stats = tf.groupBy("doc_id").agg(
         F.sum("tf").alias("n_tokens"),
         F.sum(F.col("tf") * F.length("token")).alias("sum_word_chars"),
@@ -401,7 +369,7 @@ def _cascade_over_indexes(
     # ---- exact dedup (stage 4), survivors only: fingerprint-index
     # probe vs the corpus + min-id survivor election within the batch
     surv3 = pre.filter(F.col("v0").isNull()).select(
-        "doc_id", "text", _doc_fingerprint().alias("fp")
+        "doc_id", "text", _canonical_set_md5().alias("fp")
     )
     corpus_fp = idx["fingerprints"]
     keeper = surv3.groupBy("fp").agg(F.min("doc_id").alias("keeper_id"))
@@ -511,7 +479,7 @@ def _cascade_over_indexes(
         verdict.alias("verdict"),
         (verdict == "accept").cast("int").alias("accept"),
     )
-    return out, staged
+    return out
 
 
 def _param_key(spark: SparkSession, sf_dir: str, p: dict, tag: str = "") -> tuple:
@@ -550,22 +518,21 @@ def _materialize_indexes(docs: DataFrame, p: dict, root: str) -> None:
     lang, text) relation to ``root`` (overwrite — idempotent). Shared
     by the nightly corpus build and the lifecycle's COMMIT step, where
     ``docs`` is just the accepted batch (cost ∝ batch)."""
-    idx, held = _corpus_index_frames(docs, p)
-    # materialize the shared shingle pass once, THEN overlap the seven
-    # independent write jobs from a small thread pool (guide §2.6): in
-    # the lifecycle's COMMIT step these are seven tiny batch-sized
-    # writes whose per-job scheduling floors otherwise serialize; the
-    # eager count keeps the pooled writers from racing three concurrent
-    # first-computations of the persisted shingle relation
-    idx["shingles"].count()
-    from concurrent.futures import ThreadPoolExecutor
+    with FrameOwner() as own:
+        idx = _corpus_index_frames(docs, p, own)
+        # materialize the shared shingle pass once, THEN overlap the seven
+        # independent write jobs from a small thread pool (guide §2.6): in
+        # the lifecycle's COMMIT step these are seven tiny batch-sized
+        # writes whose per-job scheduling floors otherwise serialize; the
+        # eager count keeps the pooled writers from racing three concurrent
+        # first-computations of the persisted shingle relation
+        idx["shingles"].count()
 
-    def _write(name: str) -> None:
-        idx[name].write.mode("overwrite").parquet(f"{root}/{name}")
+        def _write(name: str) -> None:
+            idx[name].write.mode("overwrite").parquet(f"{root}/{name}")
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_write, _INGEST_INDEX_NAMES))
-    _release_staged(held)
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(pool.map(_write, _INGEST_INDEX_NAMES))
 
 
 def _read_ingest_indexes(spark: SparkSession, roots: list[str]) -> dict[str, DataFrame]:
@@ -595,16 +562,18 @@ def ingest_accept_batch_indexed(
     def build() -> DataFrame:
         root = build_ingest_indexes(spark, sf_dir, **overrides)
         idx = _read_ingest_indexes(spark, [root])
-        # the probe form never touches corpus docs — filter BEFORE the
-        # fan-out/persist so the batch predicate pushes into the parquet
-        # scan and the persisted rows are batch-only (guide §6; r13)
-        batch = spread_light(
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "lang", "text")
-            .filter(F.col("doc_id") >= p["split_id"])
-        ).persist()
-        frame, staged = _cascade_over_indexes(batch, idx, p)
-        return _admit(frame, {**staged, batch: DataFrame.unpersist})
+        with FrameOwner() as own:
+            # the probe form never touches corpus docs — filter BEFORE the
+            # fan-out/persist so the batch predicate pushes into the parquet
+            # scan and the persisted rows are batch-only (guide §6; r13)
+            batch = own.persisted(
+                spread_light(
+                    load_table(spark, sf_dir, "documents")
+                    .select("doc_id", "lang", "text")
+                    .filter(F.col("doc_id") >= p["split_id"])
+                )
+            )
+            return _cascade_over_indexes(batch, idx, p, own).localCheckpoint(eager=True)
 
     return _manifest_memo(_param_key(spark, sf_dir, p, "manifest-idx"), build)
 
@@ -856,41 +825,43 @@ def ingest_two_batch(
     """
     p = {**INGEST_DEFAULTS, **overrides}
     split1 = p["split_id"] if split1 is None else split1
-    # one fan-out + persist shared by BOTH cascades (the lifecycle runs
-    # ~a dozen staged materializations; without the persist each one
-    # re-runs the scan + fan-out shuffle)
-    docs = spread_light(
-        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    ).persist()
-    corpus0 = docs.filter((F.col("doc_id") < split1) & F.col("text").isNotNull())
-    batch1 = docs.filter((F.col("doc_id") >= split1) & (F.col("doc_id") < split2))
-    batch2 = docs.filter(F.col("doc_id") >= split2)
-    # r13 (guide §2.1 fewer passes; r12 verdict #3): derive corpus0's
-    # probe indexes ONCE, persisted across BOTH runs; run 2's index set
-    # is idx0 ∪ indexes(accepted batch-1 docs) — the same union read
-    # (``_union_index_sets``) ``_read_ingest_indexes`` applies to base ∪
-    # overlay parquet (disjoint doc-id parts; every consumer is a semi/anti
-    # probe or keyed by corpus doc id; lang_counts SUM-merges), which
-    # the shared two-cascade oracle already proves equal to a full
-    # rebuild. The r12 form re-ran every corpus-scale staging pass
-    # (shingle explode, 32-hash banding, gram md5s, vocab distinct) a
-    # second time over corpus0 ∪ accepted1 for run 2's cascade.
-    idx0, held0 = _corpus_index_frames(corpus0, p)
-    for name in ("vocab", "fingerprints", "grams"):
-        held0[idx0[name].persist()] = DataFrame.unpersist
-    m1 = _admit(*_cascade_over_indexes(batch1, idx0, p))
-    # the commit: accepted batch-1 docs join the corpus (accept ⇒ not
-    # malformed, so text is non-null by construction); their index
-    # rows extend idx0 — cost ∝ accepted batch
-    accepted1 = batch1.join(
-        m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
-    )
-    idx1, held1 = _corpus_index_frames(accepted1, p)
-    out = _admit(*_cascade_over_indexes(batch2, _union_index_sets([idx0, idx1]), p))
-    _release_staged(
-        {**held0, **held1, docs: DataFrame.unpersist, m1: _release_local_ckpt}
-    )
-    return out
+    with FrameOwner() as own:
+        # one fan-out + persist shared by BOTH cascades (the lifecycle runs
+        # ~a dozen staged materializations; without the persist each one
+        # re-runs the scan + fan-out shuffle)
+        docs = own.persisted(
+            spread_light(
+                load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+            )
+        )
+        corpus0 = docs.filter((F.col("doc_id") < split1) & F.col("text").isNotNull())
+        batch1 = docs.filter((F.col("doc_id") >= split1) & (F.col("doc_id") < split2))
+        batch2 = docs.filter(F.col("doc_id") >= split2)
+        # r13 (guide §2.1 fewer passes; r12 verdict #3): derive corpus0's
+        # probe indexes ONCE, persisted across BOTH runs; run 2's index set
+        # is idx0 ∪ indexes(accepted batch-1 docs) — the same union read
+        # (``_union_index_sets``) ``_read_ingest_indexes`` applies to base ∪
+        # overlay parquet (disjoint doc-id parts; every consumer is a semi/anti
+        # probe or keyed by corpus doc id; lang_counts SUM-merges), which
+        # the shared two-cascade oracle already proves equal to a full
+        # rebuild. The r12 form re-ran every corpus-scale staging pass
+        # (shingle explode, 32-hash banding, gram md5s, vocab distinct) a
+        # second time over corpus0 ∪ accepted1 for run 2's cascade.
+        idx0 = _corpus_index_frames(corpus0, p, own)
+        for name in ("vocab", "fingerprints", "grams"):
+            own.persisted(idx0[name])
+        with FrameOwner() as run1:
+            m1 = own.checkpointed(_cascade_over_indexes(batch1, idx0, p, run1))
+        # the commit: accepted batch-1 docs join the corpus (accept ⇒ not
+        # malformed, so text is non-null by construction); their index
+        # rows extend idx0 — cost ∝ accepted batch
+        accepted1 = batch1.join(
+            m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
+        )
+        idx1 = _corpus_index_frames(accepted1, p, own)
+        with FrameOwner() as run2:
+            out = _cascade_over_indexes(batch2, _union_index_sets([idx0, idx1]), p, run2)
+            return out.localCheckpoint(eager=True)
 
 
 def ingest_two_batch_indexed(
@@ -920,29 +891,33 @@ def ingest_two_batch_indexed(
         base_root = build_ingest_indexes(
             spark, sf_dir, **{**overrides, "split_id": split1}
         )
-        # both batches sit at doc_id ≥ split1 and the corpus side comes
-        # from the persisted indexes — filter BEFORE the fan-out/persist
-        # so the scan and the persisted rows are batch-only (guide §6)
-        docs = spread_light(
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "lang", "text")
-            .filter(F.col("doc_id") >= split1)
-        ).persist()
-        batch1 = docs.filter(F.col("doc_id") < split2)
-        batch2 = docs.filter(F.col("doc_id") >= split2)
-        idx0 = _read_ingest_indexes(spark, [base_root])
-        m1 = _admit(*_cascade_over_indexes(batch1, idx0, p))
-        # the commit: accepted batch-1 docs' index rows, written ∝ batch
-        # (overwrite mode — repeated invocations are idempotent)
-        accepted1 = batch1.join(
-            m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
-        )
-        overlay = _scratch_dir(spark, "ingest-idx-ovl", sf_dir)
-        _materialize_indexes(accepted1, p, overlay)
-        idx01 = _read_ingest_indexes(spark, [base_root, overlay])
-        out = _admit(*_cascade_over_indexes(batch2, idx01, p))
-        _release_staged({docs: DataFrame.unpersist, m1: _release_local_ckpt})
-        return out
+        with FrameOwner() as own:
+            # both batches sit at doc_id ≥ split1 and the corpus side comes
+            # from the persisted indexes — filter BEFORE the fan-out/persist
+            # so the scan and the persisted rows are batch-only (guide §6)
+            docs = own.persisted(
+                spread_light(
+                    load_table(spark, sf_dir, "documents")
+                    .select("doc_id", "lang", "text")
+                    .filter(F.col("doc_id") >= split1)
+                )
+            )
+            batch1 = docs.filter(F.col("doc_id") < split2)
+            batch2 = docs.filter(F.col("doc_id") >= split2)
+            idx0 = _read_ingest_indexes(spark, [base_root])
+            with FrameOwner() as run1:
+                m1 = own.checkpointed(_cascade_over_indexes(batch1, idx0, p, run1))
+            # the commit: accepted batch-1 docs' index rows, written ∝ batch
+            # (overwrite mode — repeated invocations are idempotent)
+            accepted1 = batch1.join(
+                m1.filter(F.col("accept") == 1).select("doc_id"), "doc_id", "left_semi"
+            )
+            overlay = _scratch_dir(spark, "ingest-idx-ovl", sf_dir)
+            _materialize_indexes(accepted1, p, overlay)
+            idx01 = _read_ingest_indexes(spark, [base_root, overlay])
+            with FrameOwner() as run2:
+                out = _cascade_over_indexes(batch2, idx01, p, run2)
+                return out.localCheckpoint(eager=True)
 
     key = _param_key(
         spark, sf_dir, {**p, "_split1": split1, "_split2": split2}, "manifest-idx2"
@@ -1033,7 +1008,7 @@ def ingest_prefix_projection(
         F.size(F.filter(toks, lambda t: F.array_contains(terms, t)))
         .cast("long")
         .alias("n_blocked"),
-        _doc_fingerprint().alias("fp"),
+        _canonical_set_md5().alias("fp"),
     )
     n = F.col("n_tokens")
     gopher_ok = (
@@ -1076,7 +1051,7 @@ def corpus_fingerprints(
     return (
         load_table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") < split_id) & F.col("text").isNotNull())
-        .select(_doc_fingerprint().alias("fp"))
+        .select(_canonical_set_md5().alias("fp"))
         .distinct()
     )
 

@@ -23,7 +23,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from flink_project_userbehavioranalysis_spark.io import load_events, load_table, spread
+from flink_project_userbehavioranalysis_spark.io import load_events, load_table
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 
 def _tokens(df: DataFrame) -> DataFrame:
@@ -954,6 +955,17 @@ FROM c WHERE cum_tokens <= budget
 # --------------------------------------------------- incremental dedup
 
 
+def _canonical_set_md5() -> F.Column:
+    """Canonical-form fingerprint of ``text``: md5 of the sorted
+    distinct token set — the key of ``dedup_incremental``, its
+    streaming twin and the ingest cascade's exact-dup stage."""
+    return F.md5(
+        F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), " ").cast(
+            "binary"
+        )
+    )
+
+
 def dedup_incremental(
     spark: SparkSession, sf_dir: str, split_id: int = 250
 ) -> DataFrame:
@@ -984,13 +996,8 @@ def dedup_incremental(
     Output: (doc_id, set_md5, n_batch_copies) — batch docs that are
     genuinely new, with how many copies the batch itself carried.
     """
-    fp = F.md5(
-        F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), " ").cast(
-            "binary"
-        )
-    )
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", fp.alias("set_md5")
+        "doc_id", _canonical_set_md5().alias("set_md5")
     )
     corpus = docs.filter(F.col("doc_id") < split_id).select("set_md5")
     batch = (
@@ -1116,19 +1123,21 @@ def bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = 3) -> DataFrame:
     Output: (merge_round, lhs, rhs, cnt) — one row per round, exact
     integers + symbol strings; oracle = the same recurrence unrolled.
     """
-    winners, _ = _bpe_rounds(spark, sf_dir, int(n_merges))
-    return winners
+    with FrameOwner() as own:
+        winners, _ = _bpe_rounds(spark, sf_dir, int(n_merges), own)
+        return winners.localCheckpoint(eager=True)
 
 
 def _bpe_rounds(
-    spark: SparkSession, sf_dir: str, n_merges: int
+    spark: SparkSession, sf_dir: str, n_merges: int, own: FrameOwner
 ) -> tuple[DataFrame, DataFrame]:
     """Shared BPE training loop: returns (winners, final vocab state).
 
     ``winners`` = one (merge_round, lhs, rhs, cnt) row per round;
     vocab state = (w, w_sym, wc) with the merges applied in order —
     ``bpe_train`` publishes the former, ``bpe_encode`` consumes the
-    latter (the trained tokenizer IS the rewritten vocab)."""
+    latter (the trained tokenizer IS the rewritten vocab). Both read
+    the per-round word caches, which ``own`` holds."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
@@ -1145,7 +1154,7 @@ def _bpe_rounds(
     )
     winners = None
     for rnd in range(1, n_merges + 1):
-        words = words.persist()
+        words = own.persisted(words)
         syms = F.split(F.trim(F.col("w_sym")), "  ")
         adjacent = F.when(
             F.size(syms) >= 2,
@@ -1200,23 +1209,25 @@ def bpe_encode(spark: SparkSession, sf_dir: str, n_merges: int = 3) -> DataFrame
 
     Output: (doc_id, n_words, n_chars, n_bpe_tokens) — exact integers.
     """
-    _, vocab = _bpe_rounds(spark, sf_dir, int(n_merges))
-    n_sym = vocab.select(
-        "w", F.size(F.split(F.trim(F.col("w_sym")), "  ")).alias("n_sym")
-    )
     docs = load_table(spark, sf_dir, "documents")
     doc_words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.length("w") >= 1)
-    return (
-        doc_words.join(n_sym, "w", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum(F.length("w")).alias("n_chars"),
-            F.sum(F.coalesce(F.col("n_sym"), F.lit(1))).alias("n_bpe_tokens"),
+    with FrameOwner() as own:
+        _, vocab = _bpe_rounds(spark, sf_dir, int(n_merges), own)
+        n_sym = vocab.select(
+            "w", F.size(F.split(F.trim(F.col("w_sym")), "  ")).alias("n_sym")
         )
-    )
+        return (
+            doc_words.join(n_sym, "w", "left")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_words"),
+                F.sum(F.length("w")).alias("n_chars"),
+                F.sum(F.coalesce(F.col("n_sym"), F.lit(1))).alias("n_bpe_tokens"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def bpe_encode_oracle_sql(n_merges: int = 3) -> str:

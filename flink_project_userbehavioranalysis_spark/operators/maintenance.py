@@ -48,6 +48,7 @@ from flink_project_userbehavioranalysis_spark.operators.network_flow import (
     # an oracle fix there fixes both
 )
 from flink_project_userbehavioranalysis_spark.operators.network_flow import pv_rollup_frame
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 
 def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
@@ -85,15 +86,20 @@ def build_mv(rollup: DataFrame, path: str) -> None:
 
 
 def refresh_mv(spark: SparkSession, delta_rollup: DataFrame, path: str) -> None:
-    """Incremental refresh: swap in ONLY the partitions present in
-    ``delta_rollup`` (dynamic partition overwrite), leaving every
-    other day directory untouched. Conf is set-and-restored so the
+    """Incremental refresh: swap in ONLY the day partitions present in
+    ``delta_rollup``, leaving every other day directory untouched."""
+    _overwrite_partitions(spark, delta_rollup, path, "dt")
+
+
+def _overwrite_partitions(spark: SparkSession, df: DataFrame, path: str, col: str) -> None:
+    """Dynamic partition overwrite: replace exactly the ``col``
+    partitions present in ``df``. Conf is set-and-restored so the
     session's static overwrite semantics are unchanged elsewhere."""
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, "static")
     spark.conf.set(key, "dynamic")
     try:
-        delta_rollup.write.mode("overwrite").partitionBy("dt").parquet(path)
+        df.write.mode("overwrite").partitionBy(col).parquet(path)
     finally:
         spark.conf.set(key, prev)
 
@@ -327,15 +333,9 @@ def apply_scd2_delta(
         ).alias("r"),
     ).select("user_id", "r.*", "ub")
     out = closed.unionByName(merged).select(*_SCD2_COLS, "ub")
-    # decouple the rewrite from its own input files (see docstring)
-    out = out.localCheckpoint(eager=True)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("ub").parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    with FrameOwner() as own:
+        # decouple the rewrite from its own input files (see docstring)
+        _overwrite_partitions(spark, own.checkpointed(out), path, "ub")
 
 
 def user_tier_scd2_maintain(

@@ -64,11 +64,16 @@ def uv_approx_hourly(
     width; 0.01 would 25× the register arrays (benched ~4× slower) for
     precision a UV dashboard doesn't need."""
     events = load_events(spark, sf_dir)
+    return uv_approx_frame(events, event_type, rsd).select(win_end_s(), "uv_approx")
+
+
+def uv_approx_frame(events: DataFrame, event_type: str = "view", rsd: float = 0.05) -> DataFrame:
+    """THE hourly HLL++ UV rollup, shared by ``uv_approx_hourly`` and
+    its streaming twin."""
     return (
         events.filter(F.col("event_type") == event_type)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.approx_count_distinct("user_id", rsd).alias("uv_approx"))
-        .select(win_end_s(), "uv_approx")
     )
 
 
@@ -442,6 +447,11 @@ def retention_sketch(spark: SparkSession, sf_dir: str, k: int = 1) -> DataFrame:
 # libm ln() agreeing — documented, not silently swapped.
 
 
+def value_bucket(bin_inv: int) -> F.Column:
+    """``value_hist_daily``'s bucket (width 1/bin_inv), shared with its twin."""
+    return F.floor(F.col("value") * bin_inv)
+
+
 def value_hist_daily(
     spark: SparkSession, sf_dir: str, bin_inv: int = 4
 ) -> DataFrame:
@@ -457,7 +467,7 @@ def value_hist_daily(
         .select(
             F.to_date("ts").cast("string").alias("day"),
             "event_type",
-            F.floor(F.col("value") * bin_inv).alias("bucket"),
+            value_bucket(bin_inv).alias("bucket"),
         )
         .groupBy("day", "event_type", "bucket")
         .agg(F.count("*").alias("cnt"))

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table
 from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
-from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
+from flink_project_userbehavioranalysis_spark.session import FrameOwner, session_key, session_memo
 
 #: Ranked-retrieval query set (conjunctive AND; terms distinct per
 #: query). Query 3 includes the corpus's one rare term ('dup', df≈25
@@ -2190,29 +2190,27 @@ def fts_topk_diverse(
         [(r["query_id"], r["doc_id"]) for r in cand_rows],
         "query_id INT, doc_id BIGINT",
     )
-    # one candidate-pruned postings pass, persisted and self-joined —
-    # the previous pa/pb pair derived the corpus-scale postings twice
-    # (r12; the pruned relation is (queries × pool × doc-terms)-bounded)
-    pc = (
-        post.join(F.broadcast(cd), "doc_id")
-        .select("query_id", "doc_id", "term")
-        .persist()
-    )
-    pa = pc.select("query_id", F.col("doc_id").alias("a"), "term")
-    pb = pc.select("query_id", F.col("doc_id").alias("b"), "term")
-    sims_df = (
-        pa.join(pb, ["query_id", "term"])
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("query_id", "a", "b")
-        .agg(F.count("*").alias("shared"))
-    )
-    # The pairwise overlaps join the pool as the second bounded
-    # literal (≤ |queries|·pool² rows). Without these two
-    # materializations, each greedy round's frame re-evaluates the
-    # whole ranking lineage — the iterated rounds below must run on KB
-    # literals.
-    sims_rows = sims_df.collect()
-    pc.unpersist()
+    with FrameOwner() as own:
+        # one candidate-pruned postings pass, persisted and self-joined —
+        # the previous pa/pb pair derived the corpus-scale postings twice
+        # (r12; the pruned relation is (queries × pool × doc-terms)-bounded)
+        pc = own.persisted(
+            post.join(F.broadcast(cd), "doc_id").select("query_id", "doc_id", "term")
+        )
+        pa = pc.select("query_id", F.col("doc_id").alias("a"), "term")
+        pb = pc.select("query_id", F.col("doc_id").alias("b"), "term")
+        sims_df = (
+            pa.join(pb, ["query_id", "term"])
+            .filter(F.col("a") != F.col("b"))
+            .groupBy("query_id", "a", "b")
+            .agg(F.count("*").alias("shared"))
+        )
+        # The pairwise overlaps join the pool as the second bounded
+        # literal (≤ |queries|·pool² rows). Without these two
+        # materializations, each greedy round's frame re-evaluates the
+        # whole ranking lineage — the iterated rounds below must run on KB
+        # literals.
+        sims_rows = sims_df.collect()
     if len(sims_rows) > cap_s:
         raise RuntimeError(
             f"MMR sims collect exceeded its contract bound: "

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, spread_light
 from flink_project_userbehavioranalysis_spark.operators.maintenance import _scratch_dir
-from flink_project_userbehavioranalysis_spark.session import session_key, session_memo
+from flink_project_userbehavioranalysis_spark.session import FrameOwner, session_key, session_memo
 
 # --------------------------------------------------------------- shared prep
 
@@ -1628,33 +1628,6 @@ def near_dup_clusters(
     return _min_label_cc(docs, pairs, max_iters)
 
 
-def _release_local_ckpt(df: DataFrame) -> None:
-    """Free the block-manager blocks behind a localCheckpointed frame.
-
-    ``DataFrame.unpersist()`` only clears cache-manager entries — a
-    localCheckpoint's blocks belong to the underlying checkpointed RDD
-    (surfaced as a bare ``LogicalRDD`` plan), so an iterative loop that
-    re-checkpoints every round would otherwise pin O(rounds × nodes)
-    blocks until the session ends (r8 advisory). Best effort: a frame
-    whose analyzed plan is not a bare LogicalRDD is left alone — but
-    NOT silently: every skip increments ``RELEASE_SKIPPED`` (r9
-    advisory), so a Spark upgrade that changes the analyzed-plan shape
-    and quietly reintroduces O(rounds × nodes) block pinning is
-    observable (tests assert the counter stays 0 across a CC run).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        global RELEASE_SKIPPED
-        RELEASE_SKIPPED += 1
-
-
-# Count of _release_local_ckpt calls that could NOT free the blocks
-# (unexpected plan shape / py4j surface change). Monotonic per
-# process; tests snapshot-and-compare around iterative loops.
-RELEASE_SKIPPED = 0
-
-
 def _min_label_cc(nodes: DataFrame, pairs: DataFrame, max_iters: int) -> DataFrame:
     """Iterative min-label connected components with POINTER JUMPING
     (the loop body :func:`near_dup_clusters` documents): ``nodes`` is
@@ -1674,81 +1647,72 @@ def _min_label_cc(nodes: DataFrame, pairs: DataFrame, max_iters: int) -> DataFra
     old plain-propagation loop could exhaust its budget on a
     high-diameter graph and hand back wrong clusters without a word).
     """
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    # eager per-round materialization (localCheckpoint) is required,
-    # not a nicety: the jump self-join references the round's frame
-    # TWICE, so an unbroken lineage doubles the plan tree every round
-    # — the standard iterative-graph checkpoint discipline (GraphX
-    # does the same). The materialized frame is node cardinality.
-    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint(
-        eager=True
-    )
-    # the checkpointed frame BACKING the current labels (labels itself
-    # may be a projection over it; releases must target the bare
-    # LogicalRDD frame or the block release silently no-ops)
-    labels_ckpt = labels
-    converged = False
-    for _ in range(max_iters):
-        # each node's OWN previous label rides through the gather (it
-        # is unique per doc, so max() recovers it), making the
-        # convergence check a flag filter over the round's
-        # checkpointed blocks instead of a second shuffle join per
-        # round against the previous frame (r12)
-        msgs = (
-            edges.join(labels, edges.doc_a == labels.doc_id)
-            .select(
-                F.col("doc_b").alias("doc_id"),
-                "cluster_id",
-                F.lit(None).cast("long").alias("old"),
+    with FrameOwner() as own:
+        edges = own.persisted(
+            pairs.unionByName(
+                pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
             )
         )
-        own = labels.select(
-            "doc_id", "cluster_id", F.col("cluster_id").cast("long").alias("old")
-        )
-        gathered = (
-            own.unionByName(msgs)
-            .groupBy("doc_id")
-            .agg(
-                F.min("cluster_id").alias("cluster_id"),
-                F.max("old").alias("old"),
+        # eager per-round materialization (localCheckpoint) is required,
+        # not a nicety: the jump self-join references the round's frame
+        # TWICE, so an unbroken lineage doubles the plan tree every round
+        # — the standard iterative-graph checkpoint discipline (GraphX
+        # does the same). The materialized frame is node cardinality.
+        labels = own.checkpointed(nodes.select("doc_id", F.col("doc_id").alias("cluster_id")))
+        for _ in range(max_iters):
+            # each node's OWN previous label rides through the gather (it
+            # is unique per doc, so max() recovers it), making the
+            # convergence check a flag filter over the round's
+            # checkpointed blocks instead of a second shuffle join per
+            # round against the previous frame (r12)
+            msgs = (
+                edges.join(labels, edges.doc_a == labels.doc_id)
+                .select(
+                    F.col("doc_b").alias("doc_id"),
+                    "cluster_id",
+                    F.lit(None).cast("long").alias("old"),
+                )
             )
-        )
-        ckpt = (
-            gathered.alias("g")
-            .join(
-                gathered.select(
-                    F.col("doc_id").alias("cluster_id"),
-                    F.col("cluster_id").alias("jumped"),
-                ),
-                "cluster_id",
+            own_label = labels.select(
+                "doc_id", "cluster_id", F.col("cluster_id").cast("long").alias("old")
             )
-            .select(
-                "doc_id",
-                F.least("cluster_id", "jumped").alias("cluster_id"),
-                "old",
+            gathered = (
+                own_label.unionByName(msgs)
+                .groupBy("doc_id")
+                .agg(
+                    F.min("cluster_id").alias("cluster_id"),
+                    F.max("old").alias("old"),
+                )
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = ckpt.filter(F.col("cluster_id") != F.col("old")).count()
-        # the superseded round's blocks are dead once the round is
-        # materialized — release them instead of pinning
-        # O(rounds × nodes) blocks per invocation (the final frame
-        # stays live for the caller)
-        prev = labels_ckpt
-        labels_ckpt = ckpt
-        labels = ckpt.select("doc_id", "cluster_id")
-        _release_local_ckpt(prev)
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
+            ckpt = own.checkpointed(
+                gathered.alias("g")
+                .join(
+                    gathered.select(
+                        F.col("doc_id").alias("cluster_id"),
+                        F.col("cluster_id").alias("jumped"),
+                    ),
+                    "cluster_id",
+                )
+                .select(
+                    "doc_id",
+                    F.least("cluster_id", "jumped").alias("cluster_id"),
+                    "old",
+                )
+            )
+            changed = ckpt.filter(F.col("cluster_id") != F.col("old")).count()
+            # the superseded round's blocks are dead once the round is
+            # materialized — release them instead of pinning
+            # O(rounds × nodes) blocks per invocation (the final frame
+            # goes to the caller)
+            own.release(labels)
+            labels = ckpt
+            if changed == 0:
+                return own.keep(labels).select(
+                    "doc_id", F.col("cluster_id").cast("long").alias("cluster_id")
+                )
         raise RuntimeError(
             f"connected components did not converge within {max_iters} rounds"
         )
-    return labels.select("doc_id", F.col("cluster_id").cast("long").alias("cluster_id"))
 
 
 def near_dup_clusters_oracle_sql(shingle_len: int = 3, threshold: float = 0.4) -> str:
@@ -1890,50 +1854,47 @@ def near_dup_incremental(
     one groupBy(doc_id) away and stays exact.
     """
     docs = spread_light(load_table(spark, sf_dir, "documents"))
-    sh = _shingles(docs, shingle_len).persist()
-    banded = _banded(sh, n_hashes, n_bands)
-    corpus_index = banded.filter(F.col("doc_id") < split_id)
-    probes = banded.filter(F.col("doc_id") >= split_id)
-    cand = (
-        probes.alias("x")
-        .join(corpus_index.alias("y"), ["band_id", "band_key"])
-        .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("corpus_doc"))
-        .distinct()
-    )
-    batch_sh = sh.filter(F.col("doc_id") >= split_id)
-    corpus_sh = sh.filter(F.col("doc_id") < split_id).select(
-        F.col("doc_id").alias("corpus_doc"), "shingle"
-    )
-    common = (
-        batch_sh.join(corpus_sh, "shingle")
-        .groupBy("doc_id", "corpus_doc")
-        .agg(F.count("*").alias("n_common"))
-        .join(cand, ["doc_id", "corpus_doc"])
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    out = (
-        common.join(
-            F.broadcast(sizes.withColumnRenamed("n_sh", "sa")), "doc_id"
+    with FrameOwner() as own:
+        sh = own.persisted(_shingles(docs, shingle_len))
+        banded = _banded(sh, n_hashes, n_bands)
+        corpus_index = banded.filter(F.col("doc_id") < split_id)
+        probes = banded.filter(F.col("doc_id") >= split_id)
+        cand = (
+            probes.alias("x")
+            .join(corpus_index.alias("y"), ["band_id", "band_key"])
+            .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("corpus_doc"))
+            .distinct()
         )
-        .join(
-            F.broadcast(
-                sizes.withColumnRenamed("doc_id", "corpus_doc").withColumnRenamed(
-                    "n_sh", "sb"
-                )
-            ),
-            "corpus_doc",
+        batch_sh = sh.filter(F.col("doc_id") >= split_id)
+        corpus_sh = sh.filter(F.col("doc_id") < split_id).select(
+            F.col("doc_id").alias("corpus_doc"), "shingle"
         )
-        .withColumn("n_union", F.col("sa") + F.col("sb") - F.col("n_common"))
-        .filter(F.col("n_common") / F.col("n_union") >= threshold)
-        .select("doc_id", "corpus_doc", "n_common", "n_union")
-        # near-dup pairs are a small result: materialize eagerly so the
-        # corpus-sized shingle cache can be released instead of living
-        # for the session (same unpersist discipline as item_pagerank /
-        # kmeans_lloyd)
-        .localCheckpoint(eager=True)
-    )
-    sh.unpersist()
-    return out
+        common = (
+            batch_sh.join(corpus_sh, "shingle")
+            .groupBy("doc_id", "corpus_doc")
+            .agg(F.count("*").alias("n_common"))
+            .join(cand, ["doc_id", "corpus_doc"])
+        )
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+        return (
+            common.join(
+                F.broadcast(sizes.withColumnRenamed("n_sh", "sa")), "doc_id"
+            )
+            .join(
+                F.broadcast(
+                    sizes.withColumnRenamed("doc_id", "corpus_doc").withColumnRenamed(
+                        "n_sh", "sb"
+                    )
+                ),
+                "corpus_doc",
+            )
+            .withColumn("n_union", F.col("sa") + F.col("sb") - F.col("n_common"))
+            .filter(F.col("n_common") / F.col("n_union") >= threshold)
+            .select("doc_id", "corpus_doc", "n_common", "n_union")
+            # near-dup pairs are a small result: materialize eagerly so the
+            # owner can release the corpus-sized shingle cache
+            .localCheckpoint(eager=True)
+        )
 
 
 def near_dup_incremental_oracle_sql(
@@ -2284,89 +2245,77 @@ def near_dup_clusters_incremental(
     # passes, two per-doc sizes rollups, and a second batch×corpus
     # common-shingle join that recounted what the all-pairs join had
     # already counted.
-    sh = _shingle_rows(
-        spread_light(load_table(spark, sf_dir, "documents")), shingle_len
-    ).persist()
-    all_pairs = _pairs_from_shingle_rows(sh, threshold).select(
-        "doc_a", "doc_b"
-    ).persist()
-    # stored state: the corpus-only clustering (what yesterday's run
-    # left). Eager localCheckpoint is semantically the point — this IS
-    # a materialized table in production — and practically required:
-    # it cuts the iterative lineage so the update's planning doesn't
-    # carry two stacked CC fixpoints (plan-size blowup otherwise).
-    corpus_pairs = all_pairs.filter(
-        (F.col("doc_a") < split_id) & (F.col("doc_b") < split_id)
-    )
-    corpus_labels = _min_label_cc(
-        docs.filter(F.col("doc_id") < split_id), corpus_pairs, max_iters
-    ).localCheckpoint(eager=True)
-    # the update: batch-internal pairs + LSH-probed batch<->corpus pairs
-    batch_pairs = all_pairs.filter(
-        (F.col("doc_a") >= split_id) & (F.col("doc_b") >= split_id)
-    )
-    # batch⇄corpus edges: the MinHash-LSH band probe gates candidacy
-    # (same band params and band rows as ``near_dup_incremental`` —
-    # `_banded` over the same shingle relation), and the exact verify
-    # is the cross-split restriction of the exact pair set already
-    # computed above (doc_a < split ≤ doc_b by the a<b orientation),
-    # LSH-gated by a semi-join — set-identical to the r12 form, which
-    # re-derived shingles and recounted common shingles per cross pair.
-    banded = _banded(sh.select("doc_id", "shingle"), n_hashes=32, n_bands=16)
-    cand = (
-        banded.filter(F.col("doc_id") >= split_id).alias("x")
-        .join(
-            banded.filter(F.col("doc_id") < split_id).alias("y"),
-            ["band_id", "band_key"],
+    with FrameOwner() as own:
+        sh = own.persisted(
+            _shingle_rows(spread_light(load_table(spark, sf_dir, "documents")), shingle_len)
         )
-        .select(
-            F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("corpus_doc")
+        all_pairs = own.persisted(_pairs_from_shingle_rows(sh, threshold).select("doc_a", "doc_b"))
+        # stored state: the corpus-only clustering (what yesterday's run
+        # left). It is the CC fixpoint's final checkpoint — semantically the
+        # point, this IS a materialized table in production — and it cuts
+        # the iterative lineage so the update's planning doesn't carry two
+        # stacked CC fixpoints (plan-size blowup otherwise).
+        corpus_pairs = all_pairs.filter((F.col("doc_a") < split_id) & (F.col("doc_b") < split_id))
+        corpus_labels = own.adopt(
+            _min_label_cc(docs.filter(F.col("doc_id") < split_id), corpus_pairs, max_iters)
         )
-        .distinct()
-    )
-    # materialize the (batch-proportional) cross pair set eagerly —
-    # the contracted node/edge frames and the CC rounds reference it
-    # repeatedly, and by then the shingle/pair caches are released, so
-    # a lazy form would re-derive the banded self-join per use (this
-    # checkpoint replaces the one ``near_dup_incremental`` returned)
-    cross = (
-        all_pairs.filter((F.col("doc_a") < split_id) & (F.col("doc_b") >= split_id))
-        .select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("corpus_doc"))
-        .join(cand, ["doc_id", "corpus_doc"], "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    # contract: corpus endpoint -> its stored cluster label
-    cross_c = (
-        cross.join(
-            corpus_labels.withColumnRenamed("doc_id", "corpus_doc"), "corpus_doc"
+        # the update: batch-internal pairs + LSH-probed batch<->corpus pairs
+        batch_pairs = all_pairs.filter((F.col("doc_a") >= split_id) & (F.col("doc_b") >= split_id))
+        # batch⇄corpus edges: the MinHash-LSH band probe gates candidacy
+        # (same band params and band rows as ``near_dup_incremental`` —
+        # `_banded` over the same shingle relation), and the exact verify
+        # is the cross-split restriction of the exact pair set already
+        # computed above (doc_a < split ≤ doc_b by the a<b orientation),
+        # LSH-gated by a semi-join — set-identical to the r12 form, which
+        # re-derived shingles and recounted common shingles per cross pair.
+        banded = _banded(sh.select("doc_id", "shingle"), n_hashes=32, n_bands=16)
+        cand = (
+            banded.filter(F.col("doc_id") >= split_id).alias("x")
+            .join(
+                banded.filter(F.col("doc_id") < split_id).alias("y"),
+                ["band_id", "band_key"],
+            )
+            .select(
+                F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("corpus_doc")
+            )
+            .distinct()
         )
-        .select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("doc_b"))
-    )
-    touched_labels = cross_c.select(F.col("doc_b").alias("doc_id")).distinct()
-    batch_docs = docs.filter(F.col("doc_id") >= split_id)
-    cnodes = batch_docs.unionByName(touched_labels).distinct()
-    cedges = batch_pairs.unionByName(cross_c).localCheckpoint(eager=True)
-    all_pairs.unpersist()
-    sh.unpersist()
-    contracted = _min_label_cc(cnodes, cedges, max_iters).localCheckpoint(eager=True)
-    # fold back: relabel merged clusters, keep the rest byte-identical
-    relabel = contracted.select(
-        F.col("doc_id").alias("old_cluster"), F.col("cluster_id").alias("new_cluster")
-    ).filter(F.col("old_cluster") < split_id)
-    kept = (
-        corpus_labels.join(
-            relabel, corpus_labels.cluster_id == relabel.old_cluster, "left"
+        # materialize the (batch-proportional) cross pair set eagerly —
+        # the contracted node/edge frames and the CC rounds reference it
+        # repeatedly, and by then the shingle/pair caches are released, so
+        # a lazy form would re-derive the banded self-join per use (this
+        # checkpoint replaces the one ``near_dup_incremental`` returned)
+        cross = own.checkpointed(
+            all_pairs.filter((F.col("doc_a") < split_id) & (F.col("doc_b") >= split_id))
+            .select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("corpus_doc"))
+            .join(cand, ["doc_id", "corpus_doc"], "left_semi")
         )
-        .select(
-            "doc_id",
-            F.coalesce("new_cluster", "cluster_id").cast("long").alias("cluster_id"),
+        # contract: corpus endpoint -> its stored cluster label
+        cross_c = (
+            cross.join(
+                corpus_labels.withColumnRenamed("doc_id", "corpus_doc"), "corpus_doc"
+            )
+            .select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("doc_b"))
         )
-    )
-    batch_out = contracted.filter(F.col("doc_id") >= split_id)
-    out = kept.unionByName(batch_out).localCheckpoint(eager=True)
-    # the staged frames are dead once the assignment is materialized —
-    # release their block-manager copies (r8 advisory: checkpoint
-    # discipline must free superseded frames, not just create them)
-    for staged in (corpus_labels, cross, cedges, contracted):
-        _release_local_ckpt(staged)
-    return out
+        touched_labels = cross_c.select(F.col("doc_b").alias("doc_id")).distinct()
+        batch_docs = docs.filter(F.col("doc_id") >= split_id)
+        cnodes = batch_docs.unionByName(touched_labels).distinct()
+        cedges = own.checkpointed(batch_pairs.unionByName(cross_c))
+        own.release(all_pairs)
+        own.release(sh)
+        contracted = own.adopt(_min_label_cc(cnodes, cedges, max_iters))
+        # fold back: relabel merged clusters, keep the rest byte-identical
+        relabel = contracted.select(
+            F.col("doc_id").alias("old_cluster"), F.col("cluster_id").alias("new_cluster")
+        ).filter(F.col("old_cluster") < split_id)
+        kept = (
+            corpus_labels.join(
+                relabel, corpus_labels.cluster_id == relabel.old_cluster, "left"
+            )
+            .select(
+                "doc_id",
+                F.coalesce("new_cluster", "cluster_id").cast("long").alias("cluster_id"),
+            )
+        )
+        batch_out = contracted.filter(F.col("doc_id") >= split_id)
+        return kept.unionByName(batch_out).localCheckpoint(eager=True)

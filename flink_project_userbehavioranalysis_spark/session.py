@@ -16,15 +16,23 @@ local[32] to a 1000-executor cluster:
 - shuffle partitions default to the local core count; on a real cluster
   this is overridden (cores × executors × 2-3) or left to AQE's
   coalescing with a high initial value.
+
+Beside the builder live the two session-scoped owners: the memo
+(``session_memo``), which holds an artifact until the session ends,
+and ``FrameOwner``, which holds the frames one call persists or
+checkpoints and releases them when the call leaves its ``with``
+block, also on error.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_parallelism() -> int:
@@ -101,3 +109,80 @@ def session_memo(key: tuple, build: Callable[[], Any] | None = None) -> Any:
 def session_forget(key: tuple) -> Any:
     """Drop ``key`` from the memo; returns the dropped value or ``None``."""
     return _MEMO.pop(key, None)
+
+
+# release_frame calls that could NOT free a checkpoint's blocks; tests
+# compare it around a call. The lock also guards FrameOwner.owned.
+RELEASE_SKIPPED = 0
+_COUNT_LOCK = threading.Lock()
+
+
+def release_frame(df: DataFrame) -> None:
+    """Free the storage behind ``df``: unpersist a cached frame, or free
+    the blocks of a localCheckpoint (or of the one checkpoint that a
+    projection or filter reads). ``unpersist()`` only clears
+    cache-manager entries; a checkpoint's blocks belong to the RDD
+    behind its ``LogicalRDD`` plan, so an iterative loop that
+    re-checkpoints every round would otherwise pin O(rounds × nodes)
+    blocks until the session ends (r8 advisory). Best effort, but not
+    silent: a plan that does not lead down to one LogicalRDD counts in
+    ``RELEASE_SKIPPED`` (r9 advisory), so a Spark upgrade that changes
+    the analyzed-plan shape fails a test instead of pinning blocks."""
+    global RELEASE_SKIPPED
+    if df.is_cached:
+        df.unpersist()
+        return
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.children().size() == 1:
+            plan = plan.children().head()
+        plan.rdd().unpersist(False)
+    except Py4JError:
+        with _COUNT_LOCK:
+            RELEASE_SKIPPED += 1
+
+
+class FrameOwner:
+    """The frames one call persists or checkpoints (``persisted``,
+    ``checkpointed``, eager or lazy). Leaving the ``with`` block releases
+    them (``release_frame``), also on an exception, newest first, so a
+    frame goes before the frames it was built from.
+
+    ``release`` frees one frame early; ``keep`` hands one to the caller
+    unreleased and ``adopt`` takes one over from a helper. A frame a
+    function returns is not owned: it is a plain eager localCheckpoint,
+    and the ContextCleaner frees its blocks once the caller drops it.
+    ``owned`` counts the frames of every open owner, for tests."""
+
+    owned = 0
+
+    def __init__(self) -> None:
+        self.frames: dict[int, DataFrame] = {}
+
+    def __enter__(self) -> FrameOwner:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in reversed(list(self.frames.values())):
+            self.release(df)
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        self.frames[id(df)] = df
+        with _COUNT_LOCK:
+            FrameOwner.owned += 1
+        return df
+
+    def persisted(self, df: DataFrame) -> DataFrame:
+        return self.adopt(df.persist())
+
+    def checkpointed(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        return self.adopt(df.localCheckpoint(eager=eager))
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        del self.frames[id(df)]
+        with _COUNT_LOCK:
+            FrameOwner.owned -= 1
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        release_frame(self.keep(df))

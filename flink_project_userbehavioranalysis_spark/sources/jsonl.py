@@ -44,14 +44,16 @@ def read_docs_jsonl(spark: SparkSession, jsonl_dir: str) -> DataFrame:
 def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean rows, quarantined raw lines) — the standard ingest fork.
 
-    The parse is pinned (``cache``) before forking: Spark refuses a
-    scan whose only referenced column is ``_corrupt_record``
-    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and an ingest batch is read by
-    BOTH forks anyway, so one materialized parse is the production
-    shape — at 100 TB the equivalent is writing the parsed batch to
-    parquet once and forking from that.
+    The parse is materialized (an eager ``localCheckpoint``) before
+    forking: Spark refuses a scan whose only referenced column is
+    ``_corrupt_record`` (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and an
+    ingest batch is read by BOTH forks anyway, so one materialized
+    parse is the production shape — at 100 TB the equivalent is
+    writing the parsed batch to parquet once and forking from that.
+    A checkpoint, not a cache: the ContextCleaner frees it once the
+    caller drops both forks, while a cache would stay pinned.
     """
-    parsed = parsed.cache()
+    parsed = parsed.localCheckpoint(eager=True)
     bad = F.col("_corrupt_record").isNotNull()
     return (
         parsed.filter(~bad).drop("_corrupt_record"),

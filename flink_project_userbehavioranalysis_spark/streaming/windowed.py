@@ -49,6 +49,7 @@ from flink_project_userbehavioranalysis_spark.operators.ingest import (
     ingest_prefix_projection,
 )
 from flink_project_userbehavioranalysis_spark.operators.llm_text import (
+    _canonical_set_md5,
     _dup_gram_positions,
     _merge_islands,
     chunk_projection,
@@ -72,6 +73,8 @@ from flink_project_userbehavioranalysis_spark.operators.network_flow import (
     ddsketch_quantiles_from_grid,
     pv_rollup_frame,
     spike_flags,
+    uv_approx_frame,
+    value_bucket,
 )
 from flink_project_userbehavioranalysis_spark.operators.search import (
     _query_frames,
@@ -235,11 +238,8 @@ def uv_approx_stream(
     mergeable state. Rows-only in the driver gate (estimates are
     engine-specific); tests bound it against the exact streaming UV."""
     ev = events_stream(spark, sf_dir, n_chunks=n_chunks)
-    counts = (
-        ev.filter(F.col("event_type") == event_type)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.approx_count_distinct("user_id").alias("uv_est"))
-        .select(win_end_s(), "uv_est")
+    counts = uv_approx_frame(ev, event_type).select(
+        win_end_s(), F.col("uv_approx").alias("uv_est")
     )
     return run_update_merge(counts, ["window_end"], spark)
 
@@ -612,11 +612,7 @@ def dedup_incremental_stream(
 
     Output: (doc_id, set_md5) of accepted batch docs.
     """
-    fp = F.md5(
-        F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), " ").cast(
-            "binary"
-        )
-    )
+    fp = _canonical_set_md5()
     corpus = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < split_id)
@@ -1044,9 +1040,7 @@ def value_hist_daily_stream(
     days-in-horizon × types × buckets, watermark-evicted), never raw
     rows — the at-ingest form of the summary's 100 TB story: raw
     events are seen once, only grid cells persist."""
-    return _daily_grid_stream(
-        spark, sf_dir, F.floor(F.col("value") * bin_inv), n_chunks
-    )
+    return _daily_grid_stream(spark, sf_dir, value_bucket(bin_inv), n_chunks)
 
 
 def _daily_grid_stream(

@@ -11,7 +11,9 @@ import duckdb
 import pyspark.sql.functions as F
 import pytest
 
+from flink_project_userbehavioranalysis_spark import session
 from flink_project_userbehavioranalysis_spark.operators import ingest as I
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 from tests.oracle import assert_matches_oracle
 
 SPLIT = I.INGEST_DEFAULTS["split_id"]
@@ -89,12 +91,12 @@ def test_stage_ckpt_segments_equal_composed(spark, sf_dir):
     production default — truncates the quadratic per-join analysis
     cost) computes EXACTLY the rows of the fully-composed lazy tree
     (stage_ckpt=False)."""
-    fa, sa = I._manifest_frame(spark, sf_dir, stage_ckpt=True)
-    a = sorted(map(tuple, fa.localCheckpoint(eager=True).collect()))
-    I._release_staged(sa)
-    fb, sb = I._manifest_frame(spark, sf_dir, stage_ckpt=False)
-    b = sorted(map(tuple, fb.collect()))
-    I._release_staged(sb)
+    with FrameOwner() as sa:
+        fa = I._manifest_frame(spark, sf_dir, sa, stage_ckpt=True)
+        a = sorted(map(tuple, fa.localCheckpoint(eager=True).collect()))
+    with FrameOwner() as sb:
+        fb = I._manifest_frame(spark, sf_dir, sb, stage_ckpt=False)
+        b = sorted(map(tuple, fb.collect()))
     assert a == b and len(a) > 0
 
 
@@ -106,13 +108,10 @@ def test_staged_token_relation_shared(spark, sf_dir):
     production form cuts the same logical dataflow into lazy
     localCheckpoint segments, which hide the cache scans from the
     outer plan without changing what is computed."""
-    frame, staged = I._manifest_frame(spark, sf_dir, stage_ckpt=False)
-    try:
+    with FrameOwner() as staged:
+        frame = I._manifest_frame(spark, sf_dir, staged, stage_ckpt=False)
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert plan.count("InMemoryTableScan") >= 2
-    finally:
-        for df in staged:
-            df.unpersist()
 
 
 # --------------------------------------------------------------- fixture
@@ -269,15 +268,12 @@ def test_ingest_plan_is_equijoin_only(spark, sf_dir):
     fully-composed tree (stage_ckpt=False) so the assertion covers
     every operator of the cascade; the production form cuts the same
     logical dataflow into lazy localCheckpoint segments."""
-    frame, staged = I._manifest_frame(spark, sf_dir, stage_ckpt=False)
-    try:
+    with FrameOwner() as staged:
+        frame = I._manifest_frame(spark, sf_dir, staged, stage_ckpt=False)
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "BatchEvalPython" not in plan
-    finally:
-        for df in staged:
-            df.unpersist()
 
 
 @pytest.mark.slow  # 135 s (nested two-cascade DuckDB oracle; check_all drives the same oracle); --runslow runs it
@@ -399,15 +395,13 @@ def test_manifest_cache_is_lru_bounded(spark, poisoned_dir):
     LRU of _MANIFEST_CACHE_MAX entries, evicted frames release their
     checkpoint blocks (release-path skips are counted, and must not
     occur here), and a re-hit returns the SAME cached frame."""
-    from flink_project_userbehavioranalysis_spark.operators import similarity as S
-
     I._MANIFEST_CACHE.clear()
-    skipped0 = S.RELEASE_SKIPPED
+    skipped0 = session.RELEASE_SKIPPED
     frames = {}
     for i in range(I._MANIFEST_CACHE_MAX + 2):
         frames[i] = I.ingest_accept_batch(spark, poisoned_dir, min_tokens=5 + i)
     assert len(I._MANIFEST_CACHE) == I._MANIFEST_CACHE_MAX
-    assert S.RELEASE_SKIPPED == skipped0, "checkpoint release path skipped"
+    assert session.RELEASE_SKIPPED == skipped0, "checkpoint release path skipped"
     # most-recent params re-hit the memo (same object, no recompute)
     last = I._MANIFEST_CACHE_MAX + 1
     assert I.ingest_accept_batch(
@@ -440,11 +434,9 @@ def test_manifest_memo_lru_on_tiny_frames(spark):
     holds, the evicted checkpoint's RDD blocks are freed (with no
     release-path skip), and a re-hit returns the SAME object without
     rebuilding."""
-    from flink_project_userbehavioranalysis_spark.operators import similarity as S
-
     saved = dict(I._MANIFEST_CACHE)
     I._MANIFEST_CACHE.clear()
-    skipped0 = S.RELEASE_SKIPPED
+    skipped0 = session.RELEASE_SKIPPED
     try:
         n = I._MANIFEST_CACHE_MAX + 1
         frames = [
@@ -456,28 +448,28 @@ def test_manifest_memo_lru_on_tiny_frames(spark):
         live = _persistent_rdd_ids(spark)
         assert _ckpt_rdd_id(frames[0]) not in live
         assert all(_ckpt_rdd_id(f) in live for f in frames[1:])
-        assert S.RELEASE_SKIPPED == skipped0
+        assert session.RELEASE_SKIPPED == skipped0
         # a hit re-inserts as most recent and never calls build
         hit = I._manifest_memo(("tiny", 1), lambda: pytest.fail("rebuilt on a hit"))
         assert hit is frames[1]
         assert next(reversed(I._MANIFEST_CACHE)) == ("tiny", 1)
     finally:
-        I._release_staged({f: S._release_local_ckpt for f in I._MANIFEST_CACHE.values()})
+        for f in I._MANIFEST_CACHE.values():
+            session.release_frame(f)
         I._MANIFEST_CACHE.clear()
         I._MANIFEST_CACHE.update(saved)
 
 
 def test_release_staged_frees_lazy_checkpoints(spark, sf_dir):
-    """Frames the cascade stages as lazy localCheckpoints are recorded
-    with the checkpoint release, and ``_release_staged`` frees their
-    RDD blocks."""
-    from flink_project_userbehavioranalysis_spark.operators import similarity as S
-
-    frame, staged = I._manifest_frame(spark, sf_dir, stage_ckpt=True)
-    frame.count()
-    ckpts = [df for df, release in staged.items() if release is S._release_local_ckpt]
-    assert len(ckpts) == 4  # pre, exact_ids, sh_b, near_ids
-    assert {_ckpt_rdd_id(df) for df in ckpts} <= _persistent_rdd_ids(spark)
-    I._release_staged(staged)
+    """Frames the cascade stages as lazy localCheckpoints belong to the
+    owner (uncached, so they take the checkpoint release), and leaving
+    the owner frees their RDD blocks."""
+    with FrameOwner() as own:
+        frame = I._manifest_frame(spark, sf_dir, own, stage_ckpt=True)
+        frame.count()
+        staged = list(own.frames.values())
+        ckpts = [df for df in staged if not df.is_cached]
+        assert len(ckpts) == 4  # pre, exact_ids, sh_b, near_ids
+        assert {_ckpt_rdd_id(df) for df in ckpts} <= _persistent_rdd_ids(spark)
     assert not {_ckpt_rdd_id(df) for df in ckpts} & _persistent_rdd_ids(spark)
     assert not any(df.is_cached for df in staged)

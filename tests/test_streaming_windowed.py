@@ -245,6 +245,15 @@ def test_uv_approx_stream_bounded_by_exact(spark, sf_dir):
         assert abs(est - exact[w]) <= max(0.15 * exact[w], 3)
 
 
+def test_uv_approx_stream_equals_batch_estimates(spark, sf_dir):
+    """The twin runs the batch HLL++ rollup (``uv_approx_frame``, same
+    sketch, same rsd 0.05); register merges are order-free, so every
+    window's estimate equals ``uv_approx_hourly``'s exactly."""
+    stream = sorted(tuple(r) for r in W.uv_approx_stream(spark, sf_dir).collect())
+    batch = sorted(tuple(r) for r in NF.uv_approx_hourly(spark, sf_dir).collect())
+    assert stream == batch and len(stream) > 0
+
+
 def test_pii_scrub_stream_equals_batch_and_oracle(spark, sf_dir):
     """Stateless append-mode transform: every input row is emitted
     exactly once with the same scrub as the batch operator."""
