@@ -94,8 +94,12 @@ def item_pagerank(
         raise ValueError(f"rank_join must be 'broadcast' or 'shuffle', got {rank_join!r}")
     ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id", "item_id")
     with FrameOwner() as own:
-        edges = own.persisted(_transition_edges(ev, gap_s))
-        nodes = own.persisted(
+        # persist only for the materialized result, which reads edges and
+        # nodes once per round: the lazy plan is returned after the owner
+        # has released every persist, before any action could read one
+        stage = own.persisted if materialize else (lambda df: df)
+        edges = stage(_transition_edges(ev, gap_s))
+        nodes = stage(
             edges.select(F.col("src").alias("item_id"))
             .union(edges.select(F.col("dst").alias("item_id")))
             .distinct()
@@ -449,8 +453,10 @@ def keyphrase_textrank(
     rows. The corpus is touched exactly once regardless of iters."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     with FrameOwner() as own:
-        edges = own.persisted(_kp_edges(docs))
-        nodes = own.persisted(edges.select("lang", F.col("src").alias("term")).distinct())
+        # persist only when materializing (see item_pagerank)
+        stage = own.persisted if materialize else (lambda df: df)
+        edges = stage(_kp_edges(docs))
+        nodes = stage(edges.select("lang", F.col("src").alias("term")).distinct())
 
         ranks = nodes.select("lang", "term", F.lit(SCALE).cast("long").alias("r"))
         for _ in range(int(iters)):

@@ -794,6 +794,36 @@ FROM manifest
 """
 
 
+def _split_batches(
+    docs: DataFrame, split1: int, split2: int, own: FrameOwner
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(corpus, batch 1, batch 2) of the two-batch lifecycle: doc_id
+    below ``split1``, in [split1, split2), and from ``split2`` on.
+
+    Both cascades read one fanned-out, persisted copy of ``docs``
+    (owned by ``own``): the lifecycle runs ~a dozen staged
+    materializations, and without the persist each one re-runs the
+    scan and the fan-out. The split is computed once, as a ``_part``
+    column of that copy, and the parts filter on the column.
+    Whole-stage codegen inlines literals into the Java source of every
+    stage that evaluates them, so ``doc_id < split2`` filters spread
+    through the ~21-join cascade, the commit and both runs would make
+    each new split compile its own classes. Here only the persist
+    stage carries the split literals; every other stage reuses the
+    code generated for the previous split (SCALE.md "Generated-code
+    reuse")."""
+    doc_id = F.col("doc_id")
+    part = (
+        F.when(doc_id < split1, 0).when(doc_id < split2, 1).when(doc_id >= split2, 2)
+    )
+    tagged = own.persisted(
+        spread_light(docs.select("doc_id", "lang", "text", part.alias("_part")))
+    )
+    return tuple(
+        tagged.filter(F.col("_part") == i).drop("_part") for i in range(3)
+    )
+
+
 def ingest_two_batch(
     spark: SparkSession,
     sf_dir: str,
@@ -826,17 +856,10 @@ def ingest_two_batch(
     p = {**INGEST_DEFAULTS, **overrides}
     split1 = p["split_id"] if split1 is None else split1
     with FrameOwner() as own:
-        # one fan-out + persist shared by BOTH cascades (the lifecycle runs
-        # ~a dozen staged materializations; without the persist each one
-        # re-runs the scan + fan-out shuffle)
-        docs = own.persisted(
-            spread_light(
-                load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-            )
+        corpus0, batch1, batch2 = _split_batches(
+            load_table(spark, sf_dir, "documents"), split1, split2, own
         )
-        corpus0 = docs.filter((F.col("doc_id") < split1) & F.col("text").isNotNull())
-        batch1 = docs.filter((F.col("doc_id") >= split1) & (F.col("doc_id") < split2))
-        batch2 = docs.filter(F.col("doc_id") >= split2)
+        corpus0 = corpus0.filter(F.col("text").isNotNull())
         # r13 (guide §2.1 fewer passes; r12 verdict #3): derive corpus0's
         # probe indexes ONCE, persisted across BOTH runs; run 2's index set
         # is idx0 ∪ indexes(accepted batch-1 docs) — the same union read
@@ -895,15 +918,12 @@ def ingest_two_batch_indexed(
             # both batches sit at doc_id ≥ split1 and the corpus side comes
             # from the persisted indexes — filter BEFORE the fan-out/persist
             # so the scan and the persisted rows are batch-only (guide §6)
-            docs = own.persisted(
-                spread_light(
-                    load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "lang", "text")
-                    .filter(F.col("doc_id") >= split1)
-                )
+            _, batch1, batch2 = _split_batches(
+                load_table(spark, sf_dir, "documents").filter(F.col("doc_id") >= split1),
+                split1,
+                split2,
+                own,
             )
-            batch1 = docs.filter(F.col("doc_id") < split2)
-            batch2 = docs.filter(F.col("doc_id") >= split2)
             idx0 = _read_ingest_indexes(spark, [base_root])
             with FrameOwner() as run1:
                 m1 = own.checkpointed(_cascade_over_indexes(batch1, idx0, p, run1))

@@ -16,6 +16,20 @@ local[32] to a 1000-executor cluster:
 - shuffle partitions default to the local core count; on a real cluster
   this is overridden (cores × executors × 2-3) or left to AQE's
   coalescing with a high initial value.
+- ``codegen.cache.maxEntries=5000``: one ingest lifecycle op generates
+  more than the default 100 distinct classes, so the LRU evicted them
+  before the next op could reuse them and every warm op re-ran ~365
+  Janino compiles (3.4-4.5 s at sf0.1). A full cache costs ~50 MB of
+  heap and ~45 MiB of metaspace. A static conf, read once per JVM, so
+  the builder is the only place it can be set; on a cluster every
+  executor JVM keeps its own cache (SCALE.md "Generated-code reuse").
+- ``codegen.useIdInClassName=false``: the cache is keyed on the
+  generated source, and by default each whole-stage class is named
+  after its stage id. Ids are numbered per query in plan order, so a
+  data-dependent plan change upstream (AQE picking another join)
+  renumbers the stages after it and turns identical code into misses.
+  Without the id, a warm ingest op compiles 2-4 classes instead of
+  10-40 at sf0.1; stack traces lose the stage number.
 
 Beside the builder live the two session-scoped owners: the memo
 (``session_memo``), which holds an artifact until the session ends,
@@ -33,6 +47,9 @@ from typing import Any
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+
+CODEGEN_CACHE_ENTRIES = 5000
 
 
 def _default_parallelism() -> int:
@@ -66,6 +83,8 @@ def get_spark(
         .config("spark.default.parallelism", str(par))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -77,6 +96,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by this JVM's Janino so far. Both
+    grow only on a generated-code cache miss, so their difference
+    around a call is what the call compiled. The count is
+    ``CodegenMetrics``' compilation-time histogram; the time is
+    ``CodeGenerator``'s compile-time accumulator, because the histogram
+    keeps a sample of the times, not their sum."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
 
 
 # The one session-keyed memo: persisted scans, broadcasts, index roots

@@ -105,3 +105,19 @@ def test_entries_return_every_frame_they_own(spark, sf_dir, cached_frames, entry
         assert FrameOwner.owned == owned0
         assert not _still_cached(cached_frames)
     assert session.RELEASE_SKIPPED == skipped0
+
+
+@pytest.mark.parametrize(
+    "entry", [G.item_pagerank, G.keyphrase_textrank], ids=lambda f: f.__name__
+)
+def test_lazy_power_iteration_persists_nothing(spark, sf_dir, cached_frames, entry):
+    """``materialize=False`` returns a plan that no action has read, so
+    the call stages nothing: no frame goes through the owner or the
+    cache manager, and no new RDD is persisted."""
+    owned0 = FrameOwner.owned
+    live0 = _persistent_rdd_ids(spark)
+    lazy = entry(spark, sf_dir, materialize=False)
+    assert FrameOwner.owned == owned0
+    assert cached_frames == []
+    assert not _persistent_rdd_ids(spark) - live0
+    assert lazy.count() > 0

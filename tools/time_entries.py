@@ -7,6 +7,11 @@ Usage: python tools/time_entries.py <runs> <name> [name ...]
 Run it from two checkouts back-to-back (old tree, new tree) inside one
 host window to A/B a restructure; the bench's _MANIFEST_CACHE-clearing
 discipline is reproduced so ingest rows time full cascades.
+
+Each entry also reports the Janino compiles and compile milliseconds of
+a timed (warm) run, median over the runs: an entry that keeps
+compiling when warm inlines a per-call value into its generated code
+(SCALE.md "Generated-code reuse").
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ def main() -> int:
     names = sys.argv[2:]
     import __spark_entry__ as entry_mod
     from flink_project_userbehavioranalysis_spark import get_spark
+    from flink_project_userbehavioranalysis_spark.session import codegen_compiles
     from flink_project_userbehavioranalysis_spark.io import cache_events
     from flink_project_userbehavioranalysis_spark.operators.ingest import (
         _MANIFEST_CACHE,
@@ -57,14 +63,20 @@ def main() -> int:
             f(spark, SF_DIR).collect()
 
         run_full()  # warm-up
-        ts = []
+        ts, compiles, compile_ms = [], [], []
         for _ in range(runs):
+            n0, ms0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             run_full()
             ts.append(time.perf_counter() - t0)
+            n1, ms1 = codegen_compiles(spark)
+            compiles.append(n1 - n0)
+            compile_ms.append(ms1 - ms0)
         out[name] = {
             "med": round(statistics.median(ts), 4),
             "min": round(min(ts), 4),
+            "compiles": statistics.median(compiles),
+            "compile_ms": round(statistics.median(compile_ms), 1),
         }
         print(f"{name}: {out[name]}", file=sys.stderr)
     print(json.dumps(
