@@ -1,5 +1,6 @@
-"""Graph analytics over the behavior stream: PageRank on the
-session-transition item graph.
+"""Graph analytics over the behavior stream and the corpus: PageRank on
+the session-transition item graph and TextRank on the per-language
+token co-occurrence graph, both run by ONE kernel, ``_lattice_rank``.
 
 No direct reference analog (the closest reference behavior is the
 NetworkFlow hot-page ranking, SURVEY §2.5 [U]) — but item-graph
@@ -17,17 +18,18 @@ nonnegative operands), and the damped update is
 ``(15*SCALE) div 100 + (85*contrib) div 100``. Truncation bleeds
 O(out-degree) lattice units of rank mass per node per round —
 deterministic on every engine and partial-agg order, which is the
-point: the recurrence unrolls to plain SQL and the driver hash-checks
-it. Dangling nodes (no out-edges) simply stop forwarding mass — the
+point: the recurrence unrolls to plain SQL (``_lattice_rank_sql``, the
+one generator both oracles call) and its result is hash-checked.
+Dangling nodes (no out-edges) simply stop forwarding mass — the
 standard simplification of the non-normalized power iteration.
 
-Scale shape per round: the rank relation has NODE cardinality (items,
-not events). With ``rank_join='broadcast'`` (default — item catalogs
-are dimension-sized) each round is a map-only broadcast join over the
-static edge relation plus ONE partial-aggregated shuffle on dst; the
-edge relation is computed once, persisted, and never re-shuffled.
-``rank_join='shuffle'`` swaps in a SHUFFLE_HASH equi-join for
-open-ended node sets (the ``lang_id_naive_bayes`` model_join
+Scale shape per round: the rank relation has NODE cardinality (items
+or vocabulary, not events). With ``rank_join='broadcast'`` (default —
+item catalogs are dimension-sized) each round is a map-only broadcast
+join over the static edge relation plus ONE partial-aggregated shuffle
+on dst; the edge relation is computed once, persisted, and never
+re-shuffled. ``rank_join='shuffle'`` swaps in a SHUFFLE_HASH equi-join
+for open-ended node sets (the ``lang_id_naive_bayes`` model_join
 pattern) — edges and ranks then co-shuffle on src once per round.
 """
 
@@ -77,6 +79,82 @@ def _transition_edges(events: DataFrame, gap_s: int) -> DataFrame:
     )
 
 
+def _lattice_rank(
+    edges: DataFrame,
+    part: list[str],
+    node: str,
+    iters: int,
+    rank_join: str,
+    stage: FrameOwner | None,
+) -> DataFrame:
+    """``iters`` damped rounds on the 1/SCALE lattice from a uniform
+    SCALE start over ``edges`` (*part, src, dst, w, wtot), one graph per
+    ``part`` value, nodes src ∪ dst. Output: (*part, node, r). ``stage``
+    is the caller's owner when the call materializes: it persists the
+    edges and nodes every round reads. ``None`` persists nothing, since
+    the owner would release a persist before an action read the plan."""
+    if rank_join not in ("broadcast", "shuffle"):
+        raise ValueError(f"rank_join must be 'broadcast' or 'shuffle', got {rank_join!r}")
+    persist = stage.persisted if stage is not None else (lambda df: df)
+    key = [*part, "src"]
+    edges = persist(edges)
+    # one pass over the edges for both endpoints (a src/dst union scans twice)
+    nodes = persist(edges.select(*part, F.explode(F.array("src", "dst")).alias("src")).distinct())
+    ranks = nodes.withColumn("r", F.lit(SCALE).cast("long"))
+    for _ in range(int(iters)):
+        rk = F.broadcast(ranks) if rank_join == "broadcast" else ranks.hint("SHUFFLE_HASH")
+        contribs = (
+            edges.join(rk, key)
+            .select(
+                *part,
+                F.col("dst").alias("src"),
+                # DECIMAL(38,0): rank can reach the TOTAL lattice mass
+                # (nodes × SCALE) under skew, so a BIGINT r*w overflows;
+                # `div` truncates back to BIGINT identically on both engines
+                F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
+            )
+            .groupBy(*key)
+            .agg(F.sum("c").alias("s"))
+        )
+        ranks = nodes.join(contribs, key, "left").select(
+            *key,
+            (
+                F.lit(15 * SCALE // 100).cast("long")
+                + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
+            ).alias("r"),
+        )
+    return ranks.select(*part, F.col("src").alias(node), "r")
+
+
+def _lattice_rank_sql(part: list[str], node: str, iters: int) -> str:
+    """``_lattice_rank`` unrolled in DuckDB SQL, written apart from it so
+    the oracle checks it: CTEs ``nodes, r0 … r{iters}`` over an ``ew``
+    CTE (*part, src, dst, w, wtot), each ``r{i}`` (*part, node, r)."""
+
+    def cols(t: str) -> str:
+        return "".join(f"{t}.{c}, " for c in part)
+
+    def on(a: str, a_node: str, b: str, b_node: str) -> str:
+        return "".join(f"{a}.{c} = {b}.{c} AND " for c in part) + f"{a}.{a_node} = {b}.{b_node}"
+
+    sql = f"""nodes AS (
+    SELECT {cols("ew")}src AS {node} FROM ew UNION SELECT {cols("ew")}dst FROM ew
+), r0 AS (
+    SELECT *, CAST({SCALE} AS BIGINT) AS r FROM nodes
+)"""
+    for i in range(1, int(iters) + 1):
+        sql += f""", c{i} AS (
+    SELECT {cols("ew")}ew.dst,
+           CAST(sum((CAST(r.r AS HUGEINT) * ew.w) // ew.wtot) AS BIGINT) AS s
+    FROM ew JOIN r{i - 1} r ON {on("r", node, "ew", "src")} GROUP BY ALL
+), r{i} AS (
+    SELECT {cols("n")}n.{node}, CAST({15 * SCALE // 100}
+           + (85 * CAST(COALESCE(c.s, 0) AS HUGEINT)) // 100 AS BIGINT) AS r
+    FROM nodes n LEFT JOIN c{i} c ON {on("c", "dst", "n", node)}
+)"""
+    return sql
+
+
 def item_pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -88,66 +166,30 @@ def item_pagerank(
     """Damped PageRank (d=0.85) over the session-transition item graph,
     ``iters`` exact-integer power-iteration rounds from a uniform
     SCALE start. Output: (item_id, rank_q) — rank on the 1/SCALE
-    lattice, exact BIGINT.
-    """
-    if rank_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"rank_join must be 'broadcast' or 'shuffle', got {rank_join!r}")
+    lattice, exact BIGINT."""
     ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id", "item_id")
     with FrameOwner() as own:
-        # persist only for the materialized result, which reads edges and
-        # nodes once per round: the lazy plan is returned after the owner
-        # has released every persist, before any action could read one
-        stage = own.persisted if materialize else (lambda df: df)
-        edges = stage(_transition_edges(ev, gap_s))
-        nodes = stage(
-            edges.select(F.col("src").alias("item_id"))
-            .union(edges.select(F.col("dst").alias("item_id")))
-            .distinct()
+        ranks = _lattice_rank(
+            _transition_edges(ev, gap_s), [], "item_id", iters, rank_join,
+            own if materialize else None,
         )
-
-        ranks = nodes.select("item_id", F.lit(SCALE).cast("long").alias("r"))
-        for _ in range(int(iters)):
-            rk = F.broadcast(ranks) if rank_join == "broadcast" else ranks.hint("SHUFFLE_HASH")
-            contribs = (
-                edges.join(rk, edges.src == rk.item_id)
-                .select(
-                    "dst",
-                    # the product runs in DECIMAL(38,0): rank can reach the
-                    # TOTAL lattice mass (nodes × SCALE) under heavy skew,
-                    # and a BIGINT r*w overflows once r·w ≥ 2^63 (w ~ 1e7
-                    # in-edges against r ~ 1e12 is enough). DECIMAL(38,0)
-                    # holds any realistic product exactly; `div` truncates
-                    # back to BIGINT identically on both engines.
-                    F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = nodes.join(
-                contribs, nodes.item_id == contribs.dst, "left"
-            ).select(
-                "item_id",
-                (
-                    F.lit(15 * SCALE // 100).cast("long")
-                    + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
-                ).alias("r"),
-            )
         out = ranks.select("item_id", F.col("r").alias("rank_q"))
-        # materialize the final ranks (node-cardinality, distributed — no
-        # driver collect) before the owner releases the cached edge/node
-        # relations; localCheckpoint also cuts the iters-deep lineage. The
-        # lazy form (plan inspection/composition) recomputes them instead.
+        # materialize the final ranks (node-cardinality, distributed) before
+        # the owner releases the cached edges and nodes; localCheckpoint
+        # also cuts the iters-deep lineage
         return out.localCheckpoint(eager=True) if materialize else out
 
 
 def _edges_cte(gap_s: int) -> str:
-    """Shared WITH-block prefix for both graph oracles — the sessionize
-    / transition / edge-aggregation pipeline, written ONCE so the gap
-    test and tie-break keys cannot diverge between the two oracles (or
-    from ``_transition_edges``, which they mirror). TRY_CAST + post-cast
-    NULL filter matches the Spark side exactly (repo convention,
-    hot_items.py oracle): a non-integer props.k drops the row on both
-    engines instead of crashing DuckDB's strict CAST."""
+    """Shared WITH-block prefix of the item-graph oracles — the
+    sessionize / transition / edge-aggregation pipeline, written ONCE
+    so the gap test and tie-break keys cannot diverge between the
+    PageRank oracle (its ``ew`` feeds ``_lattice_rank_sql``) and the
+    Markov top-k oracle, or from ``_transition_edges``, which they
+    mirror. TRY_CAST + post-cast NULL filter matches the Spark side
+    exactly (repo convention, hot_items.py oracle): a non-integer props.k
+    drops the row on both engines instead of crashing DuckDB's strict
+    CAST."""
     return f"""t0 AS (
     SELECT user_id, event_id,
            TRY_CAST(json_extract_string(props, '$.k') AS INTEGER) AS item_id,
@@ -178,42 +220,12 @@ def _edges_cte(gap_s: int) -> str:
 )"""
 
 
-def item_pagerank_oracle_sql(
-    iters: int = 3, gap_s: int = GAP_SECONDS
-) -> str:
+def item_pagerank_oracle_sql(iters: int = 3, gap_s: int = GAP_SECONDS) -> str:
     """The identical recurrence unrolled in DuckDB SQL: same edges,
-    same lattice, same integer truncations (``//`` ≡ ``div`` on
-    nonnegative operands)."""
-    parts = [
-        _edges_cte(gap_s)
-        + f""", nodes AS (
-    SELECT DISTINCT item_id FROM (
-        SELECT src AS item_id FROM e UNION ALL SELECT dst FROM e)
-), r0 AS (
-    SELECT item_id, CAST({SCALE} AS BIGINT) AS r FROM nodes
-)"""
-    ]
-    for i in range(1, int(iters) + 1):
-        parts.append(
-            f"""c{i} AS (
-    SELECT ew.dst,
-           CAST(sum((CAST(r.r AS HUGEINT) * ew.w) // ew.wtot) AS BIGINT) AS s
-    FROM ew JOIN r{i - 1} r ON r.item_id = ew.src
-    GROUP BY 1
-), r{i} AS (
-    SELECT n.item_id,
-           CAST({15 * SCALE // 100}
-                + (85 * CAST(COALESCE(c.s, 0) AS HUGEINT)) // 100 AS BIGINT) AS r
-    FROM nodes n LEFT JOIN c{i} c ON c.dst = n.item_id
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
+    same lattice, same integer truncations (``_lattice_rank_sql``)."""
+    return f"""WITH {_edges_cte(gap_s)}, {_lattice_rank_sql([], "item_id", iters)}
 SELECT item_id, r AS rank_q FROM r{int(iters)}
 """
-    )
 
 
 def item_next_topk(
@@ -453,48 +465,10 @@ def keyphrase_textrank(
     rows. The corpus is touched exactly once regardless of iters."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     with FrameOwner() as own:
-        # persist only when materializing (see item_pagerank)
-        stage = own.persisted if materialize else (lambda df: df)
-        edges = stage(_kp_edges(docs))
-        nodes = stage(edges.select("lang", F.col("src").alias("term")).distinct())
-
-        ranks = nodes.select("lang", "term", F.lit(SCALE).cast("long").alias("r"))
-        for _ in range(int(iters)):
-            rk = F.broadcast(
-                ranks.select(
-                    F.col("lang").alias("rlang"),
-                    F.col("term").alias("rterm"),
-                    "r",
-                )
-            )
-            contribs = (
-                edges.join(
-                    rk, (F.col("lang") == F.col("rlang")) & (F.col("src") == F.col("rterm"))
-                )
-                .select(
-                    "lang",
-                    "dst",
-                    F.expr("(cast(r as decimal(38,0)) * w) div wtot").alias("c"),
-                )
-                .groupBy("lang", "dst")
-                .agg(F.sum("c").alias("s"))
-                .select(F.col("lang").alias("clang"), "dst", "s")
-            )
-            ranks = (
-                nodes.join(
-                    contribs,
-                    (F.col("lang") == F.col("clang")) & (F.col("term") == F.col("dst")),
-                    "left",
-                )
-                .select(
-                    "lang",
-                    "term",
-                    (
-                        F.lit(15 * SCALE // 100).cast("long")
-                        + F.expr("(85 * cast(coalesce(s, 0L) as decimal(38,0))) div 100")
-                    ).alias("r"),
-                )
-            )
+        ranks = _lattice_rank(
+            _kp_edges(docs), ["lang"], "term", iters, "broadcast",
+            own if materialize else None,
+        )
         by_lang = Window.partitionBy("lang").orderBy(F.desc("r"), F.asc("term"))
         out = (
             ranks.withColumn("rnk", F.row_number().over(by_lang))
@@ -515,9 +489,8 @@ def keyphrase_textrank(
 def keyphrase_textrank_oracle_sql(iters: int = _KP_ITERS, k: int = _KP_TOPK) -> str:
     """The identical recurrence unrolled in DuckDB, keyed by (lang,
     term): same token gate, same symmetrized edges, same lattice and
-    truncations (`//` ≡ `div` on nonnegative operands)."""
-    parts = [
-        f"""toks AS (
+    truncations (``_lattice_rank_sql``)."""
+    return f"""WITH toks AS (
     SELECT lang, doc_id, pos, term FROM (
         SELECT lang, doc_id,
                generate_subscripts(string_split(text, ' '), 1) AS pos,
@@ -543,34 +516,10 @@ def keyphrase_textrank_oracle_sql(iters: int = _KP_ITERS, k: int = _KP_TOPK) -> 
     SELECT lang, src, dst, w,
            sum(w) OVER (PARTITION BY lang, src) AS wtot
     FROM e
-), nodes AS (
-    SELECT DISTINCT lang, src AS term FROM e
-), r0 AS (
-    SELECT lang, term, CAST({SCALE} AS BIGINT) AS r FROM nodes
-)"""
-    ]
-    for i in range(1, int(iters) + 1):
-        parts.append(
-            f"""c{i} AS (
-    SELECT ew.lang, ew.dst,
-           CAST(sum((CAST(r.r AS HUGEINT) * ew.w) // ew.wtot) AS BIGINT) AS s
-    FROM ew JOIN r{i - 1} r ON r.lang = ew.lang AND r.term = ew.src
-    GROUP BY 1, 2
-), r{i} AS (
-    SELECT n.lang, n.term,
-           CAST({15 * SCALE // 100}
-                + (85 * CAST(COALESCE(c.s, 0) AS HUGEINT)) // 100 AS BIGINT) AS r
-    FROM nodes n LEFT JOIN c{i} c ON c.lang = n.lang AND c.dst = n.term
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
+), {_lattice_rank_sql(["lang"], "term", iters)}
 SELECT lang, term, r AS rank_q, CAST(rnk AS BIGINT) AS rnk FROM (
     SELECT lang, term, r,
            row_number() OVER (PARTITION BY lang ORDER BY r DESC, term) AS rnk
     FROM r{int(iters)}
 ) WHERE rnk <= {k}
 """
-    )

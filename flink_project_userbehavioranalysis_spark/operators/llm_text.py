@@ -1569,7 +1569,7 @@ FROM hashed GROUP BY 1, 2
 # ------------------------------------- duplicated-substring span dedup
 
 
-def _dup_gram_positions(docs: DataFrame, w: int) -> DataFrame:
+def _dup_gram_positions(docs: DataFrame, w: int, *keep: str) -> DataFrame:
     """Shared front half of the ExactSubstr pair: stage token arrays
     once per doc, slide a stride-1 ``w``-gram over every position, and
     return the gram occurrences.
@@ -1577,15 +1577,17 @@ def _dup_gram_positions(docs: DataFrame, w: int) -> DataFrame:
     Occurrence keys are (doc_id, p) with p the 0-based word index of
     the gram start; downstream frequency passes group on md5(gram) —
     a narrow 16-byte key, never the raw text — and partial-aggregate
-    map-side.
+    map-side. ``keep`` passes extra doc columns through in front (the
+    streaming twin keeps ``ts``).
     """
     staged = (
         docs.filter(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select(*keep, "doc_id", F.split("text", " ").alias("toks"))
         .withColumn("n", F.size("toks"))
         .filter(F.col("n") >= w)
     )
     return staged.select(
+        *keep,
         "doc_id",
         F.posexplode(
             F.transform(
@@ -1598,7 +1600,7 @@ def _dup_gram_positions(docs: DataFrame, w: int) -> DataFrame:
             )
         ).alias("p", "gram"),
     ).select(
-        "doc_id", F.col("p").cast("long").alias("p"),
+        *keep, "doc_id", F.col("p").cast("long").alias("p"),
         F.md5(F.col("gram").cast("binary")).alias("g_md5"),
     )
 

@@ -573,7 +573,10 @@ def docs_stream(
     Documents carry no event time, so one is synthesized as
     epoch + doc_id seconds (ingestion order = id order, the way a real
     feed stamps arrival time); chunks are doc_id ranges written in
-    order so the file source replays them as an in-order stream."""
+    order so the file source replays them as an in-order stream. Doc 0
+    is stamped at epoch 0, which is not above the initial watermark of
+    0, so a watermarked aggregation keyed on ``ts`` treats it as late
+    and drops it."""
     docs = load_table(spark, sf_dir, "documents")
 
     def build() -> str:
@@ -826,28 +829,7 @@ def dup_span_incremental_stream(
         .distinct()
     )
     st = docs_stream(spark, sf_dir, min_doc_id=split_id, n_chunks=n_chunks)
-    grams = (
-        st.filter(F.col("text").isNotNull())
-        .select("doc_id", "ts", F.split("text", " ").alias("toks"))
-        .withColumn("n", F.size("toks"))
-        .filter(F.col("n") >= w)
-        .select(
-            "doc_id",
-            "ts",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n") - w),
-                    lambda i: F.array_join(F.slice(F.col("toks"), i + 1, w), " "),
-                )
-            ).alias("p", "gram"),
-        )
-        .select(
-            "doc_id",
-            "ts",
-            F.col("p").cast("long").alias("p"),
-            F.md5(F.col("gram").cast("binary")).alias("g_md5"),
-        )
-    )
+    grams = _dup_gram_positions(st, w, "ts")
     hits = grams.join(index, "g_md5", "left_semi")
     agg = hits.groupBy(F.window("ts", "1 minute").alias("wd"), "doc_id").agg(
         F.sort_array(F.collect_list("p")).alias("ps")

@@ -1,10 +1,18 @@
 """Semantic + plan properties of the graph pillar (oracle match is
 auto-covered by test_operators_oracle)."""
 
+import threading
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
+
+import duckdb
 import pyspark.sql.functions as F
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from flink_project_userbehavioranalysis_spark.io import load_events
 from flink_project_userbehavioranalysis_spark.operators import graph as G
+from flink_project_userbehavioranalysis_spark.session import FrameOwner
 
 
 def test_pagerank_matches_float_power_iteration(spark, sf_dir):
@@ -55,6 +63,96 @@ def test_pagerank_join_strategies(spark, sf_dir):
     rows_b = sorted((r["item_id"], r["rank_q"]) for r in b.collect())
     rows_s = sorted((r["item_id"], r["rank_q"]) for r in s.collect())
     assert rows_b == rows_s  # strategy never changes values
+
+
+@st.composite
+def _graphs(draw):
+    """Weighted edge lists (g, src, dst, w, wtot) of 1–3 graphs that share
+    node names, with loops, dangling nodes and disconnected components;
+    ``part`` is [] for a single graph half of the time."""
+    n_parts = draw(st.integers(1, 3))
+    weights = draw(
+        st.dictionaries(
+            st.tuples(st.integers(0, n_parts - 1), st.integers(0, 6), st.integers(0, 6)),
+            st.integers(1, 5),
+            max_size=16,
+        )
+    )
+    out = Counter()
+    for (g, src, _), w in weights.items():
+        out[g, src] += w
+    edges = [("abc"[g], src, dst, w, out[g, src]) for (g, src, dst), w in weights.items()]
+    part = [] if n_parts == 1 and draw(st.booleans()) else ["g"]
+    return edges, part, draw(st.integers(0, 4))
+
+
+def _lattice_loop(edges, iters: int) -> dict:
+    """The lattice recurrence as a plain loop: (g, node) -> rank."""
+    nodes = {(g, s) for g, s, *_ in edges} | {(g, d) for g, _, d, *_ in edges}
+    r = dict.fromkeys(nodes, G.SCALE)
+    for _ in range(iters):
+        s = Counter()
+        for g, src, dst, w, wtot in edges:
+            s[g, dst] += r[g, src] * w // wtot
+        r = {n: 15 * G.SCALE // 100 + 85 * s[n] // 100 for n in nodes}
+    return r
+
+
+def _keyed(rows, part) -> dict:
+    return {(r[0] if part else "a", r[-2]): r[-1] for r in rows}
+
+
+_EW_SCHEMA = "g string, src long, dst long, w long, wtot long"
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    graph=_graphs(), rank_join=st.sampled_from(["broadcast", "shuffle"]), staged=st.booleans()
+)
+def test_lattice_rank_matches_reference_loop(spark, graph, rank_join, staged):
+    edges, part, iters = graph
+    ew = spark.createDataFrame(edges, _EW_SCHEMA).drop(*({"g"} - set(part)))
+    with FrameOwner() as own:
+        got = G._lattice_rank(ew, part, "node", iters, rank_join, own if staged else None).collect()
+    want = _lattice_loop(edges, iters)
+    assert _keyed(got, part) == want and len(got) == len(want)
+
+
+@settings(max_examples=100, deadline=None)
+@given(graph=_graphs())
+def test_lattice_rank_sql_matches_reference_loop(graph):
+    edges, part, iters = graph
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ew (g VARCHAR, src BIGINT, dst BIGINT, w BIGINT, wtot BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO ew VALUES (?, ?, ?, ?, ?)", edges)
+    sql = f"WITH {G._lattice_rank_sql(part, 'node', iters)} SELECT * FROM r{iters}"
+    got = con.execute(sql).fetchall()
+    want = _lattice_loop(edges, iters)
+    assert _keyed(got, part) == want and len(got) == len(want)
+
+
+def test_rankers_from_two_threads_equal_sequential(spark, sf_dir):
+    """Both rankers on one session from two threads at once give the
+    rows they give one after the other, and every frame their owners
+    staged is released."""
+    entries = [G.item_pagerank, G.keyphrase_textrank]
+
+    def rows(fn):
+        return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+
+    want = [rows(fn) for fn in entries]
+    owned0 = FrameOwner.owned
+    start = threading.Barrier(len(entries), timeout=120)
+
+    def together(fn):
+        start.wait()
+        return rows(fn)
+
+    with ThreadPoolExecutor(len(entries)) as pool:
+        got = list(pool.map(together, entries))
+    assert got == want
+    assert FrameOwner.owned == owned0
 
 
 def test_item_triangles_oracle(spark, sf_dir):
